@@ -13,9 +13,23 @@ sees stable types at any scale factor:
 At the 100 TB design point this module is where partition discovery /
 bucketed-table metadata would live; the loader deliberately returns lazy
 DataFrames so Catalyst sees the full lineage from scan to sink.
+
+Schema memo: inferring a parquet table's schema runs one footer-reading
+Spark job per ``spark.read.parquet``. The inferred schema is memoized per
+table path, keyed on the file's stat (size and mtime; for a directory
+table, the size and mtime of every file under it) and on the session confs
+that change inference (:data:`_INFERENCE_CONFS`, ``nanosAsLong`` among
+them). A later load of an unchanged file reads with that schema and starts
+no job. Only the schema is kept: every call still returns a fresh lazy
+DataFrame over the file, so no data or attribute IDs are shared across
+calls. A path that cannot be stat-ed locally (missing, or on a remote
+filesystem) is read without the memo, so a missing table still raises
+Spark's own ``PATH_NOT_FOUND``.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,10 +62,53 @@ _EVENT_TIME_COLS: dict[str, tuple[str, ...]] = {
 }
 
 
+# Session confs under which parquet schema inference can yield a different
+# schema for the same file; part of the schema memo's key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# table path -> (stat key, inference confs, inferred schema)
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _stat_key(path: str) -> tuple:
+    """Size and mtime of a file; of every file under a directory."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns)
+    listing = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            fst = os.stat(p)
+            listing.append((os.path.relpath(p, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(listing))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only on the first
+    read of an unchanged file (see the module docstring)."""
+    try:
+        stat = _stat_key(path)
+    except OSError:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[:2] == (stat, confs):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stat, confs, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from ``{sf_dir}/{name}.parquet``, normalized."""
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     dtypes = dict(df.dtypes)
     for col in _EVENT_TIME_COLS.get(name, ()):
         if dtypes.get(col) == "bigint":

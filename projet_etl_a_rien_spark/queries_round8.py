@@ -9,6 +9,7 @@ must hash-agree).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,11 +55,16 @@ def _copurchase_degree_bound(
     """O(metadata) hub certificate for the co-purchase graph consumers
     (graph._full_adjacency's r15 hub guard): a part's degree is
     < |distinct parts|, bounded by the part table's parquet-footer row
-    count — no Spark job. None (footers unavailable) makes the operator
-    fall back to its measured degree pass."""
+    count — no Spark job. None (footers unavailable, or the part table
+    absent or unreadable) makes the operator fall back to its measured
+    degree pass."""
     from .operators.sketches import _stats_row_count
 
-    return _stats_row_count(load_table(spark, sf_dir, "part"))
+    try:
+        part = load_table(spark, sf_dir, "part")
+    except AnalysisException:
+        return None
+    return _stats_row_count(part)
 
 
 def _copurchase_edge_pairs_canonical(

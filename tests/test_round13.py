@@ -106,8 +106,15 @@ def test_matching_detail_still_shadows_wrapper(tmp_path):
 def test_r1_bar_loads_from_baseline_local():
     bench = _load_bench()
     bar = bench._load_r1_bar()
-    # the committed re-baseline has 13 overlap queries with r1_sec
-    assert len(bar) == 13
+    # one row per query named in either committed baseline file (the r09
+    # re-baseline and the r14 heavy-line extension; 25 names)
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    names = set()
+    for fname in ("BASELINE_LOCAL_r09.json", "BASELINE_LOCAL_r14.json"):
+        with open(os.path.join(repo, fname)) as f:
+            names |= set(json.load(f)["queries"])
+    assert set(bar) == names
+    # an r09 row carries its r1_sec
     assert bar["regional_revenue"] == pytest.approx(1.1728)
     assert all(v > 0 for v in bar.values())
 

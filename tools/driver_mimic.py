@@ -82,7 +82,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark("driver-mimic", shuffle_partitions=8)
+    spark = get_spark("driver-mimic")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

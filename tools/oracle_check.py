@@ -66,7 +66,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark("oracle-check", shuffle_partitions=8)
+    spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
