@@ -18,10 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+from projet_etl_a_rien_spark.queries import REGISTRY
 from projet_etl_a_rien_spark.session import get_spark
-
-_load_extensions()
 
 # Sink-bearing PIPELINES, reported separately from pure queries (r4
 # VERDICT #5): their wall-clock is dominated by per-run sink I/O +

@@ -21,3 +21,9 @@ then Arrow-vectorized.
 """
 
 __version__ = "0.1.0"
+
+# Importing any submodule runs this first, so the registry is built in one
+# order — the core, then each domain module — whichever module a caller
+# imports first. A domain module imported on its own would otherwise be
+# half-built while the core imports the domain modules that depend on it.
+from . import queries  # noqa: E402,F401

@@ -44,9 +44,7 @@ def main(argv: list[str] | None = None) -> int:
 
     args = parser.parse_args(argv)
 
-    from .queries import REGISTRY, _load_extensions
-
-    _load_extensions()
+    from .queries import REGISTRY
 
     if args.cmd == "list":
         try:

@@ -21,7 +21,7 @@ reference's surface implies but never names:
 
 Both are pure ``pyspark.sql.functions`` lineages (whole-stage codegen,
 no Python), mirrored exactly by DuckDB oracles in
-``queries_round4.py``.
+``queries_curation.py``.
 """
 
 from __future__ import annotations

@@ -989,9 +989,8 @@ def compact_kmv(spark, path: str, k: int = KMV_K) -> int:
 # snapshot watermark), same min-k fold algebra (associative,
 # commutative, idempotent — replays harmless), same min-gate +
 # refilter theta-union rule, same legacy-gate migration as read_kmv.
-# Operator + pins landed in r12; the registry entry is deferred to r13
-# (the r12 driver-sample budget is exactly 2 new names + the 48-name
-# r6 staleness bucket — see queries.py:_DRIVER_PRIORITY).
+# Served by the registry entry streaming_user_value_sample_kmv
+# (queries_streaming.py).
 # ---------------------------------------------------------------------------
 
 

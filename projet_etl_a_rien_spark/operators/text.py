@@ -1385,7 +1385,7 @@ def unicode_repair(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
-# Shared fixture literals — the SQL oracle builders in queries_round7
+# Shared fixture literals — the SQL oracle builders in queries_curation
 # interpolate EXACTLY these strings, so Spark synthesis and DuckDB
 # synthesis cannot drift.
 HTML_PAGE_TITLE_PREFIX = "<html><head><title>d"
@@ -1439,7 +1439,7 @@ def mojibake_noise(
 
 # --------------------------------------------------------------------------
 # Typed PII redaction (the rewrite half of pii_scan) — shared literals +
-# RE2-safe patterns, mirrored verbatim in the queries_round7 oracle.
+# RE2-safe patterns, mirrored verbatim in the queries_curation oracle.
 # --------------------------------------------------------------------------
 
 PII_EMAIL_RE = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"

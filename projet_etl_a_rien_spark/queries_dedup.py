@@ -1,13 +1,14 @@
-"""LLM-data-pipeline query registrations: text analysis, dedup, similarity,
-multimodal plumbing — the north-star extension surface (SURVEY.md §2.10,
-§7 step 5) over the ``documents`` / ``embeddings`` fixtures.
+"""Dedup and similarity registry: exact, near-duplicate and semantic.
 
-Imported for its registration side effects by ``queries.py``; every entry
-follows the same parity rules (adjacent DuckDB oracle, identical aliases,
-deterministic math). MinHash/LSH oracles replicate the *entire*
-construction (same md5 seeds, same banding) so Spark and DuckDB agree on
-candidate generation, not just on final Jaccard — LSH recall misses match
-by construction.
+Exact fingerprints, winnowing, MinHash/LSH, SimHash, Jaccard and
+containment joins, exact-substring spans, edit-distance joins and entity
+resolution, n-gram and Bloom decontamination, and the embedding surface
+(cosine top-k, ANN, k-means, SemDeDup, kNN joins, product quantization,
+IVF) — the operators of operators/dedup.py, similarity.py and strings.py.
+
+MinHash/LSH oracles replicate the *entire* construction (same md5 seeds,
+same banding) so Spark and DuckDB agree on candidate generation, not
+just on final Jaccard — LSH recall misses match by construction.
 """
 
 from __future__ import annotations
@@ -15,149 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import load_table
+from .catalog import load_table, widen_input
 from .fixtures import DOCUMENTS_WITH_DUPS_ORACLE_CTE, documents_with_dups
-from .operators import dedup, multimodal, similarity, text
+from .operators import dedup, similarity, text
+from .operators import strings as _strings
 from .queries import register
+
 
 MINHASH_K = 16
 MINHASH_BANDS = 4
-
-
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
-# --------------------------------------------------------------- text ----
-
-
-@register(
-    "doc_token_stats",
-    """
-SELECT lang,
-       COUNT(*) AS n_docs,
-       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       COUNT(DISTINCT source) AS n_sources
-FROM documents
-GROUP BY lang
-""",
-    doc="Corpus token statistics per language tag.",
-)
-def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(text.token_count("text")).alias("sum_tokens"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.count_distinct(F.col("source")).alias("n_sources"),
-    )
-
-
-@register(
-    "doc_quality_features",
-    """
-SELECT doc_id,
-       len(string_split(text, ' ')) AS n_tokens,
-       len(list_distinct(string_split(text, ' '))) AS n_uniq,
-       len(list_distinct(string_split(text, ' '))) / len(string_split(text, ' ')) AS uniq_ratio,
-       (length(text) - (len(string_split(text, ' ')) - 1)) / len(string_split(text, ' ')) AS mean_token_len,
-       len(list_filter(string_split(text, ' '), t -> t IN ('the','a','of','and','to','in'))) / len(string_split(text, ' ')) AS stopword_ratio
-FROM documents
-""",
-    doc="Per-document quality features (row-level parity): lexical diversity, token length, stopword ratio.",
-)
-def q_doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.quality_features(_docs(spark, sf_dir))
-
-
-# The DuckDB rendering of operators/text.py:quality_score_col — the ONE
-# shared copy (also imported by queries_round4's curriculum oracle) so a
-# threshold tweak cannot desynchronize the two registrations.
-QUALITY_SQL = """(CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0 END
-      + CASE WHEN len(string_split(text, ' ')) <= 2000 THEN 1 ELSE 0 END
-      + CASE WHEN len(list_distinct(string_split(text, ' '))) / len(string_split(text, ' ')) >= 0.2 THEN 1 ELSE 0 END
-      + CASE WHEN len(list_filter(string_split(text, ' '), t -> t IN ('the','a','of','and','to','in'))) / len(string_split(text, ' ')) >= 0.01 THEN 1 ELSE 0 END
-       )"""
-
-
-@register(
-    "doc_quality_score",
-    f"""
-SELECT doc_id,
-       len(string_split(text, ' ')) AS n_tokens,
-       {QUALITY_SQL} AS quality_score
-FROM documents
-""",
-    doc="Composite heuristic quality gate (Gopher/C4-style thresholded features).",
-)
-def q_doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.quality_score(_docs(spark, sf_dir))
-
-
-_LANG_SCORE = {
-    lang: "len(list_filter(list_distinct(string_split(text, ' ')), t -> t IN ({})))".format(
-        ",".join(f"'{m}'" for m in markers)
-    )
-    for lang, markers in sorted(text.LANG_MARKERS.items())
-}
-_LANG_CASE = "CASE " + " ".join(
-    f"WHEN {_LANG_SCORE[lang]} > 0 AND {_LANG_SCORE[lang]} = g.best THEN '{lang}'"
-    for lang in sorted(_LANG_SCORE)
-) + " ELSE 'und' END"
-
-
-@register(
-    "doc_lang_id",
-    f"""
-SELECT doc_id, {_LANG_CASE} AS pred_lang
-FROM documents,
-     LATERAL (SELECT greatest({", ".join(_LANG_SCORE[lang] for lang in sorted(_LANG_SCORE))}) AS best) g
-""",
-    doc="Marker-stopword language ID heuristic; deterministic lexicographic tie-break.",
-)
-def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.lang_id(_docs(spark, sf_dir))
-
-
-@register(
-    "token_frequency_top20",
-    """
-SELECT token, COUNT(*) AS freq
-FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-GROUP BY token
-ORDER BY freq DESC, token
-LIMIT 20
-""",
-    doc="Corpus token frequency (word-count shape) with deterministic top-k.",
-)
-def q_token_frequency_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        text.token_frequencies(_docs(spark, sf_dir))
-        .orderBy(F.desc("freq"), F.asc("token"))
-        .limit(20)
-    )
-
-
-@register(
-    "doc_subword_token_stats",
-    f"""
-SELECT doc_id,
-       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens,
-       CAST(len(regexp_extract_all(lower(text), '{text.SUBWORD_PATTERN}')) AS BIGINT) AS n_subword_tokens
-FROM documents
-""",
-    doc="BPE-ish regex token counting (alnum runs + punctuation marks) next "
-    "to the whitespace count — the cheap subword-cost estimate a training "
-    "pipeline budgets with; identical RE2/Java-compatible pattern both sides.",
-)
-def q_doc_subword_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        text.token_count("text").alias("n_ws_tokens"),
-        text.subword_token_count("text").alias("n_subword_tokens"),
-    )
 
 
 WINNOW_K = 8
@@ -204,7 +71,7 @@ SELECT doc_id, fprint AS fingerprint FROM fp
     "Scalar (doc_id, fingerprint) rows so every value is hash-checkable.",
 )
 def q_doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     # spread the per-character hash loop across cores — the source is a
     # single parquet file, and this is the heaviest per-row projection in
     # the registry
@@ -688,209 +555,6 @@ def q_embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------- multimodal ----
-
-
-@register(
-    "multimodal_byte_features",
-    # Byte-wise, not codepoint-wise: head/tail bytes come from the hex dump
-    # of the UTF-8 encoding (ascii() would return a codepoint, diverging
-    # from Spark's byte view on any non-ASCII document), with the Spark
-    # side's -1 empty-payload sentinel mirrored.
-    """
-WITH hx AS (SELECT doc_id, octet_length(encode(text)) AS byte_len,
-                   hex(encode(text)) AS h
-            FROM documents)
-SELECT doc_id, byte_len,
-       CASE WHEN byte_len = 0 THEN -1
-            ELSE (strpos('0123456789ABCDEF', substr(h, 1, 1)) - 1) * 16
-               + (strpos('0123456789ABCDEF', substr(h, 2, 1)) - 1) END AS head_byte,
-       CASE WHEN byte_len = 0 THEN -1
-            ELSE (strpos('0123456789ABCDEF', substr(h, length(h) - 1, 1)) - 1) * 16
-               + (strpos('0123456789ABCDEF', substr(h, length(h), 1)) - 1) END AS tail_byte
-FROM hx
-""",
-    doc="Multimodal plumbing proof: binary payload → Arrow-batched mapInPandas features; oracle verifies byte-exact round-trip.",
-)
-def q_multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.byte_features(
-        multimodal.with_binary_payload(_docs(spark, sf_dir))
-    )
-
-
-@register(
-    "multimodal_frame_sample",
-    """
-WITH p AS (SELECT doc_id, hex(encode(text)) AS hx,
-                  octet_length(encode(text)) AS n FROM documents),
-idx AS (
-    SELECT doc_id, hx,
-           unnest(range(0, CAST(ceil(n / 16.0) AS BIGINT), 4)) AS frame_no
-    FROM p WHERE n > 0
-)
--- DuckDB has no BLOB substring: slice the hex dump at 2x offsets instead
--- (2 hex chars per byte) — byte-identical to Spark's binary substr + hex
-SELECT doc_id, frame_no,
-       substr(hx, CAST(frame_no * 32 + 1 AS INTEGER), 32) AS frame_hex
-FROM idx
-""",
-    doc="Frame sampling over binary payloads: every 4th 16-byte frame as its "
-    "own row, hex-encoded — the decode-only-what-you-keep keyframe access "
-    "shape, pure JVM projection (no Python, no shuffle); byte-exact oracle.",
-)
-def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.frame_sample(
-        multimodal.with_binary_payload(_docs(spark, sf_dir)),
-        frame_bytes=16,
-        stride=4,
-    )
-
-
-@register(
-    "multimodal_png_roundtrip",
-    # Every stage after the encode is REAL image work (pure-stdlib PNG
-    # codec, operators/png.py): payload bytes → 32-wide RGB pixel grid
-    # (zero-padded final row) → PNG-encode with scanline filter
-    # doc_id % 5 (so all five filter reconstructions run under the
-    # oracle) → decode_payloads("image") → IHDR dims + two pixel
-    # checksums. Zero padding is checksum-invariant, so the oracle
-    # recomputes both sums straight from the pre-encode bytes via the
-    # hex dump — a wrong pixel VALUE breaks pix_sum, a wrong pixel
-    # POSITION breaks the weighted pix_wsum.
-    """
-WITH p AS (SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
-           FROM documents WHERE octet_length(encode(text)) > 0),
-b AS (SELECT doc_id, n, hx, unnest(range(0, n)) AS i FROM p),
-v AS (SELECT doc_id, n, i,
-        (strpos('0123456789ABCDEF', substr(hx, CAST(2*i+1 AS INTEGER), 1)) - 1) * 16
-      + (strpos('0123456789ABCDEF', substr(hx, CAST(2*i+2 AS INTEGER), 1)) - 1) AS byte
-      FROM b)
-SELECT doc_id,
-       32 AS width,
-       CAST(ceil(n / 96.0) AS INTEGER) AS height,
-       3 AS channels,
-       CAST(SUM(byte) AS BIGINT) AS pix_sum,
-       CAST(SUM((i + 1) * byte) AS BIGINT) AS pix_wsum
-FROM v
-GROUP BY doc_id, n
-""",
-    doc="REAL image decode under the oracle gate: payloads PNG-encoded "
-    "(all 5 scanline filters) and decoded by the pure-stdlib codec in "
-    "operators/png.py via the registered-decoder multimodal path; "
-    "dims + positional checksums verified byte-exactly.",
-)
-def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .operators.png import png_encode, register_builtin_png_codecs
-
-    from .catalog import widen_input
-
-    register_builtin_png_codecs()
-    width, stride = 32, 32 * 3
-    # widen_input: the Arrow codec stages are per-row Python CPU work,
-    # and a single-file fixture would run them one-wide (r5 audit)
-    payloads = widen_input(
-        multimodal.with_binary_payload(_docs(spark, sf_dir)).where(
-            F.length("payload") > 0
-        )
-    )
-
-    def to_png(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload)
-                h = -(-n // stride)
-                pix = bytes(payload) + bytes(h * stride - n)
-                rows.append(
-                    (doc_id, png_encode(width, h, pix, 2, int(doc_id) % 5))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    pngs = payloads.mapInPandas(to_png, schema="doc_id bigint, payload binary")
-    return multimodal.decode_payloads(
-        pngs,
-        "image",
-        "doc_id bigint, width int, height int, channels int, "
-        "pix_sum bigint, pix_wsum bigint",
-    )
-
-
-_QUALITY_SCORE_SQL = """
-  (CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0 END
- + CASE WHEN len(string_split(text, ' ')) <= 2000 THEN 1 ELSE 0 END
- + CASE WHEN len(list_distinct(string_split(text, ' '))) / len(string_split(text, ' ')) >= 0.2 THEN 1 ELSE 0 END
- + CASE WHEN len(list_filter(string_split(text, ' '), t -> t IN ('the','a','of','and','to','in'))) / len(string_split(text, ' ')) >= 0.01 THEN 1 ELSE 0 END)
-"""
-
-
-@register(
-    "tfidf_top_terms",
-    """
-WITH pairs AS (
-    SELECT doc_id AS id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-tf AS (SELECT id, term, COUNT(*) AS tf FROM pairs GROUP BY 1, 2),
-dfreq AS (SELECT term, COUNT(DISTINCT id) AS df FROM pairs GROUP BY 1),
-n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents)
-SELECT id AS doc_id, term, tf, df, tf * n_docs / df AS score, rank
-FROM (
-    SELECT t.id, t.term, t.tf, d.df, n.n_docs,
-           ROW_NUMBER() OVER (PARTITION BY t.id
-                              ORDER BY t.tf * n.n_docs / d.df DESC, t.term)
-             AS rank
-    FROM tf t JOIN dfreq d ON t.term = d.term, n
-)
-WHERE rank <= 3
-""",
-    doc="Top-3 characteristic terms per document by TF-IDF with rational "
-    "idf (tf*N/df — same per-doc ordering as ln(N/df), but a single exact "
-    "integer division instead of a libm-dependent transcendental). "
-    "Explode → word-count → broadcast df join → per-doc top-k window.",
-)
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.tfidf_top_terms(_docs(spark, sf_dir), top_k=3)
-
-
-@register(
-    "corpus_clean_lang_stats",
-    f"""
-WITH {DOCUMENTS_WITH_DUPS_ORACLE_CTE},
-filtered AS (
-    SELECT * FROM docs_dup WHERE {_QUALITY_SCORE_SQL} >= 3
-),
-keepers AS (
-    SELECT * FROM filtered
-    QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY md5(regexp_replace(trim(lower(text)), ' +', ' ', 'g'))
-        ORDER BY doc_id) = 1
-)
-SELECT {_LANG_CASE} AS pred_lang,
-       COUNT(*) AS n_docs,
-       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens
-FROM keepers,
-     LATERAL (SELECT greatest({", ".join(_LANG_SCORE[lang] for lang in sorted(_LANG_SCORE))}) AS best) g
-GROUP BY 1
-""",
-    doc="The composed C4-style corpus cleanup: quality-gate filter (inline "
-    "in the scan projection — no self-join) -> exact dedup keepers (one "
-    "fingerprint shuffle) -> language-ID rollup, over the dup-planted "
-    "corpus. One pipeline, two shuffles total; the oracle replays the "
-    "identical three stages in SQL.",
-)
-def q_corpus_clean_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = documents_with_dups(spark, sf_dir)
-    filtered = d.where(text.quality_score_col("text") >= 3)
-    keepers = dedup.dedup_exact(filtered)
-    return keepers.groupBy(
-        text.lang_pred_col("text").alias("pred_lang")
-    ).agg(
-        F.count("*").alias("n_docs"),
-        F.sum(text.token_count("text")).alias("sum_tokens"),
-    )
-
-
 ANN_PROBES = 4  # of KMEANS_K=8 cells; 1-probe recall ceiling is 0.8-0.9 here
 
 
@@ -959,89 +623,6 @@ def q_embedding_ann_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_hits"),
         (F.count("*") / 10.0).alias("recall_at_10"),
     )
-
-
-@register(
-    "doc_robust_stats_by_lang",
-    """
-WITH m AS (
-    SELECT lang, quantile_cont(n_chars, 0.5) AS med
-    FROM documents GROUP BY lang
-)
-SELECT d.lang, COUNT(*) AS n_docs,
-       ANY_VALUE(m.med) AS median_val,
-       quantile_cont(abs(d.n_chars - m.med), 0.5) AS mad_val
-FROM documents d JOIN m ON d.lang = m.lang
-GROUP BY d.lang
-""",
-    doc="Arrow grouped-map custom aggregate (applyInPandas): per-language "
-    "median + MAD of document length — order statistics no mergeable "
-    "built-in agg computes; one group-key shuffle then vectorized numpy "
-    "per Arrow batch. numpy median == quantile_cont(0.5) bit-for-bit on "
-    "integer inputs.",
-)
-def q_doc_robust_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.pandas_agg import grouped_robust_stats
-
-    return grouped_robust_stats(_docs(spark, sf_dir), "lang", "n_chars")
-
-
-@register(
-    "doc_split_assignment",
-    """
-WITH s AS (
-    SELECT lang,
-           CAST('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100
-             AS bucket
-    FROM documents
-)
-SELECT lang,
-       CASE WHEN bucket < 90 THEN 'train'
-            WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split,
-       COUNT(*) AS n_docs
-FROM s GROUP BY 1, 2
-""",
-    doc="Reproducible train/val/test assignment: salted-md5 hash bucket of "
-    "the doc id (90/5/5) — stable across runs, engines, partitionings, and "
-    "corpus growth, unlike rand(seed) which is partition-order sensitive. "
-    "Counts per (lang, split) cross-checked.",
-)
-def q_doc_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    b = text.split_bucket("doc_id")
-    split = (
-        F.when(b < 90, "train").when(b < 95, "val").otherwise("test").alias("split")
-    )
-    return (
-        _docs(spark, sf_dir)
-        .select("lang", split)
-        .groupBy("lang", "split")
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
-@register(
-    "doc_packing_bins",
-    """
-WITH t AS (
-    SELECT source, doc_id, len(string_split(text, ' ')) AS n_tokens,
-           SUM(len(string_split(text, ' '))) OVER (
-               PARTITION BY source ORDER BY doc_id
-               ROWS UNBOUNDED PRECEDING) AS cum
-    FROM documents
-)
-SELECT source, doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(FLOOR((cum - n_tokens) / 2048) AS BIGINT) AS bin,
-       CAST(cum - n_tokens - FLOOR((cum - n_tokens) / 2048) * 2048 AS BIGINT)
-         AS bin_offset_tokens
-FROM t
-""",
-    doc="Greedy sequence packing to 2048-token context windows within each "
-    "source: deterministic order + running cumsum, bin = floor(prefix / "
-    "budget) — the distributed formulation of pretraining document "
-    "packing; one group-key shuffle, no global sort.",
-)
-def q_doc_packing_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.pack_documents(_docs(spark, sf_dir), budget_tokens=2048)
 
 
 @register(
@@ -1294,7 +875,7 @@ HAVING COUNT(DISTINCT tr.fprint) >= 3
 def q_train_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     fp = text.winnow_fingerprint_rows(
-        _docs(spark, sf_dir).repartition(par),
+        load_table(spark, sf_dir, "documents").repartition(par),
         k=WINNOW_K,
         w=WINNOW_W,
         out_col="fprint",
@@ -1316,30 +897,6 @@ def q_train_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct(F.col("tr.fprint")).alias("n_shared_fingerprints"),
         )
         .where(F.col("n_shared_fingerprints") >= 3)
-    )
-
-
-@register(
-    "doc_lang_confusion",
-    f"""
-SELECT lang AS true_lang, {_LANG_CASE} AS pred_lang, COUNT(*) AS n_docs
-FROM documents,
-     LATERAL (SELECT greatest({", ".join(_LANG_SCORE[lang] for lang in sorted(_LANG_SCORE))}) AS best) g
-GROUP BY 1, 2
-""",
-    doc="Language-ID confusion matrix: predicted vs fixture label counts — "
-    "the heuristic-evaluation artifact a pipeline monitors before trusting "
-    "a classifier gate; single narrow projection + one small rollup.",
-)
-def q_doc_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return (
-        d.select(
-            F.col("lang").alias("true_lang"),
-            text.lang_pred_col("text").alias("pred_lang"),
-        )
-        .groupBy("true_lang", "pred_lang")
-        .agg(F.count("*").alias("n_docs"))
     )
 
 
@@ -1388,29 +945,6 @@ def q_embedding_quantization_error(spark: SparkSession, sf_dir: str) -> DataFram
         F.count("*").alias("n_vecs"),
         F.min("cos_self").alias("worst_cos"),
         F.sum(F.when(F.col("cos_self") < 0.995, 1).otherwise(0)).alias("n_degraded"),
-    )
-
-
-@register(
-    "multimodal_meta_stats",
-    """
-SELECT lang AS meta_lang, source AS meta_source,
-       COUNT(*) AS n_payloads,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-FROM documents GROUP BY 1, 2
-""",
-    doc="Typed-metadata querying over the multimodal row shape: group by "
-    "struct fields of the (payload, meta) schema — metadata predicates "
-    "and rollups never touch the binary column, so the scan prunes it.",
-)
-def q_multimodal_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mm = multimodal.with_binary_payload(_docs(spark, sf_dir))
-    return mm.groupBy(
-        F.col("meta.lang").alias("meta_lang"),
-        F.col("meta.source").alias("meta_source"),
-    ).agg(
-        F.count("*").alias("n_payloads"),
-        F.sum("meta.n_chars").alias("sum_chars"),
     )
 
 
@@ -1744,7 +1278,7 @@ def q_corpus_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         scale=KMEANS_SCALE,
     )
     t = F.col("text")
-    qual = _docs(spark, sf_dir).select(
+    qual = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         (
             (F.lit(DIVERSITY_QB) * text.unique_token_count(t)).cast("long")
@@ -1826,3 +1360,876 @@ def q_embedding_ivf_incremental_ingest(
         ).localCheckpoint(eager=True)
     finally:
         _sh.rmtree(root, ignore_errors=True)
+
+
+# --------------------------------------------- prefix-filter / containment ----
+
+
+def _hashed_docs_dup_ctes() -> str:
+    """docs_dup → per-doc hashed 3-gram shingle sets, the same int64
+    construction ``_minhash_ctes`` uses (one md5 per word, Horner
+    polynomial per shingle) — shared by the prefix-join oracle."""
+    p, bb = dedup.MINHASH_P, dedup.SHINGLE_B
+    return f"""{DOCUMENTS_WITH_DUPS_ORACLE_CTE},
+wordhashed AS (
+    SELECT doc_id AS id,
+           list_transform(string_split(text, ' '),
+               w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) % {p}) AS wh
+    FROM docs_dup
+    WHERE len(string_split(text, ' ')) >= 3
+),
+hashed AS (
+    SELECT id, list_distinct(list_transform(
+        range(len(wh) - 2),
+        i -> (((wh[i + 1] * {bb} + wh[i + 2]) % {p}) * {bb} + wh[i + 3]) % {p})) AS xs
+    FROM wordhashed
+)"""
+
+
+@register(
+    "jaccard_prefix_pairs",
+    f"""
+WITH {_hashed_docs_dup_ctes()},
+toks AS (SELECT id, unnest(xs) AS token FROM hashed),
+sizes AS (SELECT id, COUNT(*) AS sz FROM toks GROUP BY id),
+inter AS (
+    SELECT l.id AS id_a, r.id AS id_b, COUNT(*) AS n_common
+    FROM toks l JOIN toks r ON l.token = r.token AND l.id < r.id
+    GROUP BY l.id, r.id
+)
+SELECT i.id_a, i.id_b,
+       i.n_common / (sa.sz + sb.sz - i.n_common) AS jacc
+FROM inter i
+JOIN sizes sa ON i.id_a = sa.id
+JOIN sizes sb ON i.id_b = sb.id
+WHERE i.n_common / (sa.sz + sb.sz - i.n_common) >= 0.5
+""",
+    doc="Exact shingle-set Jaccard pairs via PREFIX FILTERING (AllPairs/"
+    "PPJoin): only each doc's globally-rarest tokens enter the inverted "
+    "index, no blocking column needed; the filter is lossless, so the "
+    "oracle is the plain exact all-pairs form.",
+)
+def q_jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup.jaccard_prefix_pairs(
+        documents_with_dups(spark, sf_dir), threshold=0.5
+    )
+
+
+@register(
+    "ngram_containment_pairs",
+    f"""
+WITH {DOCUMENTS_WITH_DUPS_ORACLE_CTE},
+wordhashed AS (
+    SELECT source AS blk, doc_id AS id,
+           list_transform(string_split(text, ' '),
+               w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)
+                    % {dedup.MINHASH_P}) AS wh
+    FROM docs_dup
+),
+toks AS (
+    SELECT blk, id,
+           unnest(list_distinct(list_transform(
+               range(len(wh) - 2),
+               i -> (((wh[i + 1] * {dedup.SHINGLE_B} + wh[i + 2])
+                      % {dedup.MINHASH_P}) * {dedup.SHINGLE_B} + wh[i + 3])
+                    % {dedup.MINHASH_P}))) AS token
+    FROM wordhashed
+),
+sizes AS (SELECT blk, id, COUNT(*) AS sz FROM toks GROUP BY blk, id),
+inter AS (
+    SELECT l.blk AS blk, l.id AS id_a, r.id AS id_b, COUNT(*) AS n_common
+    FROM toks l JOIN toks r
+      ON l.blk = r.blk AND l.token = r.token AND l.id < r.id
+    GROUP BY l.blk, l.id, r.id
+),
+pair_sides AS (
+    SELECT i.id_a, i.id_b, i.n_common,
+           sa.sz AS sz_a, sb.sz AS sz_b
+    FROM inter i
+    JOIN sizes sa ON i.blk = sa.blk AND i.id_a = sa.id
+    JOIN sizes sb ON i.blk = sb.blk AND i.id_b = sb.id
+)
+SELECT id_a AS id_sub, id_b AS id_super, n_common / sz_a AS containment
+FROM pair_sides WHERE n_common / sz_a >= 0.8
+UNION ALL
+SELECT id_b AS id_sub, id_a AS id_super, n_common / sz_b AS containment
+FROM pair_sides WHERE n_common / sz_b >= 0.8
+""",
+    doc="Directed shingle-set containment pairs |sub∩super|/|sub| >= 0.8 "
+    "— the asymmetric near-dup relation (short doc quoted inside a long "
+    "one) Jaccard misses; one intersection per unordered pair, both "
+    "directions are projections.",
+)
+def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup.ngram_containment_pairs(
+        documents_with_dups(spark, sf_dir), threshold=0.8
+    )
+
+
+# -------------------------------------------------------- novelty score ----
+
+
+@register(
+    "doc_novelty_score",
+    f"""
+WITH wordhashed AS (
+    SELECT doc_id AS id,
+           list_transform(string_split(text, ' '),
+               w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)
+                    % {dedup.MINHASH_P}) AS wh
+    FROM documents
+    WHERE len(string_split(text, ' ')) >= 3
+),
+hashed AS (
+    SELECT id, list_distinct(list_transform(
+        range(len(wh) - 2),
+        i -> (((wh[i + 1] * {dedup.SHINGLE_B} + wh[i + 2])
+               % {dedup.MINHASH_P}) * {dedup.SHINGLE_B} + wh[i + 3])
+             % {dedup.MINHASH_P})) AS xs
+    FROM wordhashed
+),
+toks AS (SELECT id, unnest(xs) AS token FROM hashed),
+dfreq AS (SELECT token, COUNT(*) AS dfreq FROM toks GROUP BY token)
+SELECT t.id AS doc_id,
+       COUNT(*) AS n_shingles,
+       CAST(SUM(CASE WHEN d.dfreq = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
+       SUM(CASE WHEN d.dfreq = 1 THEN 1 ELSE 0 END) / COUNT(*) AS novelty
+FROM toks t JOIN dfreq d ON t.token = d.token
+GROUP BY t.id
+""",
+    doc="Shingle novelty per document: share of its 3-gram shingles that "
+    "appear NOWHERE else in the corpus (global df = 1) — high novelty "
+    "marks unique content worth keeping, low novelty marks boilerplate; "
+    "one explode shuffle + a vocabulary-keyed join, same cost shape as "
+    "the dedup inverted index it can share.",
+)
+def q_doc_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .catalog import widen_input
+
+    d = widen_input(load_table(spark, sf_dir, "documents"))
+    base = d.select(
+        F.col("doc_id").alias("id"),
+        dedup.hashed_shingles("text", 3).alias("xs"),
+    ).where(F.size("xs") > 0)
+    toks = base.select("id", F.explode("xs").alias("token"))
+    dfreq = toks.groupBy("token").agg(F.count("*").alias("dfreq"))
+    return (
+        toks.join(dfreq, "token")
+        .groupBy(F.col("id").alias("doc_id"))
+        .agg(
+            F.count("*").alias("n_shingles"),
+            F.sum(F.when(F.col("dfreq") == 1, 1).otherwise(0))
+            .cast("long")
+            .alias("n_novel"),
+            (
+                F.sum(F.when(F.col("dfreq") == 1, 1).otherwise(0))
+                / F.count("*")
+            ).alias("novelty"),
+        )
+    )
+
+
+# ------------------------------------------- exact substring-span dedup ----
+
+EXSUB_K = 8
+
+
+def _exsub_poly_sql(k: int) -> str:
+    """DuckDB replay of ``dedup._poly_combine`` over wh[pos+1 .. pos+k]
+    (1-based list indexing, mod P between Horner steps)."""
+    expr = "wh[pos + 1]"
+    for j in range(1, k):
+        expr = f"(({expr}) * {dedup.SHINGLE_B} + wh[pos + {j + 1}]) % {dedup.MINHASH_P}"
+    return expr
+
+
+def _exsub_span_ctes() -> str:
+    """Duplicated k-gram positions -> gaps-and-islands merged spans, the
+    exact relational replay of ``dedup.exact_substr_spans`` (positional
+    Horner k-gram hashes over per-token md5 hashes, global HAVING
+    count>1, running-max interval merge)."""
+    k, p = EXSUB_K, dedup.MINHASH_P
+    return f"""{DOCUMENTS_WITH_DUPS_ORACLE_CTE},
+wordhashed AS (
+    SELECT doc_id AS id,
+           list_transform(string_split(text, ' '),
+               w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) % {p}) AS wh
+    FROM docs_dup
+    WHERE len(string_split(text, ' ')) >= {k}
+),
+grams AS (
+    SELECT id, pos, {_exsub_poly_sql(k)} AS gh
+    FROM (SELECT id, wh, unnest(range(len(wh) - {k} + 1)) AS pos FROM wordhashed)
+),
+dupg AS (SELECT gh FROM grams GROUP BY gh HAVING COUNT(*) > 1),
+dpos AS (SELECT g.id, g.pos FROM grams g JOIN dupg USING (gh)),
+marked AS (
+    SELECT id, pos,
+           CASE WHEN pos > COALESCE(MAX(pos + {k - 1}) OVER (
+                    PARTITION BY id ORDER BY pos
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -2) + 1
+                THEN 1 ELSE 0 END AS brk
+    FROM dpos
+),
+isl AS (
+    SELECT id, pos, SUM(brk) OVER (
+        PARTITION BY id ORDER BY pos
+        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+    FROM marked
+),
+spans AS (
+    SELECT id, CAST(MIN(pos) AS BIGINT) AS span_start,
+           CAST(MAX(pos) + {k - 1} AS BIGINT) AS span_end
+    FROM isl GROUP BY id, island
+)"""
+
+
+@register(
+    "doc_exact_substr_spans",
+    f"""WITH {_exsub_span_ctes()}
+SELECT id AS doc_id, span_start, span_end,
+       span_end - span_start + 1 AS span_tokens
+FROM spans""",
+    doc="ExactSubstr duplicated-span detection (Lee et al. 2022) in "
+    "relational form (operators/dedup.py:exact_substr_spans): maximal "
+    "token ranges whose every 8-token window recurs elsewhere in the "
+    "corpus — positional Horner k-gram hashes, corpus-wide HAVING "
+    "count>1, running-max gaps-and-islands merge. One explode, one "
+    "hash-keyed aggregate, one id-keyed window; no suffix array.",
+)
+def q_doc_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .catalog import widen_input
+
+    return dedup.exact_substr_spans(
+        widen_input(documents_with_dups(spark, sf_dir)), k=EXSUB_K
+    )
+
+
+@register(
+    "corpus_exact_substr_rewrite",
+    f"""WITH {_exsub_span_ctes()},
+covered AS (
+    SELECT id, unnest(range(span_start, span_end + 1)) AS pos FROM spans
+),
+toks AS (
+    SELECT id, pos, ts[pos + 1] AS tok
+    FROM (SELECT id, ts, unnest(range(len(ts))) AS pos
+          FROM (SELECT doc_id AS id, string_split(text, ' ') AS ts FROM docs_dup))
+)
+SELECT t.id AS doc_id,
+       COALESCE(string_agg(t.tok, ' ' ORDER BY t.pos)
+                    FILTER (WHERE c.pos IS NULL), '') AS clean_text,
+       CAST(COUNT(*) FILTER (WHERE c.pos IS NULL) AS BIGINT) AS n_kept,
+       CAST(COUNT(c.pos) AS BIGINT) AS n_removed
+FROM toks t LEFT JOIN covered c ON t.id = c.id AND t.pos = c.pos
+GROUP BY t.id""",
+    doc="ExactSubstr rewrite (operators/dedup.py:exact_substr_rewrite): "
+    "drop every token inside a duplicated span (all-copies removal; "
+    "keep-first at segment granularity is segment_dedup_rewrite) and "
+    "reassemble survivors in position order. Covered positions come "
+    "from exploding span ranges, so the kept/removed split is an "
+    "equality join on (id, pos) — never a range join.",
+)
+def q_corpus_exact_substr_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .catalog import widen_input
+
+    return dedup.exact_substr_rewrite(
+        widen_input(documents_with_dups(spark, sf_dir)), k=EXSUB_K
+    )
+
+
+# ------------------------------------------------- edit-distance join ----
+
+
+@register(
+    "customer_name_edit_pairs",
+    """
+WITH names AS (SELECT c_custkey AS id, c_name AS name FROM customer)
+SELECT a.id AS id_a, b.id AS id_b,
+       CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
+FROM names a JOIN names b ON a.id < b.id
+WHERE levenshtein(a.name, b.name) <= 1""",
+    doc="Edit-distance similarity self-join (ed <= 1) over customer "
+    "names via PassJoin pigeonhole segment blocking "
+    "(operators/strings.py:edit_distance_pairs): candidates from an "
+    "equality join on (length, segment, piece) keys — never a cross "
+    "join — then an exact levenshtein verify. The oracle IS the "
+    "all-pairs definition, so the driver gate doubles as the "
+    "losslessness check at sf0.01.",
+)
+def q_customer_name_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("id"), F.col("c_name").alias("name")
+    )
+    return _strings.edit_distance_pairs(
+        c, d=1, str_col="name", id_col="id", compute_splits="auto"
+    )
+
+
+CONTAM_N = 8
+
+
+CONTAM_ORACLE = f"""
+WITH {{dups}},
+tg AS (
+    SELECT doc_id AS id, unnest(list_distinct(list_transform(
+        range(len(string_split(text, ' ')) - {CONTAM_N - 1}),
+        i -> array_to_string(string_split(text, ' ')[i + 1:i + {CONTAM_N}], ' ')))) AS g
+    FROM docs_dup
+    WHERE doc_id < 1000000 AND len(string_split(text, ' ')) >= {CONTAM_N}
+),
+bg AS (
+    SELECT doc_id AS bid, unnest(list_distinct(list_transform(
+        range(len(string_split(text, ' ')) - {CONTAM_N - 1}),
+        i -> array_to_string(string_split(text, ' ')[i + 1:i + {CONTAM_N}], ' ')))) AS g
+    FROM docs_dup
+    WHERE doc_id >= 1000000 AND len(string_split(text, ' ')) >= {CONTAM_N}
+)
+SELECT id, CAST(COUNT(DISTINCT g) AS BIGINT) AS n_hit_ngrams,
+       CAST(COUNT(DISTINCT bid) AS BIGINT) AS n_bench_docs
+FROM tg JOIN bg USING (g)
+GROUP BY id
+""".format(dups=DOCUMENTS_WITH_DUPS_ORACLE_CTE)
+
+
+@register(
+    "ngram_overlap_contamination",
+    CONTAM_ORACLE,
+    doc=f"Exact {CONTAM_N}-gram overlap decontamination — the canonical "
+    "GPT-3-appendix-C collision test, complementing "
+    "train_eval_contamination's rare-winnow-fingerprint variant: every "
+    "training doc sharing ANY verbatim n-gram with the benchmark side "
+    "(the planted-dup corpus split at id 1M) is reported with its hit "
+    "breadth (operators/dedup.py:ngram_contamination). Both sides shrink "
+    "to distinct (id, md5(gram)) rows before the single digest-keyed "
+    "equality shuffle; no broadcast is forced, so AQE picks one exactly "
+    "when the benchmark side is small enough.",
+)
+def q_ngram_overlap_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .catalog import widen_input
+
+    corpus = widen_input(documents_with_dups(spark, sf_dir))
+    return dedup.ngram_contamination(
+        corpus.where(F.col("doc_id") < 1_000_000),
+        corpus.where(F.col("doc_id") >= 1_000_000),
+        n=CONTAM_N,
+    )
+
+
+# ------------------------------------------------- dedup QA / recall ----
+
+
+def _lsh_quality_oracle() -> str:
+
+    return f"""
+WITH RECURSIVE {_minhash_ctes()},
+truth AS (
+    SELECT a.id AS id_a, b.id AS id_b
+    FROM hashed a JOIN hashed b ON a.id < b.id
+    WHERE len(list_intersect(a.xs, b.xs))
+            / (len(a.xs) + len(b.xs) - len(list_intersect(a.xs, b.xs))) >= 0.7
+),
+pred AS (SELECT id_a, id_b FROM pairs),
+m AS (
+    SELECT COALESCE(t.id_a, p.id_a) AS id_a,
+           (t.id_a IS NOT NULL) AS is_true, (p.id_a IS NOT NULL) AS is_pred
+    FROM truth t FULL OUTER JOIN pred p
+      ON t.id_a = p.id_a AND t.id_b = p.id_b
+)
+SELECT CAST(SUM(CASE WHEN is_true THEN 1 ELSE 0 END) AS BIGINT) AS n_true,
+       CAST(SUM(CASE WHEN is_pred THEN 1 ELSE 0 END) AS BIGINT) AS n_pred,
+       CAST(SUM(CASE WHEN is_true AND is_pred THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
+       SUM(CASE WHEN is_true AND is_pred THEN 1 ELSE 0 END)
+         / SUM(CASE WHEN is_true THEN 1 ELSE 0 END) AS recall,
+       SUM(CASE WHEN is_true AND is_pred THEN 1 ELSE 0 END)
+         / SUM(CASE WHEN is_pred THEN 1 ELSE 0 END) AS precision
+FROM m
+"""
+
+
+@register(
+    "minhash_lsh_quality",
+    _lsh_quality_oracle(),
+    doc="Dedup-QA metric: recall and precision of the MinHash(16)+LSH(4-"
+    "band) pipeline against the EXACT Jaccard >= 0.7 truth set over the "
+    "same hashed-shingle universe — the quality report a curation run "
+    "publishes alongside its dedup stats. The truth side is the "
+    "lossless prefix-filter join (no blocking loss, scalable), so the "
+    "whole metric runs at corpus scale; precision is 1.0 by "
+    "construction (LSH candidates are verified with exact Jaccard "
+    "before emission) and the metric PROVES it empirically, while "
+    "recall exposes banding misses near the threshold. The oracle "
+    "computes truth by brute-force all-pairs.",
+)
+def q_minhash_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    corpus = documents_with_dups(spark, sf_dir)
+    truth = dedup.jaccard_prefix_pairs(corpus, threshold=0.7).select("id_a", "id_b")
+    pred = dedup.minhash_near_dup_pairs(
+        corpus, k=MINHASH_K, bands=MINHASH_BANDS, threshold=0.7
+    ).select("id_a", "id_b")
+    m = truth.withColumn("is_true", F.lit(True)).join(
+        pred.withColumn("is_pred", F.lit(True)), ["id_a", "id_b"], "full_outer"
+    )
+    it = F.coalesce(F.col("is_true"), F.lit(False))
+    ip = F.coalesce(F.col("is_pred"), F.lit(False))
+    hit = (it & ip).cast("long")
+    return m.agg(
+        F.sum(it.cast("long")).alias("n_true"),
+        F.sum(ip.cast("long")).alias("n_pred"),
+        F.sum(hit).alias("n_hit"),
+        (F.sum(hit) / F.sum(it.cast("long"))).alias("recall"),
+        (F.sum(hit) / F.sum(ip.cast("long"))).alias("precision"),
+    )
+
+
+EMB_CONTAM_THRESHOLD = 0.35
+
+
+@register(
+    "embedding_cross_set_contamination",
+    f"""
+WITH b AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+t AS (SELECT * FROM b WHERE vec_id % 10 != 0),
+e AS (SELECT * FROM b WHERE vec_id % 10 = 0),
+sims AS (
+    SELECT t.vec_id AS train_id, e.vec_id AS eval_id,
+           ROUND(list_dot_product(t.vec, e.vec)
+                 / (sqrt(list_dot_product(t.vec, t.vec))
+                    * sqrt(list_dot_product(e.vec, e.vec))), 6) AS cos_sim
+    FROM t JOIN e ON t.label = e.label
+),
+hits AS (SELECT * FROM sims WHERE cos_sim >= {EMB_CONTAM_THRESHOLD}),
+ranked AS (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY train_id
+                                 ORDER BY cos_sim DESC, eval_id) AS rn
+    FROM hits
+)
+SELECT train_id,
+       MAX(CASE WHEN rn = 1 THEN eval_id END) AS nearest_eval_id,
+       MAX(cos_sim) AS max_sim,
+       CAST(COUNT(*) AS BIGINT) AS n_eval_hits
+FROM ranked
+GROUP BY train_id
+""",
+    doc="Embedding-space benchmark decontamination (semantic complement "
+    "of the exact n-gram gate): every 10th vector plays the eval set; "
+    "train vectors within cosine {th} of ANY eval vector are flagged "
+    "with the nearest eval id, max similarity, and hit count. Blocked "
+    "cross-set join (never |train|x|eval|), compute-splits salted for "
+    "the few-blocks regime.".format(th=EMB_CONTAM_THRESHOLD),
+)
+def q_embedding_cross_set_contamination(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from .operators import similarity
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return similarity.cross_set_contamination(
+        emb.where(F.col("vec_id") % 10 != 0),
+        emb.where(F.col("vec_id") % 10 == 0),
+        threshold=EMB_CONTAM_THRESHOLD,
+        compute_splits="auto",
+    )
+
+
+MATRYOSHKA_DIMS = [8, 16, 32]
+
+
+def _matryoshka_oracle_sql() -> str:
+    cos_full = (
+        "list_dot_product(b.vec, q.qvec) / (sqrt(list_dot_product(b.vec, "
+        "b.vec)) * sqrt(list_dot_product(q.qvec, q.qvec)))"
+    )
+    parts = []
+    for d in MATRYOSHKA_DIMS:
+        cos_p = (
+            f"list_dot_product(b.pv, q.pq) / (sqrt(list_dot_product(b.pv, "
+            f"b.pv)) * sqrt(list_dot_product(q.pq, q.pq)))"
+        )
+        parts.append(f"""
+SELECT {d} AS prefix_dim, COUNT(*) AS n_hits, COUNT(*) / 10.0 AS recall_at_10
+FROM (
+    SELECT b.vec_id
+    FROM (SELECT vec_id, list_slice(CAST(embedding AS DOUBLE[]), 1, {d}) AS pv
+          FROM embeddings WHERE vec_id != 7) b,
+         (SELECT list_slice(CAST(embedding AS DOUBLE[]), 1, {d}) AS pq
+          FROM embeddings WHERE vec_id = 7) q
+    ORDER BY {cos_p} DESC, b.vec_id LIMIT 10
+) approx
+JOIN (
+    SELECT b.vec_id
+    FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec
+          FROM embeddings WHERE vec_id != 7) b,
+         (SELECT CAST(embedding AS DOUBLE[]) AS qvec
+          FROM embeddings WHERE vec_id = 7) q
+    ORDER BY {cos_full} DESC, b.vec_id LIMIT 10
+) exact ON approx.vec_id = exact.vec_id""")
+    return "\nUNION ALL\n".join(parts)
+
+
+@register(
+    "embedding_matryoshka_recall",
+    _matryoshka_oracle_sql(),
+    doc="Matryoshka truncation eval (Kusupati et al. 2022): recall@10 "
+    "of PREFIX-dimension cosine search (8/16/32 of 64 dims) against the "
+    "full-dimension exact top-10 for the same query — the measurement "
+    "that licenses serving truncated embeddings (memory/latency vs "
+    "recall trade). Each prefix run is a sliced-array scan + "
+    "TakeOrderedAndProject; the overlap join is k-row-sized.",
+)
+def q_embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators import similarity
+
+    from .operators.text import widen_narrow_input
+
+    emb = widen_narrow_input(load_table(spark, sf_dir, "embeddings"), "vec_id")
+    exact = similarity.cosine_topk(emb, query_id=7, k=10).select("vec_id")
+    out = None
+    for d in MATRYOSHKA_DIMS:
+        sliced = emb.select(
+            "vec_id", F.slice(F.col("embedding"), 1, d).alias("embedding")
+        )
+        approx = similarity.cosine_topk(sliced, query_id=7, k=10).select(
+            "vec_id"
+        )
+        r = approx.join(exact, "vec_id").agg(
+            F.lit(d).alias("prefix_dim"),
+            F.count("*").alias("n_hits"),
+            (F.count("*") / 10.0).alias("recall_at_10"),
+        )
+        out = r if out is None else out.unionByName(r)
+    return out
+
+
+# ---------------------------------------------------------------------------
+# Bloom-pre-filtered decontamination: the at-scale gate pattern, with the
+# false-positive cost quantified per document.
+# ---------------------------------------------------------------------------
+
+# Deliberately sized so the false-positive column is non-trivially
+# exercised at the gate's sf0.01 corpus (measured: 9 FPs at 2^15 bits vs
+# 0 at 2^18 for ~24k probed grams) — production picks m from the target
+# FP budget; the audit columns are how you check the choice.
+BLOOM_M_BITS = 1 << 15
+BLOOM_N = 8  # same gram width as ngram_overlap_contamination
+
+
+def _bloom_oracle() -> str:
+    from .fixtures import DOCUMENTS_WITH_DUPS_ORACLE_CTE
+
+    n, m, w = BLOOM_N, BLOOM_M_BITS, 32
+    gram_list = (
+        f"list_distinct(list_transform("
+        f"range(len(string_split(text, ' ')) - {n - 1}),"
+        f" i -> array_to_string(string_split(text, ' ')[i + 1:i + {n}], ' ')))"
+    )
+    h1 = "CAST('0x' || substr(md5(g), 1, 8) AS BIGINT)"
+    h2 = "CAST('0x' || substr(md5(g), 9, 8) AS BIGINT)"
+    return f"""
+WITH {DOCUMENTS_WITH_DUPS_ORACLE_CTE},
+tg AS (
+    SELECT doc_id AS id, unnest({gram_list}) AS g
+    FROM docs_dup
+    WHERE doc_id < 1000000 AND len(string_split(text, ' ')) >= {n}
+),
+bgd AS (
+    SELECT DISTINCT unnest({gram_list}) AS g
+    FROM docs_dup
+    WHERE doc_id >= 1000000 AND len(string_split(text, ' ')) >= {n}
+),
+bpos AS (
+    SELECT DISTINCT p // {w} AS wd, p % {w} AS b
+    FROM (SELECT unnest([{h1} % {m}, ({h1} + {h2}) % {m}]) AS p FROM bgd)
+),
+bloom AS (
+    SELECT wd, CAST(bit_or(CAST(1 AS BIGINT) << CAST(b AS INTEGER)) AS BIGINT)
+               AS bits
+    FROM bpos GROUP BY wd
+),
+tp AS (
+    SELECT id, g, unnest([{h1} % {m}, ({h1} + {h2}) % {m}]) AS p FROM tg
+),
+tpl AS (SELECT id, g, p // {w} AS wd, p % {w} AS b FROM tp),
+per_gram AS (
+    SELECT id, g,
+           bool_and(COALESCE(
+               (bits & (CAST(1 AS BIGINT) << CAST(b AS INTEGER))) <> 0,
+               FALSE)) AS bloom_pass
+    FROM tpl LEFT JOIN bloom USING (wd)
+    GROUP BY id, g
+),
+flagged AS (
+    SELECT id, bloom_pass, e.g IS NOT NULL AS is_exact
+    FROM per_gram LEFT JOIN (SELECT g FROM bgd) e USING (g)
+)
+SELECT id,
+       COUNT(*) AS n_grams,
+       CAST(SUM(CASE WHEN bloom_pass THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_bloom_hits,
+       CAST(SUM(CASE WHEN is_exact THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_exact_hits,
+       CAST(SUM(CASE WHEN bloom_pass AND NOT is_exact THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_false_pos
+FROM flagged GROUP BY id
+"""
+
+
+@register(
+    "bloom_contamination_gate",
+    _bloom_oracle(),
+    doc=f"Bloom-pre-filtered {BLOOM_N}-gram decontamination — the at-scale "
+    "form of ngram_overlap_contamination: benchmark grams fold into a "
+    f"{BLOOM_M_BITS}-bit filter (k=2 double-hashed md5 positions, 32-bit "
+    "words so masks stay positive int64 cross-engine); training grams "
+    "probe the broadcast-sized (word, bits) table map-side BEFORE any "
+    "equality join. Output quantifies the filter per doc: gram count, "
+    "bloom hits, exact hits, and measured false positives — "
+    "deterministic (no RNG), so the m/k trade is auditable, and at "
+    "100 TB the exact join runs only on the bloom-positive survivor "
+    "set.",
+)
+def q_bloom_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .fixtures import documents_with_dups
+    from .operators import dedup as _dedup
+
+    corpus = widen_input(documents_with_dups(spark, sf_dir))
+    return _dedup.bloom_contamination(
+        corpus.where(F.col("doc_id") < 1_000_000),
+        corpus.where(F.col("doc_id") >= 1_000_000),
+        n=BLOOM_N,
+        m_bits=BLOOM_M_BITS,
+    )
+
+
+# --------------------------------------------------------------------------
+# Leakage-safe split assignment (near-dup clusters share a split)
+# --------------------------------------------------------------------------
+
+
+def _leakage_safe_oracle() -> str:
+
+    rep = "COALESCE(c.cluster, d.doc_id)"
+    bucket = (
+        "CAST('0x' || substr(md5('split:' || CAST("
+        + rep
+        + " AS VARCHAR)), 1, 8) AS BIGINT) % 100"
+    )
+    return f"""
+WITH RECURSIVE {_minhash_ctes()},
+und AS (
+    SELECT id_a AS u, id_b AS v FROM pairs
+    UNION SELECT id_b, id_a FROM pairs
+),
+walk(node, comp) AS (
+    SELECT u, u FROM und
+    UNION
+    SELECT e.v, w.comp FROM walk w JOIN und e ON w.node = e.u
+),
+clusters AS (SELECT node, MIN(comp) AS cluster FROM walk GROUP BY node)
+SELECT d.doc_id, {rep} AS rep_id,
+       CASE WHEN {bucket} < 90 THEN 'train'
+            WHEN {bucket} < 95 THEN 'val' ELSE 'test' END AS split
+FROM docs_dup d LEFT JOIN clusters c ON d.doc_id = c.node
+"""
+
+
+@register(
+    "doc_split_leakage_safe",
+    _leakage_safe_oracle(),
+    doc="Leakage-safe train/val/test assignment: the split hash is keyed "
+    "on each document's near-dup CLUSTER representative (MinHash-LSH "
+    "pairs -> connected components -> min-id rep; singletons key on "
+    "themselves), so near-duplicates can NEVER straddle the train/eval "
+    "boundary — the contamination mode a plain per-doc hash split "
+    "(doc_split_assignment) is blind to, and the post-GPT-2 eval-hygiene "
+    "lesson every serious corpus applies. Same 90/5/5 buckets and salt "
+    "as the per-doc split; same banded-LSH + CC machinery as the dedup "
+    "family, so the marginal cost over dedup-you-already-run is one "
+    "broadcast join.",
+)
+def q_doc_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators import dedup
+    from .operators import text as _t
+    from .operators.graph import connected_components
+
+    d = documents_with_dups(spark, sf_dir)
+    pairs = dedup.minhash_near_dup_pairs(
+        d, k=MINHASH_K, bands=MINHASH_BANDS, threshold=0.7
+    )
+    clusters = connected_components(pairs)
+    rep = F.coalesce(F.col("comp"), F.col("doc_id"))
+    b = _t.split_bucket(rep)
+    return (
+        d.join(F.broadcast(clusters), d.doc_id == clusters.node, "left")
+        .select(
+            "doc_id",
+            rep.alias("rep_id"),
+            F.when(b < 90, "train")
+            .when(b < 95, "val")
+            .otherwise("test")
+            .alias("split"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Embedding-space class geometry (operators/similarity.py:label_centroid_cosines)
+# --------------------------------------------------------------------------
+
+
+@register(
+    "embedding_label_centroid_cosines",
+    """
+WITH comp AS (
+    SELECT label AS lbl, u.i AS dim,
+           CAST(ROUND(CAST(embedding[u.i] AS DOUBLE) * 1000000) AS BIGINT)
+               AS q
+    FROM embeddings,
+         UNNEST(range(1, CAST(len(embedding) + 1 AS BIGINT))) AS u(i)
+),
+sums AS (
+    SELECT lbl, dim, CAST(SUM(q) AS BIGINT) AS s
+    FROM comp GROUP BY lbl, dim
+),
+norms AS (
+    SELECT lbl, SUM(CAST(s AS HUGEINT) * CAST(s AS HUGEINT)) AS nn
+    FROM sums GROUP BY lbl
+),
+dots AS (
+    SELECT a.lbl AS label_a, b.lbl AS label_b,
+           SUM(CAST(a.s AS HUGEINT) * CAST(b.s AS HUGEINT)) AS dot
+    FROM sums a JOIN sums b ON a.dim = b.dim AND a.lbl < b.lbl
+    GROUP BY a.lbl, b.lbl
+)
+SELECT d.label_a, d.label_b,
+       CASE WHEN na.nn > 0 AND nb.nn > 0 THEN
+           CAST(ROUND(CAST(d.dot AS DOUBLE)
+                / sqrt(CAST(na.nn AS DOUBLE) * CAST(nb.nn AS DOUBLE))
+                * 1000000000) AS BIGINT) / 1e9
+       END AS cos
+FROM dots d
+JOIN norms na ON d.label_a = na.lbl
+JOIN norms nb ON d.label_b = nb.lbl
+""",
+    doc="Inter-centroid cosine matrix of the labeled embedding space — "
+    "which classes are geometrically confusable, the diagnostic behind "
+    "mixture design, IVF cell sizing, and hard-negative selection. "
+    "Exactness: components quantize to the 1e-6 int64 grid, and since "
+    "cos(centroid_a, centroid_b) = cos(sum_a, sum_b) (1/n factors "
+    "cancel) every dot/norm accumulates as exact decimal/hugeint over "
+    "the dim-aligned join — order-independent; doubles only in the "
+    "final cos, nano-quantized. One corpus pass to a labels x dims "
+    "table, then label-pair work on that tiny table: the corpus is "
+    "never self-joined.",
+)
+def q_embedding_label_centroid_cosines(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from .operators.similarity import label_centroid_cosines
+
+    return label_centroid_cosines(load_table(spark, sf_dir, "embeddings"))
+
+
+# ---------------------------------------------------------------------------
+# Entity resolution end-to-end (blocking -> verified similarity ->
+# connected components -> golden record): the MDM pipeline composed
+# from the engine's own primitives — PassJoin pigeonhole edit-distance
+# pairs (operators/strings.py), min-label components
+# (operators/graph.py), and a deterministic survivorship rule.
+# ---------------------------------------------------------------------------
+
+
+def _er_oracle() -> str:
+    return """
+WITH RECURSIVE names AS (
+    SELECT c_custkey AS id, c_name AS name, c_nationkey AS nat
+    FROM customer
+),
+pairs AS (
+    SELECT a.id AS id_a, b.id AS id_b
+    FROM names a JOIN names b ON a.id < b.id AND a.nat = b.nat
+    WHERE levenshtein(a.name, b.name) <= 1
+),
+und AS (SELECT id_a AS u, id_b AS v FROM pairs
+        UNION SELECT id_b, id_a FROM pairs),
+walk(node, comp) AS (
+    SELECT u, u FROM und
+    UNION
+    SELECT e.v, w.comp FROM walk w JOIN und e ON w.node = e.u
+),
+clusters AS (SELECT node, MIN(comp) AS comp FROM walk GROUP BY node),
+ent AS (
+    SELECT c.c_custkey,
+           c.c_name,
+           CAST(ROUND(c.c_acctbal * 100) AS BIGINT) AS cents,
+           COALESCE(cl.comp, c.c_custkey) AS entity_id
+    FROM customer c LEFT JOIN clusters cl ON c.c_custkey = cl.node
+)
+SELECT entity_id,
+       CAST(COUNT(*) AS BIGINT) AS n_members,
+       MAX(CASE WHEN c_custkey = entity_id THEN c_name END) AS rep_name,
+       CAST(SUM(cents) AS BIGINT) AS sum_acctbal_cents
+FROM ent GROUP BY entity_id
+"""
+
+
+@register(
+    "customer_entity_resolution",
+    _er_oracle(),
+    doc="Entity resolution end-to-end: PassJoin pigeonhole-blocked "
+    "edit-distance pairs (ed <= 1, never a cross join) -> connected "
+    "components (transitive identity: A~B~C is ONE entity even though "
+    "A~C was never emitted) -> golden record per entity with a "
+    "deterministic survivorship rule (min-custkey member is the "
+    "representative; balances sum exactly in cents). A match "
+    "additionally requires the SAME nation (the classic second "
+    "attribute that stops sequential-serial names chaining the whole "
+    "table into one entity — applied as a post-verify filter, so "
+    "blocking losslessness is untouched). Singletons are their own "
+    "entity via the left join. The oracle recomputes pairs from the "
+    "all-pairs levenshtein definition and walks the graph with a "
+    "recursive CTE — blocking losslessness, component labels, and "
+    "survivorship arithmetic are all inside the hash gate.",
+)
+def q_customer_entity_resolution(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    from .operators import strings as _strings
+    from .operators.graph import connected_components
+
+    c = load_table(spark, sf_dir, "customer")
+    names = c.select(
+        F.col("c_custkey").alias("id"), F.col("c_name").alias("name")
+    )
+    nat = c.select(
+        F.col("c_custkey").alias("id"), F.col("c_nationkey").alias("nat")
+    )
+    pairs = (
+        _strings.edit_distance_pairs(
+            names, d=1, str_col="name", id_col="id", compute_splits="auto"
+        )
+        .select("id_a", "id_b")
+        .join(nat.withColumnsRenamed({"id": "id_a", "nat": "na"}), "id_a")
+        .join(nat.withColumnsRenamed({"id": "id_b", "nat": "nb"}), "id_b")
+        .where(F.col("na") == F.col("nb"))
+        .select("id_a", "id_b")
+    )
+    clusters = connected_components(pairs)
+    ent = c.join(
+        F.broadcast(clusters), c.c_custkey == clusters.node, "left"
+    ).select(
+        "c_custkey",
+        "c_name",
+        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
+        F.coalesce("comp", "c_custkey").alias("entity_id"),
+    )
+    return ent.groupBy("entity_id").agg(
+        F.count("*").alias("n_members"),
+        F.max(
+            F.when(F.col("c_custkey") == F.col("entity_id"), F.col("c_name"))
+        ).alias("rep_name"),
+        F.sum("cents").alias("sum_acctbal_cents"),
+    )

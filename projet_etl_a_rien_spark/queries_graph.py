@@ -1,0 +1,848 @@
+"""Graph registry: PageRank and the co-purchase part graph (operators/graph.py).
+
+Weighted PageRank over event transitions, market-basket lift, and the
+co-purchase graph family — exact and DOULION-sampled triangle counts
+with the auto tier, k-core, k-truss, bounded BFS and bounded
+Bellman-Ford. The co-purchase edge derivation and its degree
+certificate (``_copurchase_edges``, ``_copurchase_edge_pairs_canonical``,
+``_copurchase_degree_bound``) are shared by the whole family.
+"""
+
+from __future__ import annotations
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from .catalog import load_table
+from .operators import graph
+from .queries import register
+
+
+# ------------------------------------------------------------- pagerank ----
+
+
+def _pagerank_oracle(iters: int = 3, d: float = 0.85) -> str:
+    """CTE chain replaying graph.pagerank round-for-round."""
+    head = """
+WITH trans_raw AS (
+    SELECT event_type AS src,
+           LEAD(event_type) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id) AS dst
+    FROM events
+),
+edges AS (
+    SELECT src, dst, CAST(COUNT(*) AS DOUBLE) AS w
+    FROM trans_raw WHERE dst IS NOT NULL GROUP BY src, dst
+),
+nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+nn AS (SELECT COUNT(*) AS n FROM nodes),
+outw AS (SELECT src AS node, SUM(w) AS out_w FROM edges GROUP BY src),
+trans AS (
+    SELECT e.src, e.dst, e.w / o.out_w AS p
+    FROM edges e JOIN outw o ON e.src = o.node
+),
+r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
+    # Parity rule mirrored from graph.pagerank: the two order-dependent
+    # float SUMs per round are accumulated as BIGINT on a RELATIVE grid
+    # (scale = 1e9 * N, each term rounded first); every other operation
+    # is a fixed-association scalar expression — bitwise equal across
+    # engines. The scale is the same IEEE double product on both sides.
+    sc = "(1000000000.0 * (SELECT n FROM nn))"
+    rounds = []
+    for i in range(iters):
+        rounds.append(f"""
+d{i} AS (
+    SELECT COALESCE(CAST(SUM(CAST(ROUND(rank * {sc}) AS BIGINT)) AS BIGINT),
+                    0) AS dang_q
+    FROM r{i} WHERE node NOT IN (SELECT node FROM outw)
+),
+i{i} AS (
+    SELECT t.dst AS node,
+           CAST(SUM(CAST(ROUND(r.rank * t.p * {sc}) AS BIGINT)) AS BIGINT)
+               AS inc_q
+    FROM trans t JOIN r{i} r ON t.src = r.node GROUP BY t.dst
+),
+r{i + 1} AS (
+    SELECT n.node,
+           (1 - {d}) / (SELECT n FROM nn)
+           + {d} * (COALESCE(i.inc_q, 0) / {sc}
+                    + (SELECT dang_q FROM d{i}) / {sc}
+                      / (SELECT n FROM nn)) AS rank
+    FROM nodes n LEFT JOIN i{i} i ON n.node = i.node
+)""")
+    return head + "," + ",".join(rounds) + f"\nSELECT node, rank FROM r{iters}"
+
+
+@register(
+    "event_type_pagerank",
+    _pagerank_oracle(3, 0.85),
+    doc="Weighted PageRank (3 fixed power iterations, d=0.85, dangling "
+    "mass redistributed) over the event-type transition graph built from "
+    "per-user consecutive events; each round is one join+agg shuffle and "
+    "the rank vector stays distributed — the oracle replays the exact "
+    "iteration CTE-for-CTE.",
+)
+def q_event_type_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    edges = (
+        ev.select(
+            F.col("event_type").alias("src"),
+            F.lead("event_type").over(w).alias("dst"),
+        )
+        .where(F.col("dst").isNotNull())
+        .groupBy("src", "dst")
+        .agg(F.count("*").cast("double").alias("weight"))
+    )
+    return graph.pagerank(edges, iters=3, damping=0.85)
+
+
+# ------------------------------------------------------- market basket ----
+
+
+@register(
+    "parts_basket_lift",
+    """
+WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+pairs AS (
+    SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, COUNT(*) AS co_cnt
+    FROM li a JOIN li b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    GROUP BY a.l_partkey, b.l_partkey
+),
+pc AS (SELECT l_partkey, COUNT(*) AS cnt FROM li GROUP BY l_partkey),
+no AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM li)
+SELECT part_a, part_b, co_cnt,
+       co_cnt * n_orders / (ca.cnt * cb.cnt) AS lift
+FROM pairs
+JOIN pc ca ON part_a = ca.l_partkey
+JOIN pc cb ON part_b = cb.l_partkey
+CROSS JOIN no
+WHERE co_cnt >= 2
+""",
+    doc="Market-basket part-pair association: co-occurrence counts and "
+    "lift over orders. Per-order pair expansion is quadratic only in "
+    "order line count (bounded ~7 in TPC-H); one shuffle on orderkey, "
+    "exact-int arithmetic up to the single lift division.",
+)
+def q_parts_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    a, b = li.alias("a"), li.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(
+            F.col("a.l_partkey").alias("part_a"),
+            F.col("b.l_partkey").alias("part_b"),
+        )
+        .agg(F.count("*").alias("co_cnt"))
+        .where(F.col("co_cnt") >= 2)
+    )
+    pc = li.groupBy("l_partkey").agg(F.count("*").alias("cnt"))
+    no = li.agg(F.count_distinct("l_orderkey").alias("n_orders"))
+    ca, cb = pc.alias("ca"), pc.alias("cb")
+    return (
+        pairs.join(F.broadcast(ca), F.col("part_a") == F.col("ca.l_partkey"))
+        .join(F.broadcast(cb), F.col("part_b") == F.col("cb.l_partkey"))
+        .crossJoin(F.broadcast(no))
+        .select(
+            "part_a",
+            "part_b",
+            "co_cnt",
+            (
+                F.col("co_cnt") * F.col("n_orders")
+                / (F.col("ca.cnt") * F.col("cb.cnt"))
+            ).alias("lift"),
+        )
+    )
+
+
+# ------------------------------------------------------ triangle counting ----
+
+
+@register(
+    "parts_triangle_counts",
+    """
+WITH pairs AS (
+    SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
+                    GREATEST(a.l_partkey, b.l_partkey) AS v
+    FROM lineitem a JOIN lineitem b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+),
+tri AS (
+    SELECT e1.u AS x, e1.v AS y, e2.v AS z
+    FROM pairs e1
+    JOIN pairs e2 ON e1.u = e2.u AND e1.v < e2.v
+    JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v
+),
+nodes AS (
+    SELECT x AS node FROM tri
+    UNION ALL SELECT y FROM tri
+    UNION ALL SELECT z FROM tri
+)
+SELECT node AS part_id, COUNT(*) AS n_triangles
+FROM nodes GROUP BY node
+""",
+    doc="Per-part triangle participation in the co-purchase graph (parts "
+    "sharing an order = edge) via degree-ordered orientation "
+    "(operators/graph.py:triangle_counts): each triangle is enumerated "
+    "once at its minimum-(degree, id) corner, and hub out-degrees are "
+    "O(sqrt(E)) under the orientation, so the wedge join is bounded by "
+    "E^1.5 regardless of degree skew. The oracle counts the same "
+    "triangles by plain u<v<z enumeration — orientation-independence of "
+    "the count is exactly what the hash gate certifies.",
+)
+def q_parts_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # r14: canonical pair derivation (one keyed aggregation, no
+    # self-join); triangle_counts' normalization dedups to the same
+    # edge set — see _copurchase_edge_pairs_canonical
+
+    edges = _copurchase_edge_pairs_canonical(spark, sf_dir)
+    return graph.triangle_counts(
+        edges, max_degree_bound=_copurchase_degree_bound(spark, sf_dir)
+    ).withColumnRenamed("node", "part_id")
+
+
+KCORE_K = 60
+KCORE_ITERS = 30
+
+
+@register(
+    "parts_kcore",
+    f"""
+WITH RECURSIVE pairs AS (
+    SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
+                    GREATEST(a.l_partkey, b.l_partkey) AS v
+    FROM lineitem a JOIN lineitem b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+),
+peel(iter, u, v) AS (
+    SELECT 0, u, v FROM pairs
+    UNION
+    SELECT p.iter + 1, p.u, p.v
+    FROM peel p
+    JOIN (SELECT iter, node FROM (
+            SELECT iter, u AS node FROM peel
+            UNION ALL SELECT iter, v AS node FROM peel)
+          GROUP BY iter, node HAVING COUNT(*) >= {KCORE_K}) s
+      ON s.iter = p.iter AND s.node = p.u
+    JOIN (SELECT iter, node FROM (
+            SELECT iter, u AS node FROM peel
+            UNION ALL SELECT iter, v AS node FROM peel)
+          GROUP BY iter, node HAVING COUNT(*) >= {KCORE_K}) d
+      ON d.iter = p.iter AND d.node = p.v
+    WHERE p.iter < {KCORE_ITERS}
+),
+core AS (SELECT u, v FROM peel WHERE iter = {KCORE_ITERS})
+SELECT node AS part_id, CAST(COUNT(*) AS BIGINT) AS core_degree
+FROM (SELECT u AS node FROM core UNION ALL SELECT v AS node FROM core)
+GROUP BY node
+""",
+    doc=f"{KCORE_K}-core of the co-purchase graph "
+    "(operators/graph.py:kcore): iteratively peel every part whose "
+    "surviving co-purchase degree is below k until fixpoint — coreness, "
+    "not raw degree, isolates the genuinely dense region (a hub whose "
+    "neighbors are all leaves peels away with them). Each Spark round is "
+    "one degree aggregation + two anti-joins, lineage-truncated; the "
+    "oracle replays the same simultaneous-peel rounds as a recursive CTE "
+    "whose per-iteration working table is re-joined against its own "
+    "degree counts. Survivors carry their within-core degree.",
+)
+def q_parts_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # r14: canonical pair derivation (one keyed aggregation, no
+    # self-join); kcore dedups to the same edge set — see
+    # _copurchase_edge_pairs_canonical
+
+    edges = _copurchase_edge_pairs_canonical(spark, sf_dir)
+    return graph.kcore(
+        edges, k=KCORE_K, max_iter=KCORE_ITERS,
+        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+    ).withColumnRenamed(
+        "node", "part_id"
+    )
+
+
+KTRUSS_K = 3
+KTRUSS_ITERS = 6
+
+
+@register(
+    "parts_ktruss_affinity",
+    f"""
+WITH RECURSIVE op AS (
+    SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+),
+ed AS (
+    SELECT u, v FROM (
+        SELECT LEAST(a.l_partkey, b.l_partkey) AS u,
+               GREATEST(a.l_partkey, b.l_partkey) AS v,
+               COUNT(*) AS c
+        FROM op a JOIN op b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2
+    ) WHERE c >= 2
+),
+peel(iter, u, v) AS (
+    SELECT 0, u, v FROM ed
+    UNION
+    SELECT * FROM (
+        WITH tri AS (
+            SELECT e1.iter, e1.u AS x, e1.v AS y, e2.v AS z
+            FROM peel e1
+            JOIN peel e2 ON e2.iter = e1.iter AND e2.u = e1.u AND e1.v < e2.v
+            JOIN peel e3 ON e3.iter = e1.iter AND e3.u = e1.v AND e3.v = e2.v
+        ),
+        te AS (
+            SELECT iter, x AS u, y AS v FROM tri
+            UNION ALL SELECT iter, x, z FROM tri
+            UNION ALL SELECT iter, y, z FROM tri
+        ),
+        sup AS (SELECT iter, u, v, COUNT(*) AS s FROM te GROUP BY iter, u, v)
+        SELECT p.iter + 1, p.u, p.v
+        FROM peel p
+        LEFT JOIN sup ON sup.iter = p.iter AND sup.u = p.u AND sup.v = p.v
+        WHERE p.iter < {KTRUSS_ITERS} AND COALESCE(sup.s, 0) >= {KTRUSS_K - 2}
+    )
+),
+core AS (SELECT u, v FROM peel WHERE iter = {KTRUSS_ITERS}),
+tri2 AS (
+    SELECT e1.u AS x, e1.v AS y, e2.v AS z
+    FROM core e1
+    JOIN core e2 ON e2.u = e1.u AND e1.v < e2.v
+    JOIN core e3 ON e3.u = e1.v AND e3.v = e2.v
+),
+te2 AS (
+    SELECT x AS u, y AS v FROM tri2
+    UNION ALL SELECT x, z FROM tri2
+    UNION ALL SELECT y, z FROM tri2
+),
+sup2 AS (SELECT u, v, CAST(COUNT(*) AS BIGINT) AS s FROM te2 GROUP BY u, v)
+SELECT c.u AS part_u, c.v AS part_v,
+       CAST(COALESCE(sup2.s, 0) AS BIGINT) AS support
+FROM core c LEFT JOIN sup2 ON sup2.u = c.u AND sup2.v = c.v
+""",
+    doc=f"{KTRUSS_K}-truss of the robust co-purchase affinity graph "
+    "(parts co-ordered in >= 2 distinct orders; operators/graph.py:"
+    "ktruss): iteratively peel every edge supported by fewer than k-2 "
+    "triangles among the survivors. Truss-ness is the EDGE-level "
+    "cohesion test k-core can't give — a hub survives a core through "
+    "degree alone, an edge only survives the truss if its endpoints "
+    "share mutual neighbors. Per Spark round: canonical-corner triangle "
+    "enumeration, 3-edge explode, per-edge count, one anti-join; the "
+    "oracle replays the same simultaneous rounds as a recursive CTE "
+    "with nested triangle/support CTEs over the working table.",
+)
+def q_parts_ktruss_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    op = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    edges = (
+        op.alias("a")
+        .join(
+            op.alias("b"),
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(
+            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
+        )
+        .agg(F.count("*").alias("c"))
+        .where(F.col("c") >= 2)
+        .select("src", "dst")
+    )
+    return (
+        graph.ktruss(edges, k=KTRUSS_K, max_iter=KTRUSS_ITERS)
+        .withColumnRenamed("u", "part_u")
+        .withColumnRenamed("v", "part_v")
+    )
+
+
+# DOULION sampling constants — interpolated verbatim into the oracle.
+TRI_KEEP_NUM = 1
+TRI_KEEP_DEN = 2
+TRI_SALT = "tri8"
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The same co-purchase edge derivation as parts_triangle_counts:
+    parts sharing an order form an edge.
+
+    This is the MULTISET form (one row per qualifying lineitem pair,
+    duplicates across and within orders preserved) — required by the
+    weighted consumer (parts_copurchase_cheapest_3hop prices edges by
+    pair-occurrence count). Consumers that only need the edge SET use
+    :func:`_copurchase_edge_pairs_canonical` instead (r14)."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    return (
+        li.alias("a")
+        .join(
+            li.alias("b"),
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .select(
+            F.col("a.l_partkey").alias("src"),
+            F.col("b.l_partkey").alias("dst"),
+        )
+    )
+
+
+def _copurchase_degree_bound(
+    spark: SparkSession, sf_dir: str
+) -> int | None:
+    """O(metadata) hub certificate for the co-purchase graph consumers
+    (graph._full_adjacency's r15 hub guard): a part's degree is
+    < |distinct parts|, bounded by the part table's parquet-footer row
+    count — no Spark job. None (footers unavailable, or the part table
+    absent or unreadable) makes the operator fall back to its measured
+    degree pass."""
+    from .operators.sketches import _stats_row_count
+
+    try:
+        part = load_table(spark, sf_dir, "part")
+    except AnalysisException:
+        return None
+    return _stats_row_count(part)
+
+
+def _copurchase_edge_pairs_canonical(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Canonical (src < dst) co-purchase pairs via ONE keyed aggregation
+    instead of the lineitem self-join: per-order sorted DISTINCT part
+    sets, exploded to their i < j pairs map-side after the single
+    groupBy exchange (guide §2.4 — the self-join's second exchange,
+    sort and probe buy nothing the per-order array doesn't give).
+
+    Emits the same edge SET as :func:`_copurchase_edges` with strictly
+    fewer duplicate rows (within-order duplicate partkeys collapse in
+    the per-order set; cross-order duplicates remain until the
+    consumer's distinct), and already-canonical pairs (the sorted array
+    makes every i < j pair src < dst, so a consumer's least/greatest
+    normalization is a no-op). Every consumer of this function dedups
+    to the edge set — triangle family, kcore, BFS — so results are
+    bit-identical to the self-join form; the multiplicity-consuming
+    weighted entry stays on :func:`_copurchase_edges`. Measured sf0.1:
+    derivation+distinct 2.09 s -> 1.43 s."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    return (
+        li.groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ps, (x, i) -> "
+                    "transform(slice(ps, i + 2, size(ps) - i - 1), "
+                    "y -> struct(x AS src, y AS dst))))"
+                )
+            ).alias("p")
+        )
+        .select("p.src", "p.dst")
+    )
+
+
+@register(
+    "parts_triangle_estimate",
+    f"""
+WITH pairs AS (
+    SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
+                    GREATEST(a.l_partkey, b.l_partkey) AS v
+    FROM lineitem a JOIN lineitem b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+),
+sampled AS (
+    SELECT u, v FROM pairs
+    WHERE CAST('0x' || substr(md5(CAST(u AS VARCHAR) || ':'
+                || CAST(v AS VARCHAR) || ':{TRI_SALT}'), 1, 8) AS BIGINT)
+          % {TRI_KEEP_DEN} < {TRI_KEEP_NUM}
+),
+tri AS (
+    SELECT e1.u AS x, e1.v AS y, e2.v AS z
+    FROM sampled e1
+    JOIN sampled e2 ON e1.u = e2.u AND e1.v < e2.v
+    JOIN sampled e3 ON e3.u = e1.v AND e3.v = e2.v
+)
+SELECT (SELECT COUNT(*) FROM sampled) AS n_sampled_edges,
+       (SELECT COUNT(*) FROM tri) AS n_sampled_triangles,
+       CAST((SELECT COUNT(*) FROM tri) * {TRI_KEEP_DEN ** 3}
+            // {TRI_KEEP_NUM ** 3} AS BIGINT) AS est_triangles
+""",
+    doc="DOULION approximate triangle count over the co-purchase graph "
+    f"(operators/graph.py:triangle_count_estimate): every undirected "
+    f"edge survives a deterministic salted-md5 coin with p = "
+    f"{TRI_KEEP_NUM}/{TRI_KEEP_DEN}, triangles in the sparsified graph "
+    "are enumerated exactly (degree-oriented intersection) and scaled "
+    "by 1/p**3 — the documented 100 TB path for triangle statistics, "
+    "cutting the Theta(E^1.5) intersection work ~2.8x at p=1/2 and "
+    "~31x at p=1/10 while staying unbiased. The hash coin makes the "
+    "sampled subgraph partition-independent and exactly replayable, "
+    "which is what lets the oracle pin the estimate hash-exactly.",
+)
+def q_parts_triangle_estimate(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return graph.triangle_count_estimate(
+        _copurchase_edge_pairs_canonical(spark, sf_dir),
+        keep_num=TRI_KEEP_NUM,
+        keep_den=TRI_KEEP_DEN,
+        salt=TRI_SALT,
+        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+    )
+
+
+# ---------------------------------------------------------------------------
+# DOULION at the 100 TB operating point (operators/graph.py:
+# triangle_count_estimate with doulion_keep_policy's p = 1/10 tier) —
+# the r8 verdict's #4 ask: the p knob registered, measured, and bounded.
+# ---------------------------------------------------------------------------
+
+TRI10_KEEP_NUM = 1
+TRI10_KEEP_DEN = 10
+TRI10_SALT = "tri8"
+
+
+def _triangle_estimate_oracle(num: int, den: int, salt: str) -> str:
+    """The round-8 DOULION oracle, parameterized over the coin — same
+    deterministic salted-md5 edge filter, exact enumeration on the
+    sample, integer 1/p**3 scale-up."""
+    return f"""
+WITH pairs AS (
+    SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
+                    GREATEST(a.l_partkey, b.l_partkey) AS v
+    FROM lineitem a JOIN lineitem b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+),
+sampled AS (
+    SELECT u, v FROM pairs
+    WHERE CAST('0x' || substr(md5(CAST(u AS VARCHAR) || ':'
+                || CAST(v AS VARCHAR) || ':{salt}'), 1, 8) AS BIGINT)
+          % {den} < {num}
+),
+tri AS (
+    SELECT e1.u AS x, e1.v AS y, e2.v AS z
+    FROM sampled e1
+    JOIN sampled e2 ON e1.u = e2.u AND e1.v < e2.v
+    JOIN sampled e3 ON e3.u = e1.v AND e3.v = e2.v
+)
+SELECT (SELECT COUNT(*) FROM sampled) AS n_sampled_edges,
+       (SELECT COUNT(*) FROM tri) AS n_sampled_triangles,
+       CAST((SELECT COUNT(*) FROM tri) * {den ** 3}
+            // {num ** 3} AS BIGINT) AS est_triangles
+"""
+
+
+@register(
+    "parts_triangle_estimate_p10",
+    _triangle_estimate_oracle(TRI10_KEEP_NUM, TRI10_KEEP_DEN, TRI10_SALT),
+    doc="DOULION triangle estimate at p = 1/10 — the keep rate "
+    "doulion_keep_policy prescribes for 10^9-10^11-edge graphs (the "
+    "p=1/2 twin's measured shuffle bytes still grow ~10^1.5 at 10x "
+    "rows because the enumeration term dominates at fixed p; dialing "
+    "p to 1/10 cuts the intersection work ~31x and is the knob a "
+    "100 TB user must hold). Same deterministic salted-md5 coin, exact "
+    "enumeration on the sample, integer 1/p**3 scale-up — hash-exact "
+    "against the oracle; the error bound at this p is property-tested "
+    "at sf0.01 (tests/test_round9.py).",
+)
+def q_parts_triangle_estimate_p10(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from .operators import graph as _g
+
+    return _g.triangle_count_estimate(
+        _copurchase_edge_pairs_canonical(spark, sf_dir),
+        keep_num=TRI10_KEEP_NUM,
+        keep_den=TRI10_KEEP_DEN,
+        salt=TRI10_SALT,
+        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Bounded-hop BFS (operators/graph.py bounded_bfs) — the k-hop
+# neighborhood primitive the graph family lacked: exact triangle/k-core
+# /k-truss/PageRank/CC existed, but "what is within 3 hops of this seed
+# set" (taint spread, recommendation halo, blast-radius queries) is the
+# frontier-expansion op. Bounded hops is the honest 100 TB form: plan
+# depth fixed by k, per-level work proportional to the NEW frontier
+# (anti-join against visited), never diameter-dependent.
+# ---------------------------------------------------------------------------
+
+BFS_SEED_MOD = 500
+BFS_HOPS = 3
+
+
+def _bfs_oracle() -> str:
+    return f"""
+WITH RECURSIVE pairs AS (
+    SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
+                    GREATEST(a.l_partkey, b.l_partkey) AS v
+    FROM lineitem a JOIN lineitem b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+),
+sym AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
+seeds AS (SELECT DISTINCT l_partkey AS node FROM lineitem
+          WHERE l_partkey % {BFS_SEED_MOD} = 0),
+walk(node, dist) AS (
+    SELECT node, 0 FROM seeds
+    UNION ALL
+    SELECT s.v, w.dist + 1
+    FROM walk w JOIN sym s ON w.node = s.u
+    WHERE w.dist < {BFS_HOPS}
+)
+SELECT node AS part_id, CAST(MIN(dist) AS BIGINT) AS dist
+FROM walk GROUP BY node
+"""
+
+
+@register(
+    "parts_copurchase_bfs_3hop",
+    _bfs_oracle(),
+    doc=f"Minimum hop distance (<= {BFS_HOPS}) from a deterministic "
+    f"seed set (partkey % {BFS_SEED_MOD} = 0) over the co-purchase "
+    "graph — frontier BFS with per-level visited anti-joins, so each "
+    "level's work is proportional to the NEW frontier and the plan "
+    "depth is fixed by the hop bound, not graph diameter. First-seen "
+    "level == min distance by level order. The oracle walks the same "
+    "graph with a depth-bounded recursive CTE and takes MIN(dist) over "
+    "all revisits — two constructions, one answer.",
+)
+def q_parts_copurchase_bfs_3hop(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    from .operators.graph import bounded_bfs
+
+    li = load_table(spark, sf_dir, "lineitem")
+    seeds = (
+        li.where(F.col("l_partkey") % BFS_SEED_MOD == 0)
+        .select(F.col("l_partkey").alias("node"))
+        .distinct()
+    )
+    return bounded_bfs(
+        _copurchase_edge_pairs_canonical(spark, sf_dir),
+        seeds,
+        max_hops=BFS_HOPS,
+        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+    ).select(
+        F.col("node").alias("part_id"), F.col("dist").cast("long").alias("dist")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Bounded Bellman-Ford (operators/graph.py bounded_bellman_ford) — the
+# WEIGHTED companion to the BFS entry: cheapest path within a hop
+# budget, where a 2-edge detour can beat a direct edge (the case hop
+# counting cannot see). Edge weight = 1 + 10000 DIV copurchase_count:
+# frequently co-purchased part pairs are cheap to traverse, rare pairs
+# expensive — the affinity-distance the recommendation literature uses.
+# ---------------------------------------------------------------------------
+
+
+def _bf_oracle() -> str:
+    return f"""
+WITH RECURSIVE pairs AS (
+    SELECT LEAST(a.l_partkey, b.l_partkey) AS u,
+           GREATEST(a.l_partkey, b.l_partkey) AS v,
+           CAST(COUNT(*) AS BIGINT) AS cnt
+    FROM lineitem a JOIN lineitem b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    GROUP BY 1, 2
+),
+wedges AS (SELECT u, v, CAST(1 + 10000 // cnt AS BIGINT) AS w FROM pairs),
+sym AS (SELECT u, v, w FROM wedges UNION SELECT v, u, w FROM wedges),
+seeds AS (SELECT DISTINCT l_partkey AS node FROM lineitem
+          WHERE l_partkey % {BFS_SEED_MOD} = 0),
+walk(node, cost, d) AS (
+    SELECT node, CAST(0 AS BIGINT), 0 FROM seeds
+    UNION ALL
+    SELECT s.v, w.cost + s.w, w.d + 1
+    FROM walk w JOIN sym s ON w.node = s.u
+    WHERE w.d < {BFS_HOPS}
+)
+SELECT node AS part_id, CAST(MIN(cost) AS BIGINT) AS cost
+FROM walk GROUP BY node
+"""
+
+
+@register(
+    "parts_copurchase_cheapest_3hop",
+    _bf_oracle(),
+    doc=f"Cheapest affinity path (<= {BFS_HOPS} edges) from the same "
+    "seed set as the BFS entry, edge weight 1 + 10000 DIV "
+    "copurchase-count: bounded Bellman-Ford — each relaxation round is "
+    "one equi-join + one keyed MIN over the best-so-far table, plan "
+    "depth fixed by the hop budget. Unlike BFS a settled node can "
+    "IMPROVE at a later hop (two popular edges can undercut one rare "
+    "direct edge), which is why the whole table relaxes each round "
+    "instead of an anti-joined frontier. Integer weights end-to-end; "
+    "the oracle enumerates all <= 3-edge paths with a recursive CTE "
+    "and MINs the cost — two constructions, one answer. Reaches the "
+    "same node set as parts_copurchase_bfs_3hop by construction.",
+)
+def q_parts_copurchase_cheapest_3hop(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    from .operators.graph import bounded_bellman_ford
+
+    li = load_table(spark, sf_dir, "lineitem")
+    seeds = (
+        li.where(F.col("l_partkey") % BFS_SEED_MOD == 0)
+        .select(F.col("l_partkey").alias("node"))
+        .distinct()
+    )
+    wedges = (
+        _copurchase_edges(spark, sf_dir)
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("cnt"))
+        .select(
+            "src",
+            "dst",
+            (F.lit(1) + F.expr("10000 DIV cnt")).cast("long").alias("w"),
+        )
+    )
+    return bounded_bellman_ford(
+        wedges, seeds, max_hops=BFS_HOPS
+    ).select(
+        F.col("node").alias("part_id"),
+        F.col("cost").cast("long").alias("cost"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# parts_triangle_counts_auto — the policy-routed DEFAULT for triangle
+# statistics. The policy input is the COMBINATORIAL pair bound
+# Σ_orders C(cnt, 2): one O(scan) keyed aggregate over lineitem — NO
+# self-join, so sizing the work never pays a slice of the work — that
+# both engines compute identically. It upper-bounds the raw pair
+# volume (equal-partkey lineitem pairs are counted here but excluded
+# by the join's strict <), and an upper bound can only pick a
+# MORE-sampled tier — the conservative direction for work. At the
+# correctness sf the bound sits below the 10⁷ exact threshold, so the
+# entry is hash-exact against the exact enumerator (p = 1 degenerates
+# triangle_count_estimate to it); past 10⁷ both engines' CASE ladders
+# flip to the same DOULION coin, so the oracle stays correct at ANY
+# sf — the scale-dependence lives in the (shared, deterministic)
+# policy, never in an engine/oracle mismatch (the r11 ADVICE-#1
+# lesson applied from the start).
+# ---------------------------------------------------------------------------
+
+
+def _tri_auto_oracle() -> str:
+    # the same tier ladder as graph.doulion_keep_policy, as SQL — kept
+    # textually adjacent so a policy edit must touch both or the gate
+    # catches it (tests/test_round12.py pins the Python ladder)
+    return f"""
+WITH ocnt AS (
+    SELECT COUNT(*) AS c FROM lineitem GROUP BY l_orderkey
+),
+pol AS (
+    -- COALESCE mirrors the engine's F.coalesce(F.sum(...), 0): SUM
+    -- over zero groups is NULL, and NULL < x is NULL, so an empty
+    -- lineitem would fall through every WHEN to the 32 tier while
+    -- the engine picks (1, 1) — caught by review, pinned by test
+    SELECT CAST(1 AS BIGINT) AS keep_num,
+           CAST(CASE WHEN COALESCE(SUM(c * (c - 1) // 2), 0)
+                          < 10000000 THEN 1
+                     WHEN COALESCE(SUM(c * (c - 1) // 2), 0)
+                          < 1000000000 THEN 2
+                     WHEN COALESCE(SUM(c * (c - 1) // 2), 0)
+                          < 100000000000 THEN 10
+                     ELSE 32 END AS BIGINT) AS keep_den
+    FROM ocnt
+),
+pairs AS (
+    SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
+                    GREATEST(a.l_partkey, b.l_partkey) AS v
+    FROM lineitem a JOIN lineitem b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+),
+sampled AS (
+    SELECT u, v FROM pairs
+    WHERE CAST('0x' || substr(md5(CAST(u AS VARCHAR) || ':'
+                || CAST(v AS VARCHAR) || ':{TRI_SALT}'), 1, 8) AS BIGINT)
+          % (SELECT keep_den FROM pol) < (SELECT keep_num FROM pol)
+),
+tri AS (
+    SELECT e1.u AS x, e1.v AS y, e2.v AS z
+    FROM sampled e1
+    JOIN sampled e2 ON e1.u = e2.u AND e1.v < e2.v
+    JOIN sampled e3 ON e3.u = e1.v AND e3.v = e2.v
+)
+SELECT (SELECT keep_num FROM pol) AS policy_keep_num,
+       (SELECT keep_den FROM pol) AS policy_keep_den,
+       (SELECT COUNT(*) FROM sampled) AS n_sampled_edges,
+       (SELECT COUNT(*) FROM tri) AS n_sampled_triangles,
+       CAST((SELECT COUNT(*) FROM tri)
+            * (SELECT keep_den * keep_den * keep_den FROM pol)
+            // (SELECT keep_num * keep_num * keep_num FROM pol)
+            AS BIGINT) AS est_triangles
+"""
+
+
+@register(
+    "parts_triangle_counts_auto",
+    _tri_auto_oracle(),
+    doc="Global triangle count through the doulion_keep_policy "
+    "auto-tier (operators/graph.py:triangle_count_auto) — the "
+    "KMV-gate pattern applied to triangle statistics (r11 verdict "
+    "task #6): the combinatorial pair bound sum-over-orders C(cnt,2) "
+    "(one O(scan) keyed aggregate over lineitem — no self-join, so "
+    "sizing the work never pays a slice of the work; identical in "
+    "both engines) resolves the DOULION coin from the documented tier "
+    "ladder (exact below 1e7 edges, p=1/2 then 1/10 then 1/32 per "
+    "decade pair), the chosen policy travels in the OUTPUT as "
+    "(policy_keep_num, policy_keep_den) columns, and p=1 degenerates "
+    "the estimator to the exact degree-oriented enumerator (coin < 1 "
+    "keeps every edge, scale-up is *1). Both engines evaluate the "
+    "SAME ladder on the SAME count, so the oracle stays correct at "
+    "any sf — the recommended default for triangle statistics at "
+    "100 TB, where the ladder lands on p=1/10 or deeper and the "
+    "Theta(E^1.5) intersection work drops ~31x+.",
+)
+def q_parts_triangle_counts_auto(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from .operators import graph
+
+    edges = _copurchase_edge_pairs_canonical(spark, sf_dir)
+    # the policy input: the combinatorial pair bound Σ C(cnt, 2) over
+    # orders — an O(scan) keyed aggregate (first SCALE_BENCH_r12 cut
+    # measured the naive self-join count at ~1/3 of the enumeration
+    # itself; sizing must stay metadata-priced). Upper-bounds raw
+    # pairs (equal-partkey lineitem pairs excluded by the join's
+    # strict <), so it can only pick a more-sampled tier. The oracle's
+    # pol CTE evaluates the same sum.
+    li = load_table(spark, sf_dir, "lineitem")
+    n_pairs = (
+        li.groupBy("l_orderkey")
+        .agg(F.count("*").alias("c"))
+        .agg(
+            F.coalesce(
+                F.sum(F.expr("c * (c - 1) DIV 2")), F.lit(0)
+            ).alias("n")
+        )
+        .collect()[0]["n"]
+    )
+    return graph.triangle_count_auto(
+        edges, n_edges=n_pairs, salt=TRI_SALT,
+        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+    )

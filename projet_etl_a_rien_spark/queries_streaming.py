@@ -1,11 +1,14 @@
-"""Structured Streaming query registrations.
+"""Streaming registry: Structured Streaming queries and sink-as-state maintenance.
 
 Each query executes a REAL streaming job — file-replayed events through
 ``readStream`` → windowed stateful aggregation → memory sink with
-``Trigger.AvailableNow`` — and returns the final result table. COMPLETE
-output mode over a bounded replay makes the streaming result equal the
-batch equivalent, which is what the DuckDB oracles assert (SURVEY.md §7
-hard part 2: streaming-state testability without a broker).
+``Trigger.AvailableNow`` — or maintains a sink incrementally across
+batches, and returns the final result table. COMPLETE output mode over
+a bounded replay makes the streaming result equal the batch equivalent,
+which is what the DuckDB oracles assert (SURVEY.md §7 hard part 2:
+streaming-state testability without a broker). Where a streaming entry
+has a batch twin, it is registered with the twin's oracle, imported from
+the twin's domain module.
 """
 
 from __future__ import annotations
@@ -14,22 +17,1337 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .operators import bpe, retrieval, selection
+from .operators.text import CLASSIFIER_BUCKETS as _CLS_BUCKETS
+from .operators.text import classifier_weights as _classifier_weights
 from .queries import register
+from .queries_curation import BM25_QUERY_TERMS, DSIR_BUCKETS, DSIR_TARGET_SOURCE, PHRASE
+from .queries_dedup import (
+    BLOOM_M_BITS,
+    BLOOM_N,
+    CONTAM_N,
+    CONTAM_ORACLE,
+    _bloom_oracle,
+)
+from .queries_relational import API_PAGE_SIZE, API_PAGES
+from .queries_sketches import (
+    CMS_DEPTH,
+    CMS_TOPK,
+    CMS_TOPK_ORACLE,
+    CMS_WIDTH,
+    QSK_M,
+    QSK_QPPMS,
+    SAMPLE_K,
+    _hll_oracle,
+    _kmv_distinct_oracle,
+    _kmv_sample_oracle,
+    _kmv_sliding_oracle,
+    _kmv_stats_with_truth,
+    _qsketch_oracle,
+    sliding_kmv_dashboard,
+)
+from .queries_tokenizer import _bbpe_learn_oracle
 from .streaming.windows import (
     dedup_within_watermark,
     docs_stream,
-    stream_stream_interval_join,
-    stream_stream_left_outer_join,
     replay_events_stream,
     run_bounded,
     run_foreach_batch_parquet,
     session_windows,
     sliding_counts,
     stateful_user_totals,
+    stream_stream_interval_join,
+    stream_stream_left_outer_join,
     streaming_global_count,
     tumbling_counts,
     tws_user_type_totals,
 )
+
+
+@register(
+    "streaming_api_ingest",
+    f"""
+WITH k AS (SELECT unnest(range(1, {API_PAGES * API_PAGE_SIZE + 1})) AS k),
+rec AS (
+    SELECT CAST((k - 1) // {API_PAGE_SIZE} AS INTEGER) AS page,
+           CASE WHEN k % 13 = 0 THEN ''
+                WHEN k % 29 = 0 THEN 'not-a-number'
+                ELSE CAST((k * 7) % 180 - 90 AS VARCHAR) END AS lat,
+           CASE WHEN k % 17 = 0 THEN NULL
+                ELSE CAST((k * 11) % 360 - 180 AS VARCHAR) END AS lon
+    FROM k
+),
+clean AS (
+    SELECT page,
+           TRY_CAST(NULLIF(lat, '') AS BIGINT) AS lat,
+           TRY_CAST(lon AS BIGINT) AS lon
+    FROM rec
+)
+SELECT page,
+       CAST(COUNT(*) AS BIGINT) AS n_clean,
+       CAST(SUM(lat) AS BIGINT) AS sum_lat,
+       CAST(SUM(lon) AS BIGINT) AS sum_lon
+FROM clean
+WHERE lat IS NOT NULL AND lon IS NOT NULL
+GROUP BY page
+""",
+    doc="Streaming ingest through the custom Python DataSource's "
+    "SimpleDataSourceStreamReader: each availableNow run drains ONE poll "
+    "(page) and commits its {{page}} offset to the checkpoint, so "
+    "successive runs walk the feed exactly once (the reference's NiFi "
+    "timer-poll, engine-native). The query replays pages+1 runs against "
+    "one checkpoint — the +1 proves the exhausted feed appends nothing — "
+    "then cleans and aggregates per page; the oracle regenerates the "
+    "deterministic pages relationally.",
+)
+def q_streaming_api_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .sources import pyds
+
+    pyds.register(spark)
+    sink = tempfile.mkdtemp(prefix="api_sink_")
+    ckpt = tempfile.mkdtemp(prefix="api_ckpt_")
+    try:
+        for _ in range(API_PAGES + 1):
+            q = (
+                spark.readStream.format("airports_api")
+                .option("pages", API_PAGES)
+                .option("page_size", API_PAGE_SIZE)
+                .load()
+                .writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        landed = spark.read.parquet(sink)
+        lat = F.nullif(F.col("lat"), F.lit("")).try_cast("bigint")
+        lon = F.col("lon").try_cast("bigint")
+        clean = landed.select("page", lat.alias("lat"), lon.alias("lon")).where(
+            F.col("lat").isNotNull() & F.col("lon").isNotNull()
+        )
+        return (
+            clean.groupBy("page")
+            .agg(
+                F.count("*").alias("n_clean"),
+                F.sum("lat").alias("sum_lat"),
+                F.sum("lon").alias("sum_lon"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(sink, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+
+
+@register(
+    "streaming_jdbc_totals_sink",
+    """
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           AS sum_value
+FROM events GROUP BY event_type
+""",
+    doc="The reference's production sink shape end-to-end with REAL "
+    "bytes: streaming complete-mode totals -> foreachBatch JDBC "
+    "full-replace (ref spark_airports_final.py:75-86) into embedded "
+    "Derby, read back through a JDBC scan; idempotent because overwrite "
+    "replaces the whole table per batch. Oracle = the batch aggregate.",
+)
+def q_streaming_jdbc_totals_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .sources.jdbc import jdbc_source
+    from .streaming.windows import replay_events_stream, run_foreach_batch_jdbc
+
+    # per-run db dir: concurrent sessions must not share a Derby database
+    tmp = tempfile.mkdtemp(prefix="derbystream_")
+    spark._jvm.System.setProperty("derby.stream.error.file", f"{tmp}/derby.log")
+    url = f"jdbc:derby:{tmp}/db;create=true"
+    try:
+        agg = (
+            replay_events_stream(spark, sf_dir)
+            .groupBy("event_type")
+            .agg(
+                F.count("*").cast("long").alias("n_events"),
+                (
+                    F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0
+                ).alias("sum_value"),
+            )
+        )
+        run_foreach_batch_jdbc(agg, url, "totals", driver=DERBY_DRIVER)
+        return jdbc_source(
+            spark, url, "totals", user="app", password="app", driver=DERBY_DRIVER
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@register(
+    "streaming_jdbc_cdc_merge",
+    """
+WITH base AS (
+    SELECT o_orderkey, o_orderstatus, 'I' AS op, 0 AS seq FROM orders
+),
+upd AS (
+    SELECT DISTINCT o.o_orderkey, 'R' AS o_orderstatus, 'U' AS op, 1 AS seq
+    FROM orders o JOIN lineitem l
+      ON o.o_orderkey = l.l_orderkey AND l.l_returnflag = 'R'
+),
+del AS (
+    SELECT o_orderkey, o_orderstatus, 'D' AS op, 2 AS seq
+    FROM orders WHERE o_orderkey % 1000 = 0
+),
+merged AS (
+    SELECT * FROM base UNION ALL SELECT * FROM upd UNION ALL SELECT * FROM del
+),
+latest AS (
+    SELECT * FROM merged
+    QUALIFY ROW_NUMBER() OVER (
+        PARTITION BY o_orderkey ORDER BY seq DESC, op DESC) = 1
+)
+SELECT o_orderkey, o_orderstatus FROM latest WHERE op != 'D'
+""",
+    doc="Exactly-once streaming CDC into a RELATIONAL table "
+    "(streaming/windows.py:run_cdc_merge_jdbc): the orders changelog "
+    "replayed one change-file per micro-batch, each batch landed in a "
+    "Derby staging table and folded by one driver-side MERGE INTO with "
+    "the latest-by-(seq,op) newer-wins condition — tombstones retained, "
+    "replay-idempotent, order-independent, so the table equals the "
+    "one-shot batch MERGE and the oracle is the batch query's SQL.",
+)
+def q_streaming_jdbc_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import shutil
+    import tempfile
+
+    from .streaming.windows import run_cdc_merge_jdbc
+
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    li = load_table(spark, sf_dir, "lineitem")
+    upd = o.join(
+        li.where(F.col("l_returnflag") == "R").select("l_orderkey"),
+        F.col("o_orderkey") == F.col("l_orderkey"),
+        "left_semi",
+    ).select(
+        "o_orderkey",
+        F.lit("R").alias("o_orderstatus"),
+        F.lit("U").alias("op"),
+        F.lit(1).cast("long").alias("seq"),
+    )
+    dels = o.where(F.col("o_orderkey") % 1000 == 0).select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.lit("D").alias("op"),
+        F.lit(2).cast("long").alias("seq"),
+    )
+    root = tempfile.mkdtemp(prefix="cdcjdbc_")
+    src = os.path.join(root, "changes")
+    spark._jvm.System.setProperty("derby.stream.error.file", f"{root}/derby.log")
+    url = f"jdbc:derby:{root}/db;create=true"
+    try:
+        # one file per change batch -> one micro-batch each (seq order
+        # not required: the merge condition is order-independent)
+        upd.coalesce(1).write.mode("append").parquet(src)
+        dels.coalesce(1).write.mode("append").parquet(src)
+        stream = (
+            spark.readStream.schema(
+                "o_orderkey bigint, o_orderstatus string, op string, seq long"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        return run_cdc_merge_jdbc(
+            stream,
+            o,
+            url,
+            "orders_tbl",
+            key_col="o_orderkey",
+            column_types="o_orderstatus VARCHAR(8), op VARCHAR(1)",
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@register(
+    "streaming_dynamic_session_windows",
+    """
+WITH g AS (
+    SELECT user_id, ts,
+           CASE WHEN event_type = 'purchase' THEN INTERVAL 60 MINUTE
+                ELSE INTERVAL 20 MINUTE END AS gap
+    FROM events
+),
+marked AS (
+    SELECT user_id, ts, ts + gap AS e,
+           MAX(ts + gap) OVER (PARTITION BY user_id ORDER BY ts
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND 1 PRECEDING) AS prev_end
+    FROM g
+),
+numbered AS (
+    SELECT user_id, ts, e,
+           SUM(CASE WHEN prev_end IS NULL OR ts >= prev_end THEN 1 ELSE 0 END)
+               OVER (PARTITION BY user_id ORDER BY ts
+                     ROWS UNBOUNDED PRECEDING) AS sid
+    FROM marked
+)
+SELECT user_id,
+       MIN(ts) AS session_start,
+       MAX(e) AS session_end,
+       CAST(COUNT(*) AS BIGINT) AS n_events
+FROM numbered
+GROUP BY user_id, sid
+""",
+    doc="DYNAMIC-gap session windows (Spark session_window with a gap "
+    "COLUMN): purchases keep a session alive 60 min, everything else "
+    "20 — the per-event-type timeout real engagement analytics uses. "
+    "Oracle is the gaps-and-islands formulation generalized to a "
+    "running max of per-event window ends (merge iff the next event "
+    "starts before the furthest end seen). Equal-ts events always "
+    "merge (gap > 0), so tie order cannot flip a split.",
+)
+def q_streaming_dynamic_session_windows(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from .streaming.windows import replay_events_stream, run_bounded
+
+    ev = replay_events_stream(spark, sf_dir)
+    # session_window's dynamic gap must be CalendarIntervalType —
+    # an INTERVAL literal under ANSI is DayTimeIntervalType and is
+    # rejected, so build the gap with make_interval()
+    gap = F.expr(
+        "CASE WHEN event_type = 'purchase' "
+        "THEN make_interval(0, 0, 0, 0, 0, 60, 0) "
+        "ELSE make_interval(0, 0, 0, 0, 0, 20, 0) END"
+    )
+    agg = (
+        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
+            "n_events",
+        )
+    )
+    return run_bounded(agg)
+
+
+@register(
+    "streaming_inverted_index_ingest",
+    """
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
+occ AS (
+    SELECT doc_id AS id,
+           unnest(list_transform(range(1, len(ts) + 1),
+                                 i -> struct_pack(p := i, t := ts[i]))) AS u
+    FROM toks
+),
+o2 AS (SELECT id, u.p AS pos, u.t AS token FROM occ),
+post AS (
+    SELECT token, id, COUNT(*) AS tf,
+           CAST(MIN(pos) AS BIGINT) AS first_pos,
+           CAST(MAX(pos) AS BIGINT) AS last_pos
+    FROM o2 GROUP BY 1, 2
+),
+st AS (
+    SELECT token, COUNT(*) AS df_docs, CAST(SUM(tf) AS BIGINT) AS cf
+    FROM post GROUP BY 1
+),
+n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents)
+SELECT post.token, post.id AS doc_id, tf, first_pos, last_pos, df_docs, cf,
+       CAST(ROUND(ln((n_docs + 1.0) / (df_docs + 1.0)) * 1000000000) AS BIGINT)
+           / 1e9 AS idf
+FROM post JOIN st ON post.token = st.token, n
+""",
+    doc="Incremental inverted-index maintenance, sink-is-the-state: a "
+    "streaming pass over even doc_ids lands postings partials "
+    "(idempotent parts/batch_id=N), compaction folds them by plain "
+    "union (postings of distinct docs are disjoint rows), then a batch "
+    "partial for odd docs lands ABOVE the fold watermark; the folded "
+    "sink + read-time df/cf/idf stats equal the one-shot batch index, "
+    "which the oracle asserts. The sink stores what is incremental and "
+    "recomputes what any batch would invalidate (corpus-global stats).",
+)
+def q_streaming_inverted_index_ingest(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .operators.compaction import (
+        _snapshot_version,
+        read_postings_sink_with_stats,
+        write_postings_partial,
+    )
+    from .streaming.windows import (
+        apply_runtime_confs,
+        docs_stream,
+        run_incremental_postings_sink,
+    )
+
+    apply_runtime_confs(spark)
+    path = tempfile.mkdtemp(prefix="invsink_")
+    try:
+        even = docs_stream(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
+        run_incremental_postings_sink(even, path)
+        odd = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 1)
+        write_postings_partial(
+            odd, path, batch_id=_snapshot_version(spark, path) + 1
+        )
+        # serve through the stored-stats path: snapshot stats written at
+        # compaction + additive merge with the odd-docs partial landed
+        # above the fold watermark (the oracle pins it equal to the
+        # one-shot batch index, so the merge itself is hash-checked)
+        return read_postings_sink_with_stats(spark, path).localCheckpoint(
+            eager=True
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@register(
+    "streaming_dsir_gate",
+    f"""
+WITH tok AS (
+    SELECT doc_id AS id, source = '{DSIR_TARGET_SOURCE}' AS is_target,
+           unnest(string_split(text, ' ')) AS token
+    FROM documents
+),
+occ AS (
+    SELECT id, is_target,
+           CAST('0x' || substr(md5(token), 1, 8) AS BIGINT) % {DSIR_BUCKETS} AS b
+    FROM tok
+),
+hist AS (
+    SELECT b, COUNT(*) AS cnt_raw,
+           CAST(SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS BIGINT) AS cnt_tgt
+    FROM occ GROUP BY b
+),
+tot AS (
+    SELECT CAST(SUM(cnt_raw) AS BIGINT) AS tot_raw,
+           CAST(SUM(cnt_tgt) AS BIGINT) AS tot_tgt
+    FROM hist
+),
+llr AS (
+    SELECT b,
+           CAST(ROUND((ln((cnt_tgt + 1.0) / (tot_tgt + {DSIR_BUCKETS}.0))
+                       - ln((cnt_raw + 1.0) / (tot_raw + {DSIR_BUCKETS}.0)))
+                      * 1000000000) AS BIGINT) AS llr_nano
+    FROM hist, tot
+),
+scored AS (
+    SELECT id AS doc_id, COUNT(*) AS n_tokens,
+           CAST(SUM(llr_nano) AS BIGINT) AS lw_nano
+    FROM occ JOIN llr USING (b)
+    GROUP BY id
+),
+thr AS (
+    SELECT CAST(SUM(lw_nano) AS BIGINT) AS total_nano,
+           COUNT(*) AS n_docs FROM scored
+)
+SELECT doc_id, n_tokens, lw_nano / 1e9 AS logweight
+FROM scored, thr
+WHERE lw_nano * n_docs >= total_nano
+""",
+    doc="DSIR as an INGEST gate: the LLR model is fitted on the batch "
+    "corpus (frozen), a document stream is scored by stream-static "
+    "broadcast join + one stateful per-doc aggregation (per-occurrence "
+    "llr sum is integer-identical to the batch per-bucket fold), and "
+    "docs at or above the corpus-mean log-weight pass — the comparison "
+    "runs in integer nano space (lw·n >= Σlw, no division) so the "
+    "threshold is exact on both engines. The deployment shape DSIR is "
+    "built for: fit once, gate the firehose.",
+)
+def q_streaming_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .streaming.windows import (
+        apply_runtime_confs,
+        docs_stream,
+        run_bounded,
+    )
+
+    apply_runtime_confs(spark)
+    llr = selection.dsir_llr_table(
+        load_table(spark, sf_dir, "documents"),
+        F.col("source") == DSIR_TARGET_SOURCE,
+        n_buckets=DSIR_BUCKETS,
+    ).localCheckpoint(eager=True)  # freeze the model before the stream runs
+    doc_stream = docs_stream(spark, sf_dir)
+    scored = selection.dsir_score_stream(
+        doc_stream, llr, n_buckets=DSIR_BUCKETS
+    )
+    # lw_nano is carried through the sink as the exact BIGINT nano sum
+    # (never reconstructed from the double — that loses bits past ~2^52)
+    batch = run_bounded(scored, mode="complete")
+    thr = batch.agg(
+        F.sum("lw_nano").alias("total_nano"), F.count("*").alias("n_docs")
+    )
+    return (
+        batch.crossJoin(F.broadcast(thr))
+        .where(F.col("lw_nano") * F.col("n_docs") >= F.col("total_nano"))
+        .select("doc_id", "n_tokens", "logweight")
+    )
+
+
+@register(
+    "streaming_index_phrase_search",
+    f"""
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
+occ AS (
+    SELECT doc_id AS id,
+           unnest(list_transform(range(1, len(ts) + 1),
+                                 i -> struct_pack(p := i, t := ts[i]))) AS u
+    FROM toks
+),
+o2 AS (SELECT id, u.p AS pos, u.t AS token FROM occ),
+p0 AS (SELECT id, pos FROM o2 WHERE token = '{PHRASE[0]}'),
+p1 AS (SELECT id, pos FROM o2 WHERE token = '{PHRASE[1]}')
+SELECT p0.id AS doc_id, COUNT(*) AS n_matches,
+       CAST(MIN(p0.pos) AS BIGINT) AS first_pos
+FROM p0 JOIN p1 ON p0.id = p1.id AND p1.pos = p0.pos + 1
+GROUP BY p0.id
+""",
+    doc="The full index loop, end to end: documents STREAM into the "
+    "incremental postings sink (micro-batch partials + snapshot "
+    "compaction), then the phrase query runs FROM the folded index's "
+    "position lists — never touching document text. Result equals the "
+    "direct corpus phrase scan, which the oracle asserts.",
+)
+def q_streaming_index_phrase_search(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .streaming.windows import (
+        apply_runtime_confs,
+        docs_stream,
+        run_incremental_postings_sink,
+    )
+
+    apply_runtime_confs(spark)
+    path = tempfile.mkdtemp(prefix="invq_")
+    try:
+        doc_stream = docs_stream(spark, sf_dir)
+        folded = run_incremental_postings_sink(doc_stream, path)
+        return retrieval.phrase_search_postings(
+            folded, PHRASE
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@register(
+    "streaming_index_bm25_topk",
+    """
+WITH occ AS (
+    SELECT doc_id AS id, unnest(string_split(text, ' ')) AS token FROM documents
+),
+tf AS (
+    SELECT id, token, COUNT(*) AS tf FROM occ
+    WHERE token IN ('vector', 'stream', 'window')
+    GROUP BY id, token
+),
+dl AS (SELECT doc_id AS id, len(string_split(text, ' ')) AS dl FROM documents),
+stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
+dfreq AS (SELECT token, COUNT(*) AS dfreq FROM tf GROUP BY token),
+idf AS (
+    SELECT token, ln(1.0 + (n_docs - dfreq + 0.5) / (dfreq + 0.5)) AS idf
+    FROM dfreq CROSS JOIN stats
+),
+per AS (
+    SELECT tf.id,
+           CAST(ROUND(idf.idf * (tf.tf * (1.2 + 1))
+             / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / stats.avgdl))
+             * 1000000000) AS BIGINT) AS w_nano
+    FROM tf JOIN idf USING (token) JOIN dl ON tf.id = dl.id CROSS JOIN stats
+),
+scored AS (
+    SELECT id AS doc_id, COUNT(*) AS n_terms_matched,
+           CAST(SUM(w_nano) AS BIGINT) AS bm25_nano
+    FROM per GROUP BY id
+)
+SELECT doc_id, n_terms_matched, bm25_nano / 1e9 AS bm25
+FROM scored
+ORDER BY bm25_nano DESC, doc_id
+LIMIT 10
+""",
+    doc="Ranking off the streamed index: documents stream into the "
+    "incremental postings sink, and BM25 top-10 is computed FROM the "
+    "folded index (tf from matching postings, doc length as the "
+    "per-doc tf sum, df/constants from the same table — no text "
+    "access). Equals the direct text scorer, which the oracle asserts; "
+    "index maintenance therefore gives incrementally-correct ranking.",
+)
+def q_streaming_index_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .streaming.windows import (
+        apply_runtime_confs,
+        docs_stream,
+        run_incremental_postings_sink,
+    )
+
+    apply_runtime_confs(spark)
+    path = tempfile.mkdtemp(prefix="invbm_")
+    try:
+        from .operators.compaction import bm25_from_sink
+
+        doc_stream = docs_stream(spark, sf_dir)
+        run_incremental_postings_sink(doc_stream, path)
+        # serve THROUGH the materialized sink tables: tf from a
+        # token-pushdown postings scan, dl/avgdl/n_docs from the
+        # compaction-time dlen table — no corpus-scale pass per query
+        scored = bm25_from_sink(spark, path, BM25_QUERY_TERMS)
+        return (
+            scored.withColumn(
+                "bm25_nano", F.round(F.col("bm25") * 1e9).cast("long")
+            )
+            .orderBy(F.desc("bm25_nano"), F.asc("doc_id"))
+            .limit(10)
+            .select("doc_id", "n_terms_matched", "bm25")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@register(
+    "streaming_pyds_jsonl_sink",
+    """
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS cents
+FROM events
+GROUP BY event_type
+""",
+    doc="STREAMING half of the write-side Python DataSource "
+    "(DataSourceStreamWriter): the events stream writes through the "
+    "jsonl_manifest sink — per-task uuid part files, per-BATCH atomic "
+    "manifest commit keyed by batch id (replays rewrite their own "
+    "manifest, torn batches invisible) — then the committed manifests "
+    "are read back and re-aggregated; integer-exact equality with the "
+    "batch aggregate proves exactly-once delivery through the custom "
+    "streaming writer. Completes the Python DataSource API matrix: "
+    "batch/stream x read/write.",
+)
+def q_streaming_pyds_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .sources import pyds_sink
+    from .streaming.windows import apply_runtime_confs, events_stream
+
+    apply_runtime_confs(spark)
+    pyds_sink.register(spark)
+    root = tempfile.mkdtemp(prefix="jsonlstream_")
+    path = f"{root}/sink"
+    ckpt = f"{root}/ckpt"
+    try:
+        # repartition inside the stream: the one-file source otherwise
+        # feeds the Python sink a single write task per batch — widening
+        # here exercises parallel part-file commits under one manifest
+        ev = events_stream(spark, sf_dir).select(
+            "event_id",
+            "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("cents"),
+        ).repartition(8, "event_id")
+        q = (
+            ev.writeStream.format("jsonl_manifest")
+            .option("path", path)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        back = pyds_sink.read_jsonl_sink(
+            spark, path, "event_id bigint, event_type string, cents bigint"
+        )
+        return (
+            back.groupBy("event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum("cents").alias("cents"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+# --------------------------------------------------------------------------
+# Incremental model fit as a materialized view
+# (operators/sessions.py:trend_sums / read_trend_fit)
+# --------------------------------------------------------------------------
+
+
+@register(
+    "streaming_trend_fit_mv",
+    """
+WITH base AS (
+    SELECT user_id,
+           (CAST(epoch_us(ts) AS BIGINT) - 1704067200000000)
+               // 3600000000 AS x,
+           CAST(ROUND(value * 100) AS BIGINT) AS y
+    FROM events
+),
+s AS (
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(x) AS BIGINT) AS sx,
+           CAST(SUM(y) AS BIGINT) AS sy,
+           CAST(SUM(x * y) AS BIGINT) AS sxy,
+           CAST(SUM(x * x) AS BIGINT) AS sxx
+    FROM base GROUP BY user_id
+),
+fit AS (
+    SELECT user_id, n,
+           CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+             - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS den,
+           CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+             - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS num,
+           CAST(sy AS DOUBLE) AS syd, CAST(n AS DOUBLE) AS nd
+    FROM s
+)
+SELECT user_id, n AS n_events,
+       CASE WHEN den > 0
+            THEN CAST(ROUND((num / den) * 1000000) AS BIGINT) END
+           AS slope_ucents_per_hour,
+       CAST(ROUND((syd / nd) * 1000000) AS BIGINT) AS mean_cents_micro
+FROM fit
+""",
+    doc="Model fitting as an incrementally-maintained materialized view: "
+    "micro-batches land per-user normal-equation sums (n, Σx, Σy, Σxy, "
+    "Σx² — x in whole hours since a FIXED epoch so every component is "
+    "additive across batches) under idempotent parts/batch_id=N dirs; "
+    "the read side folds partials by summation and fits closed-form OLS "
+    "per user. The streamed fit over even event ids plus one late batch "
+    "partial of odd ids equals the one-shot fit over all events, which "
+    "the oracle asserts — per-batch maintenance is O(users touched), "
+    "the raw history is never re-scanned, and the fit is always "
+    "serveable mid-stream.",
+)
+def q_streaming_trend_fit_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .operators.compaction import _committed_partitions
+    from .operators.sessions import read_trend_fit, write_trend_partial
+    from .streaming.windows import apply_runtime_confs, replay_events_stream
+
+    apply_runtime_confs(spark)
+    path = tempfile.mkdtemp(prefix="trendmv_")
+    try:
+        even = replay_events_stream(spark, sf_dir).where(
+            F.col("event_id") % 2 == 0
+        )
+        ckpt = tempfile.mkdtemp(prefix="trendmv_ckpt_")
+        try:
+            q = (
+                even.writeStream.foreachBatch(
+                    lambda b, i: write_trend_partial(b, path, i)
+                )
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
+        odd = load_table(spark, sf_dir, "events").where(
+            F.col("event_id") % 2 == 1
+        )
+        nxt = (
+            max(_committed_partitions(spark, f"{path}/parts", "batch_id="))
+            + 1
+        )
+        write_trend_partial(odd, path, nxt)
+        return read_trend_fit(spark, path).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# Incremental tokenizer training: the pre-token count table maintained
+# as a sink-is-the-state additive MV; merges learned FROM the sink.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "streaming_bbpe_learn_mv",
+    _bbpe_learn_oracle(num_merges=10, min_count=2),
+    doc="Byte-level BPE learned from an INCREMENTALLY maintained "
+    "pre-token count sink: three disjoint document batches land as "
+    "(pt, cnt) partials (map-side combine to the sink), a compaction "
+    "folds the first two into a snapshot, the third stays as an "
+    "uncompacted partial — and training reads the folded counts. "
+    "Pre-tokenization is per-document, so the partials are additive "
+    "and sink-trained merges are EXACTLY the one-shot corpus merges — "
+    "which is why this entry's oracle is the SAME unrolled-CTE SQL as "
+    "bpe_learn_merges_bytes: the corpus-scale pass happens once per "
+    "batch at ingest; retraining sees only the vocab-sized count "
+    "table. Crash contract inherited from the agg-MV sink "
+    "(_SUCCESS-gated dirs, idempotent partial replays, snapshot-then-"
+    "vacuum).",
+)
+def q_streaming_bbpe_learn_mv(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    d = load_table(spark, sf_dir, "documents")
+    path = tempfile.mkdtemp(prefix="bbpesink_")
+    try:
+        bpe.write_pretoken_counts_partial(
+            d.where(F.col("doc_id") % 3 == 0), path, 0
+        )
+        bpe.write_pretoken_counts_partial(
+            d.where(F.col("doc_id") % 3 == 1), path, 1
+        )
+        bpe.compact_pretoken_counts(spark, path)
+        bpe.write_pretoken_counts_partial(
+            d.where(F.col("doc_id") % 3 == 2), path, 2
+        )
+        rows = bpe.learn_bbpe_merges_from_sink(spark, path, num_merges=10)
+        return spark.createDataFrame(
+            rows, "rank int, left string, right string, pair_count long"
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@register(
+    "streaming_length_quantiles_mv",
+    _qsketch_oracle(QSK_M, QSK_QPPMS, "n_chars"),
+    doc="The same quantile sketch maintained as a SINK-IS-THE-STATE "
+    "additive MV: three document batches land as (bucket, cnt) "
+    "partials (map-side combine to the sink), a compaction folds the "
+    "first two into a snapshot, the third stays as an uncompacted "
+    "partial — and quantiles are served from the folded sink. Crash "
+    "contract inherited from the agg-MV sink (_SUCCESS-gated dirs, "
+    "idempotent partial replays, snapshot-then-vacuum). The oracle is "
+    "the one-shot grid — sink-served == one-shot is exactly the "
+    "additivity equivalence.",
+)
+def q_streaming_length_quantiles_mv(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from .operators import quantiles as Q
+
+    docs = load_table(spark, sf_dir, "documents")
+    path = tempfile.mkdtemp(prefix="qsketchsink_")
+    try:
+        for k in range(2):
+            Q.write_sketch_partial(
+                docs.where(F.col("doc_id") % 3 == k), path, k, "n_chars",
+                QSK_M,
+            )
+        Q.compact_sketch(spark, path)
+        Q.write_sketch_partial(
+            docs.where(F.col("doc_id") % 3 == 2), path, 2, "n_chars", QSK_M
+        )
+        sk = Q.read_sketch(spark, path).localCheckpoint(eager=True)
+        return Q.quantile_sketch_query(sk, QSK_QPPMS, QSK_M)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@register(
+    "streaming_user_hll_mv",
+    _hll_oracle(),
+    doc="The same HLL registers maintained as SINK-IS-THE-STATE: three "
+    "event batches land as register-grid partials, a compaction "
+    "MAX-folds the first two into a snapshot, the third stays "
+    "uncompacted, and batch 1 is REPLAYED after compaction (register "
+    "MAX is idempotent, so the replay is exactly harmless — stronger "
+    "than the additive sinks' overwrite discipline, exercised here on "
+    "purpose). Estimates served from the folded sink == one-shot "
+    "build, which is why the oracle is the same one-pass SQL.",
+)
+def q_streaming_user_hll_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from .operators import sketches as S
+
+    ev = load_table(spark, sf_dir, "events")
+    path = tempfile.mkdtemp(prefix="hllsink_")
+    try:
+        for k in range(2):
+            S.write_hll_partial(
+                ev.where(F.col("event_id") % 3 == k),
+                path,
+                k,
+                "event_type",
+                "user_id",
+            )
+        S.compact_hll(spark, path)
+        S.write_hll_partial(
+            ev.where(F.col("event_id") % 3 == 2),
+            path,
+            2,
+            "event_type",
+            "user_id",
+        )
+        # replay batch 2's partial after the fold — idempotence means
+        # the re-landed dir changes nothing
+        S.write_hll_partial(
+            ev.where(F.col("event_id") % 3 == 2),
+            path,
+            2,
+            "event_type",
+            "user_id",
+        )
+        grid = S.read_hll(spark, path).localCheckpoint(eager=True)
+        est = S.hll_estimate(grid)
+        tru = ev.groupBy("event_type").agg(
+            F.countDistinct("user_id").alias("true_distinct")
+        )
+        return est.join(tru, est.key == tru.event_type).select(
+            "event_type",
+            "true_distinct",
+            "n_zero_registers",
+            "s24",
+            "hll_raw_est",
+            "est",
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@register(
+    "streaming_token_cms_mv",
+    CMS_TOPK_ORACLE,
+    doc="The count-min grid maintained as SINK-IS-THE-STATE: three "
+    "document batches land as (j, b, cnt) partial grids (map-side "
+    "combine to the sink), a compaction folds the first two into a "
+    "snapshot, the third stays as an uncompacted partial — and the "
+    "exact-top-20 probe estimates are served from the folded sink. "
+    "Grid cells are additive, so sink-served == one-shot build — the "
+    "oracle is corpus_token_cms_topk's SQL verbatim. Completes the "
+    "sketch family's state story: CMS folds by SUM, HLL by MAX, the "
+    "quantile histogram by SUM, all under the same _SUCCESS-gated "
+    "crash contract.",
+)
+def q_streaming_token_cms_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from .operators import sketches as S
+
+    docs = load_table(spark, sf_dir, "documents")
+    path = tempfile.mkdtemp(prefix="cmssink_")
+    try:
+        for k in range(2):
+            S.write_cms_partial(
+                docs.where(F.col("doc_id") % 3 == k),
+                path,
+                k,
+                depth=CMS_DEPTH,
+                width=CMS_WIDTH,
+            )
+        S.compact_cms(spark, path)
+        S.write_cms_partial(
+            docs.where(F.col("doc_id") % 3 == 2),
+            path,
+            2,
+            depth=CMS_DEPTH,
+            width=CMS_WIDTH,
+        )
+        cms = S.read_cms(spark, path).localCheckpoint(eager=True)
+        tokc = (
+            docs.select(F.explode(F.split(F.col("text"), " ")).alias("t"))
+            .where(F.col("t") != "")
+            .groupBy("t")
+            .agg(F.count("*").alias("c"))
+        )
+        top = tokc.orderBy(F.desc("c"), F.asc("t")).limit(CMS_TOPK)
+        est = S.cms_estimate(
+            cms,
+            top.select(F.col("t").alias("token")),
+            depth=CMS_DEPTH,
+            width=CMS_WIDTH,
+        )
+        return (
+            top.join(est, top.t == est.token)
+            .select("token", F.col("c").alias("true_cnt"), "cms_est")
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@register(
+    "streaming_user_kmv_mv",
+    _kmv_distinct_oracle(),
+    doc="The same KMV bottom-k sketch maintained as SINK-IS-THE-STATE: "
+    "three event batches land as flat (key, h) partials (<= k rows per "
+    "key each), a compaction min-k-folds the first two into a "
+    "snapshot, the third stays uncompacted, and batch 2 is REPLAYED "
+    "after landing (min-k over sets is idempotent — the replay is "
+    "exactly harmless by algebra, same guarantee class as the HLL "
+    "sink). Estimates and the hs_sum content checksum served from the "
+    "folded sink == one-shot build, which is why the oracle is the "
+    "same one-pass SQL.",
+)
+def q_streaming_user_kmv_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from .operators import sketches as S
+
+    ev = load_table(spark, sf_dir, "events")
+    path = tempfile.mkdtemp(prefix="kmvsink_")
+    try:
+        for k in range(2):
+            S.write_kmv_partial(
+                ev.where(F.col("event_id") % 3 == k),
+                path,
+                k,
+                "event_type",
+                "user_id",
+            )
+        S.compact_kmv(spark, path)
+        S.write_kmv_partial(
+            ev.where(F.col("event_id") % 3 == 2),
+            path,
+            2,
+            "event_type",
+            "user_id",
+        )
+        S.write_kmv_partial(
+            ev.where(F.col("event_id") % 3 == 2),
+            path,
+            2,
+            "event_type",
+            "user_id",
+        )
+        sk = S.read_kmv(spark, path).localCheckpoint(eager=True)
+        return _kmv_stats_with_truth(spark, sf_dir, sk)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@register(
+    "streaming_bloom_gate_mv",
+    _bloom_oracle(),
+    doc="The Bloom decontamination bitmap maintained as "
+    "SINK-IS-THE-STATE: the benchmark set lands in three batches as "
+    "(w, bits) partial bitmaps, a compaction OR-folds the first two "
+    "into a snapshot, the third stays uncompacted AND is REPLAYED "
+    "after landing (bit_or is idempotent — the replay is exactly "
+    "harmless by algebra, same guarantee class as the HLL/KMV sinks), "
+    "and the per-doc contamination audit is served with the folded "
+    "bitmap. Sink-served == one-shot build, which is why the oracle "
+    "is bloom_contamination_gate's SQL verbatim. Completes the "
+    "sketch-sink fold family: SUM (CMS, quantile histogram), MAX "
+    "(HLL), MIN-K (KMV), OR (Bloom).",
+)
+def q_streaming_bloom_gate_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from .catalog import widen_input as _widen
+    from .fixtures import documents_with_dups
+    from .operators import dedup as _dedup
+
+    corpus = _widen(documents_with_dups(spark, sf_dir))
+    train = corpus.where(F.col("doc_id") < 1_000_000)
+    bench = corpus.where(F.col("doc_id") >= 1_000_000)
+    path = tempfile.mkdtemp(prefix="bloomsink_")
+    try:
+        for k in range(2):
+            _dedup.write_bloom_partial(
+                bench.where(F.col("doc_id") % 3 == k),
+                path,
+                k,
+                n=BLOOM_N,
+                m_bits=BLOOM_M_BITS,
+            )
+        _dedup.compact_bloom(spark, path)
+        _dedup.write_bloom_partial(
+            bench.where(F.col("doc_id") % 3 == 2),
+            path,
+            2,
+            n=BLOOM_N,
+            m_bits=BLOOM_M_BITS,
+        )
+        _dedup.write_bloom_partial(
+            bench.where(F.col("doc_id") % 3 == 2),
+            path,
+            2,
+            n=BLOOM_N,
+            m_bits=BLOOM_M_BITS,
+        )
+        bloom = _dedup.read_bloom(spark, path).localCheckpoint(eager=True)
+        return _dedup.bloom_contamination(
+            train,
+            bench,
+            n=BLOOM_N,
+            m_bits=BLOOM_M_BITS,
+            bloom=bloom,
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# KMV under a REAL streaming query — streaming_user_kmv_mv lands partials
+# with batch writes to prove the fold algebra; this one drives the
+# actual writeStream.foreachBatch machinery (availableNow replay,
+# checkpointed micro-batches) into the same sink layout, compacts, and
+# serves — the full "distinct users per key, maintained by a stream,
+# intersectable later" deployment shape.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "streaming_kmv_foreachbatch",
+    _kmv_distinct_oracle(),
+    doc="KMV bottom-k sketches maintained by a REAL Structured "
+    "Streaming query: the events replay runs through writeStream."
+    "foreachBatch (availableNow, checkpointed), each micro-batch "
+    "reduced to its <= k-rows-per-key partial INSIDE the batch "
+    "callback (the corpus-scale work happens at ingest, the sink "
+    "stores sketch-sized state), then a compaction min-k-folds the "
+    "landed partials and the estimates are served from the folded "
+    "sketch. Min-k idempotence is what makes foreachBatch's "
+    "at-least-once replay contract EXACT here — a replayed batch "
+    "re-lands the same hashes. Oracle is the one-pass KMV SQL: "
+    "stream-built == one-shot is the end-to-end guarantee.",
+)
+def q_streaming_kmv_foreachbatch(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .operators import sketches as S
+    from .streaming.windows import replay_events_stream
+
+    path = tempfile.mkdtemp(prefix="kmvfeb_")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_kmvfeb_")
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        S.write_kmv_partial(
+            batch_df, path, batch_id, "event_type", "user_id"
+        )
+
+    try:
+        q = (
+            replay_events_stream(spark, sf_dir)
+            .writeStream.foreachBatch(write_batch)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        S.compact_kmv(spark, path)
+        sk = S.read_kmv(spark, path).localCheckpoint(eager=True)
+        return _kmv_stats_with_truth(spark, sf_dir, sk)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(path, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# streaming_sliding_kmv_windows — the r11 sliding dashboard served from
+# SINK STATE: a real foreachBatch stream lands per-HOUR bottom-k
+# partials (corpus-scale work at ingest; the sink holds O(hours × k)
+# state), compaction folds them, and the window/intersection dashboard
+# reads the folded sketches through the SAME gate-aware kmv_merge fold
+# as the batch twin. Min-k idempotence + associativity make
+# stream-built == one-shot build, which is why the oracle is literally
+# the batch twin's SQL.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "streaming_sliding_kmv_windows",
+    _kmv_sliding_oracle(),
+    doc="The events_sliding_kmv_windows dashboard served from "
+    "STREAMING SINK STATE (r11 verdict task #7): a checkpointed "
+    "availableNow foreachBatch stream reduces each micro-batch to its "
+    "per-hour bottom-64 partial inside the batch callback "
+    "(write_kmv_partial keyed by the hour; min-k idempotence makes "
+    "foreachBatch's at-least-once replay contract exact — pinned on "
+    "the MV twin), compact_kmv folds "
+    "the landed partials, and the 3-hour sliding windows + window-"
+    "over-window intersections are computed from the folded sink "
+    "sketches by the same associative gate-aware kmv_merge fold as "
+    "the batch twin (queries_round11.sliding_kmv_dashboard — shared "
+    "code, shared oracle: stream-built == one-shot is the end-to-end "
+    "guarantee). At 100 TB the corpus-scale pass happens once at "
+    "ingest; every later window/intersection/churn question reads "
+    "O(hours x k) sink state.",
+)
+def q_streaming_sliding_kmv_windows(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .operators import sketches as S
+    from .streaming.windows import replay_events_stream
+
+    path = tempfile.mkdtemp(prefix="kmvslide_")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_kmvslide_")
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # key = the hour as its canonical string (sink keys are
+        # strings); parsed back to timestamp_ntz on the serve side
+        hourly = batch_df.select(
+            F.date_trunc("hour", F.col("ts"))
+            .cast("string")
+            .alias("hr_s"),
+            "user_id",
+        )
+        S.write_kmv_partial(hourly, path, batch_id, "hr_s", "user_id")
+
+    try:
+        q = (
+            replay_events_stream(spark, sf_dir)
+            .writeStream.foreachBatch(write_batch)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        S.compact_kmv(spark, path)
+        sk_h = (
+            S.read_kmv(spark, path)
+            .select(
+                F.to_timestamp_ntz("key").alias("key"), "hs", "gate"
+            )
+            .localCheckpoint(eager=True)
+        )
+        ev = load_table(spark, sf_dir, "events")
+        return sliding_kmv_dashboard(ev, sk_h)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(path, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# streaming_user_value_sample_kmv — the consistent distinct-value
+# sampler served from STREAMING SINK STATE. Batch twin:
+# events_user_distinct_sample_kmv (queries_sketches). The sink keeps the
+# (h, v) pairs instead of bare hashes, so after ingest the pipeline can
+# serve "a stable uniform sample of each segment's distinct users"
+# without ever rescanning the corpus — the eval-set primitive at
+# 100 TB: the corpus-scale pass happens once in foreachBatch; every
+# later sample read is O(keys × k) sink state. Min-k idempotence makes
+# foreachBatch's at-least-once replay contract exact (same argument as
+# the counting sink, property-pinned in tests/test_round12.py), and
+# the min-k fold's associativity makes stream-built == one-shot — which
+# is why the oracle is literally the batch twin's SQL.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "streaming_user_value_sample_kmv",
+    _kmv_sample_oracle(),
+    doc=f"The events_user_distinct_sample_kmv bottom-{SAMPLE_K} "
+    "consistent user sample served from STREAMING SINK STATE (r12 "
+    "verdict ask #1): a checkpointed availableNow foreachBatch stream "
+    "reduces each micro-batch to its per-event-type bottom-k (hash, "
+    "user) VALUE partials (operators/sketches.py "
+    "write_kmv_sample_partial — flat (key, h, v, gate) rows, <= k per "
+    "key per batch), compact_kmv_sample folds them under the pre-fold "
+    "max_b bound (the r12 mid-compaction crash contract, shared with "
+    "every sketch sink), and the serve side reads the folded sample "
+    "through the same min-gate + refilter theta-union fold as the "
+    "batch twin. Emitted exploded as (event_type, rn, h, user_id) "
+    "with rn the hash-order position — identical to the batch twin, "
+    "because min-k idempotence + associativity make stream-built == "
+    "one-shot (the oracle IS the batch twin's SQL). At 100 TB the "
+    "corpus pass happens once at ingest; every later eval-set or "
+    "inspection-sample read is O(segments x k) sink state.",
+)
+def q_streaming_user_value_sample_kmv(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from .operators import sketches as S
+    from .streaming.windows import replay_events_stream
+
+    path = tempfile.mkdtemp(prefix="kmvsample_")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_kmvsample_")
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # keep_ppm default None matches the oracle's ungated build
+        # (micro-batches are not file-backed; a >1e7-row production
+        # batch threads keep_ppm="auto", n_rows=... — sketches.py docs)
+        S.write_kmv_sample_partial(
+            batch_df.select("event_type", "user_id"),
+            path,
+            batch_id,
+            "event_type",
+            "user_id",
+            k=SAMPLE_K,
+        )
+
+    try:
+        q = (
+            replay_events_stream(spark, sf_dir)
+            .writeStream.foreachBatch(write_batch)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        S.compact_kmv_sample(spark, path, k=SAMPLE_K)
+        folded = S.read_kmv_sample(spark, path, k=SAMPLE_K)
+        return (
+            folded.select(
+                F.col("key").alias("event_type"),
+                F.posexplode("sample").alias("pos", "hv"),
+            )
+            .select(
+                "event_type",
+                (F.col("pos") + 1).cast("long").alias("rn"),
+                F.col("hv.h").alias("h"),
+                F.col("hv.v").alias("user_id"),
+            )
+            # the sink dirs are deleted in finally — materialize before
+            # the temp state disappears from under the lazy plan
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(path, ignore_errors=True)
 
 
 @register(
@@ -575,9 +1893,6 @@ def q_streaming_scd2_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .operators.text import CLASSIFIER_BUCKETS as _CLS_BUCKETS  # noqa: E402
-from .operators.text import classifier_weights as _classifier_weights  # noqa: E402
-
 _CLS_W_STREAM = ", ".join(str(v) for v in _classifier_weights())
 
 
@@ -739,7 +2054,7 @@ def q_streaming_orders_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_contamination_gate",
-    None,  # oracle attached below — shared with the batch form
+    CONTAM_ORACLE,
     doc="Ingest-time decontamination gate: the document stream explodes "
     "to row-local distinct n-gram digests and inner-joins the STATIC "
     "benchmark digest table — a stateless stream-static join in append "
@@ -750,7 +2065,6 @@ def q_streaming_orders_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .fixtures import documents_with_dups
     from .operators.dedup import shingles
-    from .queries_round4 import CONTAM_N
     from .streaming.windows import apply_runtime_confs
 
     apply_runtime_confs(spark)
@@ -782,19 +2096,3 @@ def q_streaming_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFram
             F.count_distinct("bid").alias("n_bench_docs"),
         )
     )
-
-
-def _attach_contamination_oracle() -> None:
-    """The streaming gate's oracle IS the batch decontamination oracle
-    (identical splits, identical output contract)."""
-    import dataclasses
-
-    from .queries import REGISTRY
-
-    REGISTRY["streaming_contamination_gate"] = dataclasses.replace(
-        REGISTRY["streaming_contamination_gate"],
-        oracle=REGISTRY["ngram_overlap_contamination"].oracle,
-    )
-
-
-_attach_contamination_oracle()

@@ -12,9 +12,7 @@ from __future__ import annotations
 
 import pytest
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
-
-_load_extensions()
+from projet_etl_a_rien_spark.queries import REGISTRY
 
 # Queries whose fn() is eager (runs streaming jobs, driver-side k-means
 # iterations, or pipeline writes) — planned-only audits skip them.

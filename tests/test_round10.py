@@ -797,9 +797,8 @@ def test_gpt2_class_census_covers_all_classes(spark):
     pre-token class — if a pattern regression merged classes (e.g.
     contractions absorbed into words), the census would lose rows and
     this pins it independently of the oracle hash."""
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     rows = {
         r.cls: (r.n_pretokens, r.n_distinct)
         for r in REGISTRY["corpus_gpt2_pretoken_class_census"]
@@ -996,10 +995,9 @@ def test_ewma_matches_recursive_reference(spark):
     independently in Python on a constructed series."""
     import datetime as _dt
 
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
-    from projet_etl_a_rien_spark.queries_round10 import EWMA_W
+    from projet_etl_a_rien_spark.queries import REGISTRY
+    from projet_etl_a_rien_spark.queries_relational import EWMA_W
 
-    _load_extensions()
     fn = REGISTRY["events_user_ewma"].fn
     # use the real fixture so the ts/event_id ordering contract is the
     # production one; recompute the reference from the same parquet
@@ -1110,9 +1108,8 @@ def test_entity_resolution_invariants(spark, sf_dir):
     total."""
     import duckdb
 
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     out = REGISTRY["customer_entity_resolution"].fn(spark, sf_dir).collect()
     n_cust, total_cents = duckdb.sql(
         f"""SELECT COUNT(*),
@@ -1130,10 +1127,9 @@ def test_phash_exact_dup_distance_zero_and_pairs_complete(spark, sf_dir):
     """Planted exact duplicates land at hamming 0, every emitted pair
     respects the threshold, and the pair list is symmetric-free
     (id_a < id_b, no duplicates)."""
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
-    from projet_etl_a_rien_spark.queries_round10 import PHASH_MAX_HAMMING
+    from projet_etl_a_rien_spark.queries import REGISTRY
+    from projet_etl_a_rien_spark.queries_multimodal import PHASH_MAX_HAMMING
 
-    _load_extensions()
     rows = (
         REGISTRY["multimodal_phash_near_dup_pairs"]
         .fn(spark, sf_dir)

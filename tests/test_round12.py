@@ -395,9 +395,8 @@ def test_triangle_auto_empty_input_policy_parity(spark, tmp_path):
     (exact tier). Both sides must say (1, 1) with zero triangles."""
     import duckdb
 
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     sf = tmp_path / "sf_empty"
     sf.mkdir()
     spark.createDataFrame(

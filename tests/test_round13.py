@@ -131,9 +131,8 @@ def test_r1_bar_absent_artifact_is_empty(tmp_path):
 
 
 def test_streaming_value_sample_equals_batch_twin(spark, sf_dir):
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     got = sorted(
         tuple(r)
         for r in REGISTRY["streaming_user_value_sample_kmv"]

@@ -497,9 +497,8 @@ def test_scd2_pit_join_total_unique_and_key_partitioned(spark):
     """Every event must match EXACTLY one dimension version (half-open
     intervals, boundary -> later version), and the physical plan must be
     an equi-join on the key — not a nested loop over history."""
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     df = REGISTRY["events_scd2_pit_join"].fn(spark, "/root/testdata/sf0.001")
     n_events = load_table(spark, "/root/testdata/sf0.001", "events").count()
     assert df.count() == n_events

@@ -192,9 +192,8 @@ def test_prefix_join_no_cartesian_and_no_python(spark, sf_dir):
 
 
 def test_basket_lift_stat_tables_broadcast(spark, sf_dir):
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     plan = (
         REGISTRY["parts_basket_lift"].fn(spark, sf_dir)
         ._jdf.queryExecution().executedPlan().toString()
@@ -211,9 +210,8 @@ def test_basket_lift_stat_tables_broadcast(spark, sf_dir):
 def test_weighted_sample_key_formula_and_topk_plan(spark, sf_dir):
     import hashlib
 
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     df = REGISTRY["doc_weighted_sample"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan  # top-k, never a global sort
@@ -284,9 +282,8 @@ def test_feature_corr_perfect_linear_pair(spark, tmp_path):
             f"/root/testdata/sf0.001/{t}.parquet", f"{d}/{t}.parquet",
             dirs_exist_ok=True,
         ) if False else None
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     got = {
         (r["col_a"], r["col_b"]): r["corr"]
         for r in REGISTRY["lineitem_feature_corr"].fn(spark, d).collect()
@@ -298,9 +295,8 @@ def test_feature_corr_perfect_linear_pair(spark, tmp_path):
 
 
 def test_quality_percentile_rank_semantics(spark, sf_dir):
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     rows = REGISTRY["doc_quality_percentile_by_lang"].fn(spark, sf_dir).collect()
     by_lang = {}
     for r in rows:
@@ -407,9 +403,8 @@ def test_apply_changes_replay_idempotent(spark):
 
 
 def test_full_outer_join_reuses_groupby_exchange(spark, sf_dir):
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     plan = (
         REGISTRY["customer_yearly_rev_full_outer"].fn(spark, sf_dir)
         ._jdf.queryExecution().executedPlan().toString()

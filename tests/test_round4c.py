@@ -5,13 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
-
-_load_extensions()
+from projet_etl_a_rien_spark.queries import REGISTRY
 
 
 def test_diversity_sample_caps_and_determinism(spark, sf_dir):
-    from projet_etl_a_rien_spark.queries_llm import DIVERSITY_CAP
+    from projet_etl_a_rien_spark.queries_dedup import DIVERSITY_CAP
 
     q = REGISTRY["corpus_diversity_sample"].fn
     out = q(spark, sf_dir).persist()
@@ -36,7 +34,7 @@ def test_zone_map_skipping_is_conservative(spark, sf_dir):
     the value predicate skips almost none (the layout-correlation
     contrast the query documents)."""
     from projet_etl_a_rien_spark.catalog import load_table
-    from projet_etl_a_rien_spark.queries_extra import (
+    from projet_etl_a_rien_spark.queries_relational import (
         ZM_TS_HI,
         ZM_TS_LO,
         ZM_VAL_HI,

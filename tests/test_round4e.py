@@ -8,19 +8,13 @@ import importlib.util
 import pytest
 from pyspark.sql import functions as F
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
-
-# queries_streaming has a registration-order dependency on queries_round4
-# (it reuses its contamination oracle), so load through the extension
-# loader rather than importing the module directly.
-_load_extensions()
-
-from projet_etl_a_rien_spark.queries_streaming import (  # noqa: E402
+from projet_etl_a_rien_spark.queries import REGISTRY
+from projet_etl_a_rien_spark.queries_streaming import (
     _have_protobuf,
     q_streaming_click_attribution_outer,
     q_streaming_tws_user_type_totals,
 )
-from projet_etl_a_rien_spark.streaming.windows import (  # noqa: E402
+from projet_etl_a_rien_spark.streaming.windows import (
     replay_events_stream,
     tws_user_type_totals,
 )

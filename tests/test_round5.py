@@ -95,9 +95,8 @@ def test_decode_payloads_runs_real_png_decode(spark, sf_dir):
     Spark-built PNGs (varying filters) through decode_payloads match the
     locally computed metadata for every document."""
     register_builtin_png_codecs()
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     rows = REGISTRY["multimodal_png_roundtrip"].fn(spark, sf_dir).collect()
     docs = {
         r.doc_id: r.text
@@ -120,9 +119,8 @@ def test_bigram_logprob_properties(spark, sf_dir):
     is deterministic in this corpus), and a doc made entirely of the
     corpus's most predictable transitions scores higher than a doc of
     rare ones — i.e. the score orders fluency."""
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     rows = REGISTRY["doc_bigram_logprob"].fn(spark, sf_dir).collect()
     docs = load_table(spark, sf_dir, "documents")
     ntok = {
@@ -159,10 +157,9 @@ def test_source_temperature_mix_upweights_small_sources(spark, sf_dir):
     """T<1 flattens the source distribution: every below-average source
     must get a mix_weight ABOVE its natural share, every above-average
     source below it; weights sum to ~1 and targets to ~budget."""
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
-    from projet_etl_a_rien_spark.queries_round5 import MIX_BUDGET
+    from projet_etl_a_rien_spark.queries import REGISTRY
+    from projet_etl_a_rien_spark.queries_curation import MIX_BUDGET
 
-    _load_extensions()
     rows = REGISTRY["source_temperature_mix"].fn(spark, sf_dir).collect()
     n = sum(r.n_docs for r in rows)
     for r in rows:
@@ -176,10 +173,9 @@ def test_source_temperature_mix_upweights_small_sources(spark, sf_dir):
 
 
 def test_corpus_shuffle_shards_is_deterministic_permutation(spark, sf_dir):
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
-    from projet_etl_a_rien_spark.queries_round5 import SHUFFLE_SHARDS
+    from projet_etl_a_rien_spark.queries import REGISTRY
+    from projet_etl_a_rien_spark.queries_curation import SHUFFLE_SHARDS
 
-    _load_extensions()
     fn = REGISTRY["corpus_shuffle_shards"].fn
     a = {(r.doc_id): (r.shard, r.pos) for r in fn(spark, sf_dir).collect()}
     b = {(r.doc_id): (r.shard, r.pos) for r in fn(spark, sf_dir).collect()}

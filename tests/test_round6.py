@@ -670,19 +670,18 @@ def test_shard_manifest_detects_single_doc_change(spark, sf_dir):
     """The checksum is layout-independent (repartition → identical
     manifest) and sensitive (one changed doc flips exactly its shard's
     checksum while counts stay equal)."""
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     fn = REGISTRY["corpus_shard_manifest"].fn
     base = {r.shard: r for r in fn(spark, sf_dir).collect()}
 
-    import projet_etl_a_rien_spark.queries_round6 as r6
-    docs = r6._docs(spark, sf_dir)
+    import projet_etl_a_rien_spark.queries_curation as cur
+    docs = cur.load_table(spark, sf_dir, "documents")
     # same data, different physical layout
     relaid = docs.repartition(7, "source")
-    orig_docs = r6._docs
+    orig_load = cur.load_table
     try:
-        r6._docs = lambda s, d: relaid
+        cur.load_table = lambda s, d, name: relaid
         relaid_m = {r.shard: r for r in fn(spark, sf_dir).collect()}
         assert {(k, v.content_checksum) for k, v in base.items()} == {
             (k, v.content_checksum) for k, v in relaid_m.items()
@@ -693,10 +692,10 @@ def test_shard_manifest_detects_single_doc_change(spark, sf_dir):
             F.when(F.col("doc_id") == 7, F.concat(F.col("text"), F.lit(" x")))
             .otherwise(F.col("text")),
         )
-        r6._docs = lambda s, d: tampered
+        cur.load_table = lambda s, d, name: tampered
         tm = {r.shard: r for r in fn(spark, sf_dir).collect()}
     finally:
-        r6._docs = orig_docs
+        cur.load_table = orig_load
     diff_shards = [
         k for k in base
         if tm[k].content_checksum != base[k].content_checksum
@@ -886,9 +885,8 @@ def test_bpe_fold_matches_python_greedy(spark, seed):
 def test_pareto_rank_equals_spec_order(spark, sf_dir):
     """The bucketed global rank reproduces the (cents desc, id) spec
     exactly: decile totals equal a driver-side sorted computation."""
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     got = {
         r.decile: (r.n_customers, r.cents, r.cum_cents)
         for r in REGISTRY["customer_revenue_pareto"].fn(spark, sf_dir).collect()
@@ -917,11 +915,12 @@ def test_pareto_rank_equals_spec_order(spark, sf_dir):
 def test_driver_sampling_order_derives_from_artifacts():
     """The rotation ledger reads CORRECTNESS_r*.json directly: after
     the explicit _DRIVER_PRIORITY override block (entries whose
-    implementation changed this round and need a fresh driver row
-    despite fresh ledger evidence), every name with a green row in any
-    round sorts AFTER every name without one, and within the checked
-    set older evidence sorts first."""
-    from projet_etl_a_rien_spark.queries import (
+    implementation changed and need a fresh driver row despite fresh
+    ledger evidence), every name with a green row in any round sorts
+    AFTER every name without one, within the checked set older evidence
+    sorts first, and names tied on evidence sort by name — so the order
+    does not depend on which module registers a query."""
+    from __spark_entry__ import (
         _DRIVER_PRIORITY,
         _correctness_evidence,
         _ordered_names,
@@ -945,3 +944,6 @@ def test_driver_sampling_order_derives_from_artifacts():
     # monotone by freshest-green round within the checked set
     rounds = [ledger[n] for n in rest if n in ledger]
     assert rounds == sorted(rounds)
+    # ties inside one evidence round break by name
+    assert rest == sorted(rest, key=lambda n: (ledger.get(n, 0), n))
+    assert len(set(rounds)) < len(rounds)  # the tie rule is exercised

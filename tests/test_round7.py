@@ -218,7 +218,7 @@ def test_bpe_encode_oracle_replace_chain_semantics(spark):
     DuckDB against the Spark fold."""
     import duckdb
 
-    from projet_etl_a_rien_spark.queries_round6 import _bpe_encode_oracle
+    from projet_etl_a_rien_spark.queries_tokenizer import _bpe_encode_oracle
 
     merges = [(1, "a", "a", 9), (2, "aa", "a", 5), (3, "aa", "aa", 3)]
     texts = ["aaaa aaa aa a", "aaaaa b ab ba", "aaaaaaaa"]

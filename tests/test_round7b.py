@@ -3,7 +3,7 @@ redaction, hourly gap-fill resample, ORC roundtrip.
 
 Semantics are unit-pinned here on tiny literal frames; cross-engine
 hash-exactness is separately enforced by the DuckDB oracles
-(tools/driver_mimic.py over queries_round7 registrations).
+(tools/driver_mimic.py over the registrations).
 """
 
 from __future__ import annotations
@@ -154,7 +154,7 @@ def test_gap_fill_semantics(spark, monkeypatch, tmp_path):
     starts at the first event), n_events=0 marks gaps."""
     import datetime as dt
 
-    from projet_etl_a_rien_spark import queries_round7 as R
+    from projet_etl_a_rien_spark import queries_relational as R
 
     rows = [
         (1, dt.datetime(2024, 1, 1, 5, 10), 0, "c", 1.25, "{}"),
@@ -199,7 +199,7 @@ def test_epoch_oversample_hits_targets_exactly(spark, sf_dir):
     """Largest-remainder allocation: the materialized epoch's per-source
     row counts equal the integer sample targets EXACTLY (no sampling
     variance), and the grand total equals the budget."""
-    from projet_etl_a_rien_spark import queries_round7 as R
+    from projet_etl_a_rien_spark import queries_curation as R
 
     out = R.q_corpus_epoch_oversample(spark, sf_dir)
     per = {
@@ -235,7 +235,7 @@ def test_epoch_oversample_hits_targets_exactly(spark, sf_dir):
 def test_epoch_oversample_copy_idx_dense(spark, sf_dir):
     """copy_idx enumerates 1..n_copies per doc (dense, no gaps): max
     copy_idx per doc equals that doc's row count."""
-    from projet_etl_a_rien_spark import queries_round7 as R
+    from projet_etl_a_rien_spark import queries_curation as R
     from pyspark.sql import functions as F2
 
     out = R.q_corpus_epoch_oversample(spark, sf_dir)
@@ -255,7 +255,7 @@ def test_csv_permissive_audit_counts(spark, sf_dir):
     """The parser-derived corrupt/null counts equal the injection-rule
     counts (PERMISSIVE semantics: short/badnum/extra all corrupt;
     only short/badnum null the cents field)."""
-    from projet_etl_a_rien_spark import queries_round7 as R
+    from projet_etl_a_rien_spark import queries_relational as R
     from projet_etl_a_rien_spark.catalog import load_table
 
     got = R.q_csv_permissive_audit(spark, sf_dir)
@@ -287,7 +287,7 @@ def test_interpolate_semantics(spark, monkeypatch, tmp_path):
     (last-in-hour) value."""
     import datetime as dt
 
-    from projet_etl_a_rien_spark import queries_round7 as R
+    from projet_etl_a_rien_spark import queries_relational as R
 
     rows = [
         (1, dt.datetime(2024, 1, 1, 5, 10), 0, "c", 1.00, "{}"),
@@ -369,7 +369,7 @@ def test_bpe_learn_oracle_early_stop(spark):
     import duckdb
 
     from projet_etl_a_rien_spark.operators.bpe import END
-    from projet_etl_a_rien_spark.queries_round6 import _bpe_learn_oracle
+    from projet_etl_a_rien_spark.queries_tokenizer import _bpe_learn_oracle
 
     texts = ["ab ab xq", "ab zz"]
     con = duckdb.connect()
@@ -414,7 +414,7 @@ def test_bpe_learn_oracle_early_stop(spark):
 def test_bloom_contamination_soundness(spark, sf_dir):
     """Bloom filters have NO false negatives: every exact hit must also
     be a bloom hit, and false positives are exactly bloom - exact."""
-    from projet_etl_a_rien_spark import queries_round7 as R
+    from projet_etl_a_rien_spark import queries_dedup as R
 
     df = R.q_bloom_contamination_gate(spark, sf_dir)
     bad = df.where(

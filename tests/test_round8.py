@@ -308,7 +308,7 @@ def test_triangle_estimate_error_bound_sf001(spark):
     (measured: 0.15%), and the deterministic coin keeps ~half the
     edges. The estimate must also be exactly 8x the sampled-subgraph
     triangle count (pure integer scaling, no float drift)."""
-    from projet_etl_a_rien_spark import queries_round8 as R8
+    from projet_etl_a_rien_spark import queries_graph as R8
     from projet_etl_a_rien_spark.operators import graph
 
     sf = "/root/testdata/sf0.01"
@@ -732,7 +732,7 @@ def test_stream_chunk_assemble_crosses_doc_boundary(spark, sf_dir):
     positions, and (fixture-guaranteed: docs are shorter than a chunk)
     spans more than one document — the cross-boundary property that
     distinguishes stream chunking from per-doc windowing."""
-    from projet_etl_a_rien_spark import queries_round8 as R8
+    from projet_etl_a_rien_spark import queries_curation as R8
 
     rows = R8.q_corpus_stream_chunk_assemble(spark, sf_dir).collect()
     assert len(rows) == R8.CHUNK_TOKENS
@@ -749,7 +749,7 @@ def test_leakage_safe_split_keeps_clusters_together(spark, sf_dir):
     entirely in ONE split (zero boundary-straddling clusters), while
     the plain per-doc hash split demonstrably CAN straddle them on the
     same corpus — the gap this operator closes."""
-    from projet_etl_a_rien_spark import queries_round8 as R8
+    from projet_etl_a_rien_spark import queries_dedup as R8
     from projet_etl_a_rien_spark.operators.text import split_bucket
 
     out = R8.q_doc_split_leakage_safe(spark, sf_dir)
@@ -845,7 +845,7 @@ def test_codeswitch_detects_mixed_language_doc(spark):
     """A handcrafted bilingual document (one English segment, one
     Spanish segment) reports n_langs=2 with a 50% majority share; a
     monolingual one reports n_langs=1 at 100%."""
-    from projet_etl_a_rien_spark import queries_round8 as R8
+    from projet_etl_a_rien_spark import queries_curation as R8
     from projet_etl_a_rien_spark.operators.text import lang_pred_col
 
     s = R8.CS_SEG_TOKENS

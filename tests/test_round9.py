@@ -415,19 +415,18 @@ def test_triangle_estimate_p10_error_bound_sf001(spark):
     6.2% with 388 sampled triangles — 1/sqrt(n) noise at this scale;
     at the 10^9-edge scale the policy targets, the sampled triangle
     count is millions and the bound tightens accordingly)."""
-    from projet_etl_a_rien_spark import queries_round8 as R8
-    from projet_etl_a_rien_spark import queries_round9 as R9
+    from projet_etl_a_rien_spark import queries_graph as G
     from projet_etl_a_rien_spark.operators import graph
 
     sf = "/root/testdata/sf0.01"
-    edges = R8._copurchase_edges(spark, sf)
+    edges = G._copurchase_edges(spark, sf)
     exact = (
         graph.triangle_counts(edges)
         .agg(F.expr("sum(n_triangles) DIV 3").alias("t"))
         .collect()[0]
         .t
     )
-    row = R9.q_parts_triangle_estimate_p10(spark, sf).collect()[0]
+    row = G.q_parts_triangle_estimate_p10(spark, sf).collect()[0]
     assert row.est_triangles == row.n_sampled_triangles * 1000
     assert abs(row.est_triangles - exact) / exact < 0.15
     n_edges = (

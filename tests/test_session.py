@@ -87,9 +87,8 @@ def test_static_conf_is_left_to_the_builder(spark, monkeypatch):
 
 
 def test_warm_rerun_compiles_no_code(spark, sf_dir):
-    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from projet_etl_a_rien_spark.queries import REGISTRY
 
-    _load_extensions()
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     q1 = REGISTRY["tpch_q1_pricing_summary"]
     q1.fn(spark, sf_dir).collect()

@@ -24,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+from projet_etl_a_rien_spark.queries import REGISTRY
 
 
 def _formatted_plan(df) -> str:
@@ -65,7 +65,6 @@ def main() -> None:
     ap.add_argument("--no-time", action="store_true", help="plan capture only")
     args = ap.parse_args()
 
-    _load_extensions()
     names = args.names
     if not names:
         import bench

@@ -27,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+from projet_etl_a_rien_spark.queries import REGISTRY
 from projet_etl_a_rien_spark.session import get_spark
 
 WALL_FLAG_SEC = 1.0
@@ -35,7 +35,6 @@ WIDTH_FLAG = 2
 
 
 def main() -> int:
-    _load_extensions()
     import bench
 
     if "--all" in sys.argv[1:]:

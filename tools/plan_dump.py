@@ -27,7 +27,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+from projet_etl_a_rien_spark.queries import REGISTRY
 from projet_etl_a_rien_spark.session import get_spark
 
 
@@ -44,7 +44,6 @@ def normalize(plan: str) -> str:
 
 
 def main() -> None:
-    _load_extensions()
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     unknown = [n for n in names if n not in REGISTRY]

@@ -47,7 +47,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+from projet_etl_a_rien_spark.queries import REGISTRY
 from projet_etl_a_rien_spark.session import get_spark
 
 BASE = "/root/testdata/sf0.1"
@@ -371,7 +371,6 @@ def time_queries(spark, sf_dir: str, runs: int = 2) -> dict[str, dict]:
 
 
 def main() -> None:
-    _load_extensions()
     spark = get_spark("scale-bench")
     if "--rebuild" in sys.argv and os.path.isdir(OUT):
         shutil.rmtree(OUT)

@@ -23,7 +23,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+from projet_etl_a_rien_spark.queries import REGISTRY
 from projet_etl_a_rien_spark.session import get_spark
 
 # Claimed-zero-shuffle projections, then the shuffle-bearing shapes whose
@@ -136,7 +136,6 @@ def stage_totals(base: str) -> dict[int, tuple[int, int, int]]:
 
 
 def main() -> None:
-    _load_extensions()
     # argv names override the standard PROFILE list (targeted passes
     # over the exchanges a round changed); ZERO_EXPECTED applies only
     # to names actually profiled

@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+from projet_etl_a_rien_spark.queries import REGISTRY
 from projet_etl_a_rien_spark.session import get_spark
 
 DIR_ALIASES = {
@@ -79,5 +79,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    _load_extensions()
     main()
