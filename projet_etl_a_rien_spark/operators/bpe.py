@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .compaction import compact_sink, fold_inputs, write_partial
 from .text import tokens, widen_narrow_input
 
 END = "</w>"
@@ -762,8 +763,7 @@ def write_pretoken_counts_partial(
     pretoken_re: str = BYTE_PRETOKEN_RE,
 ) -> None:
     """Reduce one micro-batch to (pt, cnt) partials and land them
-    idempotently under ``parts/batch_id=N`` (map-side combine to the
-    sink; replays overwrite the same dir)."""
+    (map-side combine to the sink)."""
     part = (
         widen_narrow_input(batch_df)
         .select(
@@ -776,63 +776,31 @@ def write_pretoken_counts_partial(
         .groupBy("pt")
         .agg(F.count("*").alias("cnt"))
     )
-    part.write.mode("overwrite").parquet(f"{path}/parts/batch_id={batch_id}")
+    write_partial(part, path, batch_id)
 
 
 def read_pretoken_counts(
     spark: SparkSession, path: str, max_b: int | None = None
 ) -> DataFrame:
-    """Current folded (pt, cnt): newest committed snapshot + committed
-    partials above the fold watermark, summed per pre-token. Same
-    crash-safety rules as ``read_agg_sink`` (only _SUCCESS-committed
-    dirs on either side; partials at or below the snapshot version are
-    skipped even if their dirs linger). ``max_b`` is the compaction
-    fold bound — load-bearing for an additive fold (a mid-compaction
-    partial folded under a higher label would double-count)."""
-    from .compaction import _committed_partitions, _snapshot_version
-
-    v = _snapshot_version(spark, path)
-    parts = [
-        f"{path}/parts/batch_id={b}"
-        for b in _committed_partitions(spark, f"{path}/parts", "batch_id=")
-        if b > v and (max_b is None or b <= max_b)
-    ]
-    if v >= 0:
-        parts.append(f"{path}/snap/v={v}")
-    if not parts:
+    """Current folded (pt, cnt): the per-pre-token SUM over
+    ``compaction.fold_inputs``. ``max_b`` is its fold bound —
+    load-bearing for an additive fold (a mid-compaction partial folded
+    under a higher label would double-count)."""
+    paths = fold_inputs(spark, path, max_b)
+    if not paths:
         return spark.createDataFrame([], "pt string, cnt bigint")
     return (
-        spark.read.parquet(*parts)
+        spark.read.parquet(*paths)
         .groupBy("pt")
         .agg(F.sum("cnt").alias("cnt"))
     )
 
 
 def compact_pretoken_counts(spark: SparkSession, path: str) -> int:
-    """Fold committed partials into ``snap/v=maxBatch`` and vacuum the
-    folded dirs — snapshot commit first, deletes after (the standard
-    crash order). Returns the new version."""
-    from .compaction import (
-        _committed_partitions,
-        _snapshot_version,
-        _vacuum_partitions,
+    """``compaction.compact_sink`` with the per-pre-token SUM fold."""
+    return compact_sink(
+        spark, path, lambda b: read_pretoken_counts(spark, path, b)
     )
-
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    fold = read_pretoken_counts(spark, path, max_b=max_b).localCheckpoint(
-        eager=True
-    )
-    fold.write.mode("overwrite").parquet(f"{path}/snap/v={max_b}")
-    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
-    keep = sorted(
-        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
-    )[:1]
-    _vacuum_partitions(spark, f"{path}/snap", "v=", below=min(keep))
-    return max_b
 
 
 def learn_bbpe_merges_from_sink(

@@ -88,39 +88,44 @@ def apply_changes(
 
 
 # ---------------------------------------------------------------------------
-# Incremental aggregate materialized view (partials + snapshot compaction)
+# Sink-is-the-state protocol (partials + snapshot compaction)
 # ---------------------------------------------------------------------------
 #
 # Sink layout:
-#   {path}/parts/batch_id={B}/   per-micro-batch PARTIAL aggregates
-#                                (one row per key: n, cents), written with
-#                                overwrite so checkpoint-recovery replays
-#                                rewrite instead of duplicating
+#   {path}/parts/batch_id={B}/   per-micro-batch PARTIAL state, written
+#                                with overwrite so checkpoint-recovery
+#                                replays rewrite instead of duplicating
 #   {path}/snap/v={V}/           snapshot = fold of every partial with
 #                                batch_id <= V
 #
 # Readers fold (newest snapshot) ∪ (partials with batch_id > V) — the
 # version IS the fold watermark, so a crash between snapshot-write and
 # partial-cleanup cannot double count: stale partials are excluded by the
-# filter, and deleting them is pure space reclamation. This is the
-# aggregate analogue of the sink-is-the-state dedup/CDC sinks: the MV is
+# filter, and deleting them is pure space reclamation. The state is
 # maintained with O(keys) work per batch, never a re-scan of raw history,
 # and compaction bounds read-side fan-in (fold cost tracks snapshots=1 +
 # batches-since-compaction, not stream lifetime).
+#
+# This module is the only one that knows the layout. Each sink family
+# supplies its own algebra — the reduce that builds its partial and the
+# fold (with its empty-result schema) over ``fold_inputs`` — and
+# delegates landing to ``write_partial`` and maintenance to
+# ``compact_sink``: the aggregate MV and postings index below, the
+# quantile histogram (SUM), HLL registers (MAX), KMV bottom-k and value
+# sample (MIN-K), count-min grid (SUM), Bloom bitmap (bit-OR), pre-token
+# counts (SUM) and the trend-fit sums.
+
+# every per-version table of a sink: the snapshot and the tables derived
+# from it (the postings index's stats/dlen), retained together
+_VERSIONED = ("snap", "stats", "dlen")
 
 
-def write_agg_partial(
-    batch_df: DataFrame, path: str, batch_id: int, key_col: str = "event_type"
-) -> None:
-    """Reduce one micro-batch to per-key exact-cents partials and land
-    them idempotently under ``parts/batch_id=N`` (map-side combine to the
-    sink: partial aggregation is associative, so the fold of partials
-    equals the aggregate of the union)."""
-    part = batch_df.groupBy(key_col).agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
-    )
-    part.write.mode("overwrite").parquet(f"{path}/parts/batch_id={batch_id}")
+def _part_dir(path: str, batch_id: int) -> str:
+    return f"{path}/parts/batch_id={batch_id}"
+
+
+def _snap_dir(path: str, v: int) -> str:
+    return f"{path}/snap/v={v}"
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -163,159 +168,10 @@ def _snapshot_version(spark: SparkSession, path: str) -> int:
     job-commit of ``snap/v=N`` can leave a partially visible snapshot;
     preferring it would undercount AND wedge compaction (``max_b <= v``
     never re-folds). Ignoring marker-less versions keeps torn snapshots
-    invisible, and the next ``compact_agg_sink`` overwrites the torn dir
+    invisible, and the next ``compact_sink`` overwrites the torn dir
     (same ``v = max batch_id``) — that overwrite IS the repair path."""
     vs = _committed_partitions(spark, f"{path}/snap", "v=")
     return max(vs) if vs else -1
-
-
-def read_agg_sink(
-    spark: SparkSession,
-    path: str,
-    key_col: str = "event_type",
-    as_of: int | None = None,
-) -> DataFrame:
-    """Current MV contents: newest snapshot folded with every partial
-    NEWER than it. Partials at or below the snapshot version are already
-    folded in and are skipped even if their directories still exist
-    (crash-safe read — cleanup is optional).
-
-    Returns a LAZY plan pinned to the files listed at planning time:
-    execute (or ``localCheckpoint``) it BEFORE the next
-    ``compact_agg_sink`` on the same path — compaction vacuums folded
-    partials and superseded snapshots, and a still-lazy reader would
-    then hit missing files (the watermark filter makes stale STATE
-    harmless, it cannot protect against deleted FILES — the standard
-    reader-vs-vacuum window every table format has).
-
-    Only COMMITTED directories (``_SUCCESS`` present) are read, on both
-    the snapshot and the partial side: a torn partial folded here (and
-    then into a snapshot) would undercount permanently, because the
-    stream's idempotent-replay rewrite of ``parts/batch_id=N`` lands at
-    or below the fold watermark and is never re-read.
-
-    TIME TRAVEL: ``as_of=B`` reconstructs the MV as of batch ``B`` —
-    the newest retained snapshot with version <= B folded with committed
-    partials in (version, B]. Resolution is bounded by retention:
-    ``compact_agg_sink(retain_snapshots=k)`` keeps the k newest
-    snapshot versions (folded partials are always vacuumed), so the
-    reachable time-travel points are exactly: each retained snapshot
-    version, and any batch at or above the NEWEST snapshot (rebuilt
-    from still-unfolded partials). Any other ``as_of`` raises rather
-    than silently undercounting — including a point BETWEEN two
-    retained snapshots (e.g. retained v=5 and v=9, ``as_of=7``): the
-    batches in (5, 7] were folded into v=9 and their partial dirs
-    vacuumed, so an exact as-of-7 state is no longer reconstructible
-    and returning the v=5 state would mislabel it."""
-    versions = _committed_partitions(spark, f"{path}/snap", "v=")
-    if as_of is None:
-        v = max(versions) if versions else -1
-    else:
-        eligible = [x for x in versions if x <= as_of]
-        v = max(eligible) if eligible else -1
-        if v < 0 and versions and min(versions) > as_of:
-            newest_parts = _committed_partitions(
-                spark, f"{path}/parts", "batch_id="
-            )
-            if not any(b <= as_of for b in newest_parts):
-                raise ValueError(
-                    f"as_of={as_of} predates the oldest retained snapshot "
-                    f"(v={min(versions)}) and no partials survive there; "
-                    "raise retain_snapshots at compaction time"
-                )
-        elif versions and v < as_of < max(versions):
-            # Between two retained snapshots: batches in (v, as_of]
-            # were folded into the newer snapshot and vacuumed (the
-            # fold is all-or-nothing up to its watermark), so exact
-            # reconstruction is impossible; a gap in batch ids is
-            # indistinguishable from a vacuum, so raise either way.
-            nxt = min(x for x in versions if x > as_of)
-            raise ValueError(
-                f"as_of={as_of} falls between retained snapshots "
-                f"v={v} and v={nxt}: batches in ({v}, {as_of}] were "
-                "folded into the newer snapshot and vacuumed, so an "
-                "exact as-of reconstruction is impossible; reachable "
-                "points are the retained snapshot versions and any "
-                "batch at or above the newest snapshot — raise "
-                "retain_snapshots at compaction time"
-            )
-    pieces = []
-    if v >= 0:
-        pieces.append(
-            spark.read.option("basePath", f"{path}/snap")
-            .parquet(f"{path}/snap/v={v}")
-            .select(key_col, "n", "cents")
-        )
-    newer = sorted(
-        b
-        for b in _committed_partitions(spark, f"{path}/parts", "batch_id=")
-        if b > v and (as_of is None or b <= as_of)
-    )
-    if newer:
-        pieces.append(
-            spark.read.option("basePath", f"{path}/parts")
-            .parquet(*[f"{path}/parts/batch_id={b}" for b in newer])
-            .select(key_col, "n", "cents")
-        )
-    if not pieces:
-        return spark.createDataFrame([], f"{key_col} string, n long, cents long")
-    merged = pieces[0]
-    for p in pieces[1:]:
-        merged = merged.unionByName(p)
-    return merged.groupBy(key_col).agg(
-        F.sum("n").alias("n"), F.sum("cents").alias("cents")
-    )
-
-
-def compact_agg_sink(
-    spark: SparkSession,
-    path: str,
-    key_col: str = "event_type",
-    retain_snapshots: int = 1,
-) -> int:
-    """Fold everything visible now into snapshot ``v = max folded
-    batch_id`` and drop the folded partial directories. The snapshot is
-    localCheckpointed before writing (it reads the previous snapshot
-    path it may logically overwrite), and the deletes run only after the
-    snapshot commit — a crash in between leaves stale partials that
-    readers already exclude. Returns the new version (or the current one
-    when there is nothing new to fold).
-
-    Single-writer maintenance contract: the vacuum step deletes files,
-    so any LAZY DataFrame from an earlier ``read_agg_sink`` must be
-    materialized before calling this (see ``read_agg_sink``).
-
-    ``retain_snapshots``: how many newest snapshot versions to KEEP at
-    vacuum time (default 1 = current behavior). Each retained version is
-    a time-travel point for ``read_agg_sink(as_of=...)`` — the same
-    retention/vacuum trade every table format exposes."""
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    # as_of=max_b bounds the fold to the batches this snapshot is
-    # labeled with: a partial landing mid-compaction stays above the
-    # new watermark instead of being folded-but-also-still-readable
-    # (additive fold => that overlap would double-count) and the
-    # vacuum below max_b+1 provably deletes only folded partials
-    fold = read_agg_sink(spark, path, key_col, as_of=max_b).localCheckpoint(
-        eager=True
-    )
-    fold.write.mode("overwrite").parquet(f"{path}/snap/v={max_b}")
-    # Space reclamation only — readers already filter batch_id <= max_b,
-    # and always fold the NEWEST snapshot, so folded partials and
-    # superseded snapshot versions are both dead weight (single-writer
-    # maintenance contract, like every table-format vacuum). Folded
-    # partials are those at OR below the new version; superseded
-    # snapshots are those strictly below it (v == max_b is the one just
-    # committed).
-    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
-    keep = sorted(
-        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
-    )[: max(1, retain_snapshots)]
-    _vacuum_partitions(spark, f"{path}/snap", "v=", below=min(keep))
-    return max_b
 
 
 def _vacuum_partitions(
@@ -339,6 +195,221 @@ def _vacuum_partitions(
             continue
         if n < below:
             fs.delete(st.getPath(), True)
+
+
+def write_partial(df: DataFrame, path: str, batch_id: int) -> None:
+    """Land one micro-batch's already-reduced partial idempotently under
+    ``parts/batch_id=N``: a checkpoint-recovery replay overwrites the
+    same dir instead of duplicating it."""
+    df.write.mode("overwrite").parquet(_part_dir(path, batch_id))
+
+
+def next_batch_id(spark: SparkSession, path: str) -> int:
+    """The first batch id above everything the sink has committed —
+    snapshot versions and partials alike (0 for an empty sink). A
+    partial landed there is never at or below the fold watermark, so it
+    is never silently excluded, and never overwrites a committed one."""
+    parts = _committed_partitions(spark, f"{path}/parts", "batch_id=")
+    return max([_snapshot_version(spark, path), *parts]) + 1
+
+
+def _resolve_fold(
+    spark: SparkSession, path: str, as_of: int | None
+) -> tuple[int, list[int]]:
+    """The snapshot version (-1 for none) and the newer committed batch
+    ids a read folds, bounded by ``as_of``; see :func:`fold_inputs`."""
+    versions = _committed_partitions(spark, f"{path}/snap", "v=")
+    parts = _committed_partitions(spark, f"{path}/parts", "batch_id=")
+    if as_of is None:
+        v = max(versions) if versions else -1
+    else:
+        v = max((x for x in versions if x <= as_of), default=-1)
+        if v < 0 and versions:
+            if not any(b <= as_of for b in parts):
+                raise ValueError(
+                    f"as_of={as_of} predates the oldest retained snapshot "
+                    f"(v={min(versions)}) and no partials survive there; "
+                    "raise retain_snapshots at compaction time"
+                )
+        elif versions and v < as_of < max(versions):
+            # Between two retained snapshots: batches in (v, as_of]
+            # were folded into the newer snapshot and vacuumed (the
+            # fold is all-or-nothing up to its watermark), so exact
+            # reconstruction is impossible; a gap in batch ids is
+            # indistinguishable from a vacuum, so raise either way.
+            nxt = min(x for x in versions if x > as_of)
+            raise ValueError(
+                f"as_of={as_of} falls between retained snapshots "
+                f"v={v} and v={nxt}: batches in ({v}, {as_of}] were "
+                "folded into the newer snapshot and vacuumed, so an "
+                "exact as-of reconstruction is impossible; reachable "
+                "points are the retained snapshot versions and any "
+                "batch at or above the newest snapshot — raise "
+                "retain_snapshots at compaction time"
+            )
+    newer = sorted(b for b in parts if b > v and (as_of is None or b <= as_of))
+    return v, newer
+
+
+def fold_inputs(
+    spark: SparkSession, path: str, as_of: int | None = None
+) -> list[str]:
+    """The directories a sink read folds: the newest committed snapshot
+    at or below the bound, then the committed partials above it (and at
+    or below the bound). Empty for an empty sink.
+
+    Only COMMITTED directories (``_SUCCESS`` present) are returned, on
+    both the snapshot and the partial side: a torn partial folded here
+    (and then into a snapshot) would undercount permanently, because
+    the stream's idempotent-replay rewrite of ``parts/batch_id=N`` lands
+    at or below the fold watermark and is never re-read. Partials at or
+    below the snapshot version are already folded in and are skipped
+    even if their directories still exist (cleanup is optional).
+
+    The listing is fixed when this returns: a DataFrame read from it
+    must be executed (or ``localCheckpoint``-ed) BEFORE the next
+    ``compact_sink`` on the same path — compaction vacuums folded
+    partials and superseded snapshots, and a still-lazy reader would
+    then hit missing files (the standard reader-vs-vacuum window every
+    table format has).
+
+    ``as_of=B`` bounds the fold to batch ``B``. Compaction passes its
+    fold bound here; a reader passes it for TIME TRAVEL — the newest
+    retained snapshot with version <= B folded with committed partials
+    in (version, B]. Resolution is bounded by retention
+    (``compact_sink(retain=k)`` keeps the k newest snapshot versions;
+    folded partials are always vacuumed), so the reachable points are
+    exactly each retained snapshot version and any batch at or above
+    the NEWEST snapshot. Any other ``as_of`` raises rather than silently
+    undercounting — including a point BETWEEN two retained snapshots
+    (retained v=5 and v=9, ``as_of=7``: batches in (5, 7] were folded
+    into v=9 and vacuumed, and the v=5 state would be mislabeled)."""
+    v, newer = _resolve_fold(spark, path, as_of)
+    snap = [_snap_dir(path, v)] if v >= 0 else []
+    return snap + [_part_dir(path, b) for b in newer]
+
+
+def compact_sink(
+    spark: SparkSession,
+    path: str,
+    fold,
+    retain: int = 1,
+    derive=None,
+) -> int:
+    """Fold everything committed now into snapshot ``v = max batch_id``
+    and vacuum what it supersedes. Returns the new version (or the
+    current one when there is nothing new to fold).
+
+    ``fold(max_b)`` returns the family's snapshot rows — its fold over
+    ``fold_inputs(spark, path, max_b)``. ``max_b`` is fixed BEFORE the
+    fold and bounds both the fold's listing and the vacuum, so
+    ``snap/v=N`` contains exactly batches <= N: a partial landing
+    mid-compaction stays above the new watermark and folds next time,
+    instead of being vacuumed unfolded (lost, on min-k sinks) or folded
+    under a label that also leaves it readable (double-counted, on
+    additive sinks). The fold is localCheckpointed before writing (it
+    reads the previous snapshot path it may logically overwrite).
+
+    Single-writer maintenance contract: the vacuum deletes files, so any
+    LAZY DataFrame from an earlier read must be materialized first.
+
+    ``retain``: how many newest snapshot versions to KEEP at vacuum time
+    — each is a time-travel point for ``fold_inputs(as_of=...)``.
+    ``derive(snap, v)`` writes tables derived from the snapshot under
+    ``{path}/<table>/v=N`` after the snapshot commits; they are vacuumed
+    with their snapshot."""
+    v = _snapshot_version(spark, path)
+    max_b = max(
+        _committed_partitions(spark, f"{path}/parts", "batch_id="), default=-1
+    )
+    if max_b <= v:
+        return v
+    snap = fold(max_b).localCheckpoint(eager=True)
+    return _commit_snapshot(spark, path, snap, max_b, retain, derive)
+
+
+def _commit_snapshot(
+    spark: SparkSession,
+    path: str,
+    snap: DataFrame,
+    max_b: int,
+    retain: int = 1,
+    derive=None,
+) -> int:
+    """Write ``snap`` (the checkpointed fold of batches <= ``max_b``) as
+    ``snap/v=max_b``, then vacuum folded partials and superseded
+    snapshots — snapshot commit FIRST, deletes after, so a crash in
+    between leaves stale partials that readers already exclude. Never
+    re-lists partials: the vacuum is bounded by the same ``max_b`` that
+    bounded the fold."""
+    snap.write.mode("overwrite").parquet(_snap_dir(path, max_b))
+    if derive is not None:
+        derive(snap, max_b)
+    # Space reclamation only — readers already filter batch_id <= max_b
+    # and fold the newest snapshot. Folded partials are those at OR below
+    # the new version; superseded snapshots are those below the retained
+    # ones (v == max_b is the one just committed).
+    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
+    keep = sorted(
+        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
+    )[: max(1, retain)]
+    for table in _VERSIONED:
+        _vacuum_partitions(spark, f"{path}/{table}", "v=", below=min(keep))
+    return max_b
+
+
+# ---------------------------------------------------------------------------
+# Incremental aggregate materialized view: per-key exact-cents SUM
+# ---------------------------------------------------------------------------
+
+
+def write_agg_partial(
+    batch_df: DataFrame, path: str, batch_id: int, key_col: str = "event_type"
+) -> None:
+    """Reduce one micro-batch to per-key exact-cents partials and land
+    them (map-side combine to the sink: partial aggregation is
+    associative, so the fold of partials equals the aggregate of the
+    union)."""
+    part = batch_df.groupBy(key_col).agg(
+        F.count("*").alias("n"),
+        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+    )
+    write_partial(part, path, batch_id)
+
+
+def read_agg_sink(
+    spark: SparkSession,
+    path: str,
+    key_col: str = "event_type",
+    as_of: int | None = None,
+) -> DataFrame:
+    """Current MV contents: the per-key SUM over :func:`fold_inputs`
+    (its torn-commit, reader-vs-vacuum and ``as_of`` time-travel rules
+    apply; ``compact_agg_sink(retain_snapshots=k)`` sets the retention)."""
+    paths = fold_inputs(spark, path, as_of)
+    if not paths:
+        return spark.createDataFrame([], f"{key_col} string, n long, cents long")
+    return (
+        spark.read.parquet(*paths)
+        .groupBy(key_col)
+        .agg(F.sum("n").alias("n"), F.sum("cents").alias("cents"))
+    )
+
+
+def compact_agg_sink(
+    spark: SparkSession,
+    path: str,
+    key_col: str = "event_type",
+    retain_snapshots: int = 1,
+) -> int:
+    """:func:`compact_sink` with the per-key SUM fold; keeps the
+    ``retain_snapshots`` newest versions as ``as_of`` points."""
+    return compact_sink(
+        spark,
+        path,
+        lambda b: read_agg_sink(spark, path, key_col, as_of=b),
+        retain_snapshots,
+    )
 
 
 def snapshot_diff(
@@ -409,9 +480,8 @@ def snapshot_diff(
 # Incremental inverted-index sink (postings partials + snapshot compaction)
 # ---------------------------------------------------------------------------
 #
-# Same layout and crash contract as the aggregate-MV sink above
-# (parts/batch_id=N partials, snap/v=maxBatch snapshot, _SUCCESS-gated
-# reads, version-as-fold-watermark), but the folded payload is POSTING
+# The sink protocol above (_SUCCESS-gated partials and snapshots,
+# version-as-fold-watermark), but the folded payload is POSTING
 # ROWS, not per-key sums: documents arrive exactly once, their postings
 # are disjoint row sets, so the fold is a plain union — no re-aggregation
 # across batches, per-batch work is O(batch postings). Token statistics
@@ -423,94 +493,34 @@ def snapshot_diff(
 # time (it mixes n_docs with df, so it is not additive).
 
 
+_POSTINGS_COLS = ("token", "id", "tf", "first_pos", "last_pos", "positions")
+
+
 def write_postings_partial(
     batch_df: DataFrame, path: str, batch_id: int
 ) -> None:
-    """Land one micro-batch's positional postings idempotently under
-    ``parts/batch_id=N`` (checkpoint-recovery replays overwrite the same
-    dir instead of duplicating)."""
+    """Land one micro-batch's positional postings."""
     from .retrieval import doc_postings
 
-    doc_postings(batch_df).write.mode("overwrite").parquet(
-        f"{path}/parts/batch_id={batch_id}"
-    )
+    write_partial(doc_postings(batch_df), path, batch_id)
 
 
 def read_postings_sink(
     spark: SparkSession, path: str, as_of: int | None = None
 ) -> DataFrame:
-    """Folded postings: newest committed snapshot ∪ committed partials
-    NEWER than it (same reader-vs-vacuum and torn-commit rules as
-    ``read_agg_sink``). Returns the raw postings table; feed it to
-    ``retrieval.postings_with_stats`` for the queryable index.
-
-    TIME TRAVEL: ``as_of=B`` reconstructs the index as of batch ``B``
-    under the SAME reachability contract as ``read_agg_sink`` —
-    retained snapshot versions plus anything at or above the newest
-    snapshot; a point between two retained snapshots, or below the
-    retention floor, raises rather than serving a stale index labeled
-    as-of-B (an index missing documents silently under-retrieves)."""
-    schema = (
-        "token string, id bigint, tf bigint, first_pos bigint,"
-        " last_pos bigint, positions array<bigint>"
-    )
-    v, newer = _resolve_postings_fold(spark, path, as_of)
-    pieces = []
-    if v >= 0:
-        pieces.append(
-            spark.read.option("basePath", f"{path}/snap")
-            .parquet(f"{path}/snap/v={v}")
-            .select("token", "id", "tf", "first_pos", "last_pos", "positions")
+    """Folded postings: the plain union over :func:`fold_inputs` (its
+    torn-commit, reader-vs-vacuum and ``as_of`` time-travel rules apply
+    — an index missing documents silently under-retrieves, so an
+    unreachable ``as_of`` raises). Returns the raw postings table; feed
+    it to ``retrieval.postings_with_stats`` for the queryable index."""
+    paths = fold_inputs(spark, path, as_of)
+    if not paths:
+        return spark.createDataFrame(
+            [],
+            "token string, id bigint, tf bigint, first_pos bigint,"
+            " last_pos bigint, positions array<bigint>",
         )
-    if newer:
-        pieces.append(
-            spark.read.option("basePath", f"{path}/parts")
-            .parquet(*[f"{path}/parts/batch_id={b}" for b in newer])
-            .select("token", "id", "tf", "first_pos", "last_pos", "positions")
-        )
-    if not pieces:
-        return spark.createDataFrame([], schema)
-    merged = pieces[0]
-    for p in pieces[1:]:
-        merged = merged.unionByName(p)
-    return merged
-
-
-def _resolve_postings_fold(
-    spark: SparkSession, path: str, as_of: int | None
-) -> tuple[int, list[int]]:
-    """Resolve which snapshot version and which newer committed partials
-    a sink read folds (shared by ``read_postings_sink`` and the
-    stored-stats serve path), enforcing the time-travel reachability
-    contract: a point between retained snapshots, or below the
-    retention floor, raises rather than silently under-retrieving."""
-    versions = _committed_partitions(spark, f"{path}/snap", "v=")
-    if as_of is None:
-        v = max(versions) if versions else -1
-    else:
-        eligible = [x for x in versions if x <= as_of]
-        v = max(eligible) if eligible else -1
-        if v < 0 and versions and min(versions) > as_of:
-            parts = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-            if not any(b <= as_of for b in parts):
-                raise ValueError(
-                    f"as_of={as_of} predates the oldest retained snapshot "
-                    f"(v={min(versions)}) and no partials survive there; "
-                    "raise retain_snapshots at compaction time"
-                )
-        elif versions and v < as_of < max(versions):
-            nxt = min(x for x in versions if x > as_of)
-            raise ValueError(
-                f"as_of={as_of} falls between retained snapshots v={v} "
-                f"and v={nxt}: batches in ({v}, {as_of}] were folded and "
-                "vacuumed — raise retain_snapshots at compaction time"
-            )
-    newer = sorted(
-        b
-        for b in _committed_partitions(spark, f"{path}/parts", "batch_id=")
-        if b > v and (as_of is None or b <= as_of)
-    )
-    return v, newer
+    return spark.read.parquet(*paths).select(*_POSTINGS_COLS)
 
 
 def write_postings_stats(
@@ -534,9 +544,7 @@ def write_postings_stats(
     from .retrieval import postings_doc_lengths, postings_token_stats
 
     if postings is None:
-        postings = spark.read.parquet(f"{path}/snap/v={v}").select(
-            "token", "id", "tf", "first_pos", "last_pos", "positions"
-        )
+        postings = spark.read.parquet(_snap_dir(path, v)).select(*_POSTINGS_COLS)
     postings_token_stats(postings).write.mode("overwrite").parquet(
         f"{path}/stats/v={v}"
     )
@@ -568,21 +576,15 @@ def read_postings_sink_with_stats(
         postings_with_stats,
     )
 
-    v, newer = _resolve_postings_fold(spark, path, as_of)
+    v, newer = _resolve_fold(spark, path, as_of)
     if v < 0 or v not in _committed_partitions(spark, f"{path}/stats", "v="):
         return postings_with_stats(read_postings_sink(spark, path, as_of))
-    snap = (
-        spark.read.option("basePath", f"{path}/snap")
-        .parquet(f"{path}/snap/v={v}")
-        .select("token", "id", "tf", "first_pos", "last_pos", "positions")
-    )
+    snap = spark.read.parquet(_snap_dir(path, v)).select(*_POSTINGS_COLS)
     stored = spark.read.parquet(f"{path}/stats/v={v}")
     if not newer:
         return attach_token_stats(snap, stored)
-    parts = (
-        spark.read.option("basePath", f"{path}/parts")
-        .parquet(*[f"{path}/parts/batch_id={b}" for b in newer])
-        .select("token", "id", "tf", "first_pos", "last_pos", "positions")
+    parts = spark.read.parquet(*[_part_dir(path, b) for b in newer]).select(
+        *_POSTINGS_COLS
     )
     # incremental stats over ONLY the uncompacted partials (small), then
     # an additive vocab-sized merge with the stored snapshot stats
@@ -621,16 +623,14 @@ def read_sink_doc_lengths(
     for the served version."""
     from .retrieval import postings_doc_lengths
 
-    v, newer = _resolve_postings_fold(spark, path, as_of)
+    v, newer = _resolve_fold(spark, path, as_of)
     if v < 0 or v not in _committed_partitions(spark, f"{path}/dlen", "v="):
         return postings_doc_lengths(read_postings_sink(spark, path, as_of))
     stored = spark.read.parquet(f"{path}/dlen/v={v}").select("id", "dl")
     if not newer:
         return stored
-    parts = (
-        spark.read.option("basePath", f"{path}/parts")
-        .parquet(*[f"{path}/parts/batch_id={b}" for b in newer])
-        .select("id", "tf")
+    parts = spark.read.parquet(*[_part_dir(path, b) for b in newer]).select(
+        "id", "tf"
     )
     return stored.unionByName(postings_doc_lengths(parts))
 
@@ -806,35 +806,16 @@ def postings_erase_ids(spark: SparkSession, path: str, ids) -> int:
 def compact_postings_sink(
     spark: SparkSession, path: str, retain_snapshots: int = 1
 ) -> int:
-    """Fold committed partials into ``snap/v=maxBatch`` (plain union —
-    postings are disjoint across batches) and vacuum the folded partial
-    dirs; crash-safe in the same order as ``compact_agg_sink`` (snapshot
-    commit first, deletes after). ``retain_snapshots`` keeps the k
-    newest snapshot versions as ``as_of`` time-travel points (same
-    retention/vacuum trade as the aggregate-MV sink). Returns the new
-    version."""
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    # as_of=max_b: same fold-bound rule as compact_agg_sink (postings
-    # union across batches is not idempotent — an overlap would
-    # duplicate a batch's postings)
-    fold = read_postings_sink(spark, path, as_of=max_b).localCheckpoint(
-        eager=True
+    """:func:`compact_sink` with the plain-union postings fold; the
+    snapshot's token stats and doc lengths are derived from the
+    checkpointed fold and committed AFTER the snapshot (a crash in
+    between makes serve paths fall back to the read-time derive for
+    that version, never a torn read). ``retain_snapshots`` keeps the k
+    newest versions as ``as_of`` points."""
+    return compact_sink(
+        spark,
+        path,
+        lambda b: read_postings_sink(spark, path, as_of=b),
+        retain_snapshots,
+        derive=lambda snap, v: write_postings_stats(spark, path, v, snap),
     )
-    fold.write.mode("overwrite").parquet(f"{path}/snap/v={max_b}")
-    # stats commit AFTER the snapshot (crash in between => serve path
-    # falls back to the read-time derive for this version, never torn);
-    # derived from the in-memory checkpointed fold, not a parquet
-    # re-read of the snapshot just written
-    write_postings_stats(spark, path, max_b, postings=fold)
-    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
-    keep = sorted(
-        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
-    )[: max(1, retain_snapshots)]
-    _vacuum_partitions(spark, f"{path}/snap", "v=", below=min(keep))
-    _vacuum_partitions(spark, f"{path}/stats", "v=", below=min(keep))
-    _vacuum_partitions(spark, f"{path}/dlen", "v=", below=min(keep))
-    return max_b

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .compaction import compact_sink, fold_inputs, write_partial
 from .text import fingerprint, tokens
 
 
@@ -1353,57 +1354,25 @@ def write_bloom_partial(
     text_col: str = "text",
 ) -> None:
     """Reduce one benchmark batch to its (w, bits) partial bitmap and
-    land it idempotently under ``parts/batch_id=N``."""
-    bloom_build(batch_df, n, m_bits, text_col).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/parts/batch_id={batch_id}")
+    land it."""
+    write_partial(bloom_build(batch_df, n, m_bits, text_col), path, batch_id)
 
 
 def read_bloom(spark, path: str, max_b: int | None = None) -> DataFrame:
-    """Current folded bitmap: newest committed snapshot OR-folded with
-    committed partials above the watermark (same crash-safety rules as
-    the other sketch sinks). ``max_b`` is the compaction fold bound:
-    it pins ``snap/v=N`` to exactly batches ≤ N (bit-OR is idempotent,
-    so the bound is about exact labeling and vacuum provenance, not
-    double-counting)."""
-    from .compaction import _committed_partitions, _snapshot_version
-
-    v = _snapshot_version(spark, path)
-    parts = [
-        f"{path}/parts/batch_id={b}"
-        for b in _committed_partitions(spark, f"{path}/parts", "batch_id=")
-        if b > v and (max_b is None or b <= max_b)
-    ]
-    if v >= 0:
-        parts.append(f"{path}/snap/v={v}")
-    if not parts:
+    """Current folded bitmap: the per-word bit-OR over
+    ``compaction.fold_inputs`` (``max_b`` is its fold bound; bit-OR is
+    idempotent, so the bound is about exact labeling and vacuum
+    provenance, not double-counting)."""
+    paths = fold_inputs(spark, path, max_b)
+    if not paths:
         return spark.createDataFrame([], "w bigint, bits bigint")
     return (
-        spark.read.parquet(*parts)
+        spark.read.parquet(*paths)
         .groupBy("w")
         .agg(F.bit_or("bits").alias("bits"))
     )
 
 
 def compact_bloom(spark, path: str) -> int:
-    """Fold committed partials into ``snap/v=maxBatch`` and vacuum the
-    folded dirs — snapshot commit first, deletes after."""
-    from .compaction import (
-        _committed_partitions,
-        _snapshot_version,
-        _vacuum_partitions,
-    )
-
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    fold = read_bloom(spark, path, max_b=max_b).localCheckpoint(eager=True)
-    fold.write.mode("overwrite").parquet(f"{path}/snap/v={max_b}")
-    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
-    keep = sorted(
-        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
-    )[:1]
-    _vacuum_partitions(spark, f"{path}/snap", "v=", below=min(keep))
-    return max_b
+    """``compaction.compact_sink`` with the bit-OR fold."""
+    return compact_sink(spark, path, lambda b: read_bloom(spark, path, b))

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compaction import compact_sink, fold_inputs, write_partial
+
 DEFAULT_M = 16  # sub-buckets per octave → relative error ≤ 6.25%
 
 MAX_LONG = (1 << 63) - 1
@@ -225,10 +227,9 @@ def _hi_sql(b: str, m: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Sink-is-the-state maintenance — the sketch as an additive MV with the
-# same crash contract as the aggregate-MV / pretoken-count sinks
-# (operators/compaction.py): _SUCCESS-gated dirs, idempotent partial
-# replays, snapshot-then-vacuum.
+# Sink-is-the-state maintenance — the sketch as an additive MV on the
+# sink protocol of operators/compaction.py (this module supplies only
+# the reduce and the per-bucket SUM fold).
 # ---------------------------------------------------------------------------
 
 
@@ -240,63 +241,27 @@ def write_sketch_partial(
     m: int = DEFAULT_M,
 ) -> None:
     """Reduce one micro-batch to its (bucket, cnt) partial grid and land
-    it idempotently under ``parts/batch_id=N`` (map-side combine to the
-    sink: the sketch is additive, so the fold of partials equals the
-    sketch of the union)."""
-    quantile_sketch_build(batch_df, value_col, m).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/parts/batch_id={batch_id}")
+    it (map-side combine to the sink: the sketch is additive, so the
+    fold of partials equals the sketch of the union)."""
+    write_partial(quantile_sketch_build(batch_df, value_col, m), path, batch_id)
 
 
 def read_sketch(spark, path: str, max_b: int | None = None) -> DataFrame:
-    """Current folded sketch: newest committed snapshot + committed
-    partials above the fold watermark, summed per bucket (same
-    crash-safety rules as read_agg_sink). ``max_b`` is the compaction
-    fold bound — load-bearing for an additive fold: a partial landing
-    mid-compaction that got folded under a higher label would also be
-    read as still-unfolded afterwards and double-count."""
-    from .compaction import _committed_partitions, _snapshot_version
-
-    v = _snapshot_version(spark, path)
-    parts = [
-        f"{path}/parts/batch_id={b}"
-        for b in _committed_partitions(spark, f"{path}/parts", "batch_id=")
-        if b > v and (max_b is None or b <= max_b)
-    ]
-    if v >= 0:
-        parts.append(f"{path}/snap/v={v}")
-    if not parts:
+    """Current folded sketch: the per-bucket SUM over
+    ``compaction.fold_inputs`` (``max_b`` is its fold bound)."""
+    paths = fold_inputs(spark, path, max_b)
+    if not paths:
         return spark.createDataFrame([], "bucket bigint, cnt bigint")
     return (
-        spark.read.parquet(*parts)
+        spark.read.parquet(*paths)
         .groupBy("bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
 
 
 def compact_sketch(spark, path: str) -> int:
-    """Fold committed partials into ``snap/v=maxBatch`` and vacuum the
-    folded dirs — snapshot commit first, deletes after. Returns the new
-    version."""
-    from .compaction import (
-        _committed_partitions,
-        _snapshot_version,
-        _vacuum_partitions,
-    )
-
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    fold = read_sketch(spark, path, max_b=max_b).localCheckpoint(eager=True)
-    fold.write.mode("overwrite").parquet(f"{path}/snap/v={max_b}")
-    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
-    keep = sorted(
-        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
-    )[:1]
-    _vacuum_partitions(spark, f"{path}/snap", "v=", below=min(keep))
-    return max_b
+    """``compaction.compact_sink`` with the per-bucket SUM fold."""
+    return compact_sink(spark, path, lambda b: read_sketch(spark, path, b))
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .compaction import fold_inputs, write_partial
+
 
 def sessionize(
     events: DataFrame,
@@ -270,12 +272,9 @@ def trend_fit_from_sums(s: DataFrame) -> DataFrame:
 
 
 def write_trend_partial(batch_df: DataFrame, path: str, batch_id: int) -> None:
-    """Land one micro-batch's per-user sums idempotently under
-    ``parts/batch_id=N`` (checkpoint replays overwrite, not duplicate —
-    the aggregate-MV sink contract, model-fit flavored)."""
-    trend_sums(batch_df).write.mode("overwrite").parquet(
-        f"{path}/parts/batch_id={batch_id}"
-    )
+    """Land one micro-batch's per-user sums (the aggregate-MV sink
+    contract, model-fit flavored)."""
+    write_partial(trend_sums(batch_df), path, batch_id)
 
 
 def read_trend_fit(spark: SparkSession, path: str) -> DataFrame:
@@ -283,19 +282,14 @@ def read_trend_fit(spark: SparkSession, path: str) -> DataFrame:
     by per-user summation (sums are additive across disjoint batches)
     and fit closed-form. Per-batch maintenance cost is O(users touched
     in the batch); the raw event history is never re-scanned."""
-    from .compaction import _committed_partitions
-
-    batches = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    if not batches:
+    paths = fold_inputs(spark, path)
+    if not paths:
         return spark.createDataFrame(
             [],
             "user_id bigint, n_events bigint,"
             " slope_ucents_per_hour bigint, mean_cents_micro bigint",
         )
-    parts = spark.read.option("basePath", f"{path}/parts").parquet(
-        *[f"{path}/parts/batch_id={b}" for b in batches]
-    )
-    folded = parts.groupBy("user_id").agg(
+    folded = spark.read.parquet(*paths).groupBy("user_id").agg(
         F.sum("n").alias("n"),
         F.sum("sx").alias("sx"),
         F.sum("sy").alias("sy"),

@@ -32,6 +32,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compaction import compact_sink, fold_inputs, write_partial
 from .text import widen_narrow_input
 
 
@@ -273,62 +274,28 @@ def write_hll_partial(
     salt: str = "hll",
 ) -> None:
     """Reduce one micro-batch to its register-grid partial and land it
-    idempotently under ``parts/batch_id=N`` (register MAX is idempotent,
-    so replays are exactly harmless — stronger than the additive sinks,
-    which need the overwrite-same-dir discipline; this sink gets both)."""
-    hll_registers(batch_df, key_col, value_col, m, salt).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/parts/batch_id={batch_id}")
+    (register MAX is idempotent, so replays are exactly harmless —
+    stronger than the additive sinks, which need the overwrite-same-dir
+    discipline; this sink gets both)."""
+    write_partial(hll_registers(batch_df, key_col, value_col, m, salt), path, batch_id)
 
 
 def read_hll(spark, path: str, max_b: int | None = None) -> DataFrame:
-    """Current folded registers: newest committed snapshot MAX-folded
-    with committed partials above the watermark (same crash-safety rules
-    as the additive sinks). ``max_b`` is the compaction fold bound: it
-    pins ``snap/v=N`` to exactly batches ≤ N so a partial landing
-    mid-compaction is left above the new watermark instead of being
-    folded under a label that the next vacuum treats as covered."""
-    from .compaction import _committed_partitions, _snapshot_version
-
-    v = _snapshot_version(spark, path)
-    parts = [
-        f"{path}/parts/batch_id={b}"
-        for b in _committed_partitions(spark, f"{path}/parts", "batch_id=")
-        if b > v and (max_b is None or b <= max_b)
-    ]
-    if v >= 0:
-        parts.append(f"{path}/snap/v={v}")
-    if not parts:
+    """Current folded registers: the per-(key, j) MAX over
+    ``compaction.fold_inputs`` (``max_b`` is its fold bound)."""
+    paths = fold_inputs(spark, path, max_b)
+    if not paths:
         return spark.createDataFrame([], "key string, j bigint, mx int")
     return (
-        spark.read.parquet(*parts)
+        spark.read.parquet(*paths)
         .groupBy("key", "j")
         .agg(F.max("mx").alias("mx"))
     )
 
 
 def compact_hll(spark, path: str) -> int:
-    """Fold committed partials into ``snap/v=maxBatch`` and vacuum the
-    folded dirs — snapshot commit first, deletes after."""
-    from .compaction import (
-        _committed_partitions,
-        _snapshot_version,
-        _vacuum_partitions,
-    )
-
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    fold = read_hll(spark, path, max_b=max_b).localCheckpoint(eager=True)
-    fold.write.mode("overwrite").parquet(f"{path}/snap/v={max_b}")
-    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
-    keep = sorted(
-        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
-    )[:1]
-    _vacuum_partitions(spark, f"{path}/snap", "v=", below=min(keep))
-    return max_b
+    """``compaction.compact_sink`` with the register MAX fold."""
+    return compact_sink(spark, path, lambda b: read_hll(spark, path, b))
 
 
 # ---------------------------------------------------------------------------
@@ -847,9 +814,8 @@ def write_kmv_partial(
 ) -> None:
     """Reduce one micro-batch to its bottom-k partial (stored FLAT as
     (key, h, gate) rows — ≤ k per key, gate constant per partial) and
-    land it idempotently under ``parts/batch_id=N`` (min-k is
-    idempotent, so replays are exactly harmless, like the HLL sink and
-    unlike the additive ones).
+    land it (min-k is idempotent, so replays are exactly harmless, like
+    the HLL sink and unlike the additive ones).
 
     ``keep_ppm`` defaults to None (ungated), NOT "auto": a streaming
     frame is not file-backed, so "auto" would fall through to the
@@ -861,45 +827,29 @@ def write_kmv_partial(
     ``n_rows`` (foreachBatch owners usually know it). All existing
     sinks' partials are bit-identical under this default: their
     batches probed under 10⁷ and resolved to ungated."""
-    kmv_sketch(
-        batch_df, key_col, value_col, k, salt, keep_ppm, n_rows
-    ).select("key", F.explode("hs").alias("h"), "gate").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/parts/batch_id={batch_id}")
+    sketch = kmv_sketch(batch_df, key_col, value_col, k, salt, keep_ppm, n_rows)
+    write_partial(
+        sketch.select("key", F.explode("hs").alias("h"), "gate"), path, batch_id
+    )
 
 
 def _kmv_sink_read_raw(
     spark, path: str, max_b: int | None = None
 ) -> DataFrame | None:
-    """Shared KMV-sink read plumbing: list the newest committed
-    snapshot + committed partials above the watermark, mergeSchema-read
-    them (with mixed-generation partials, single-file schema inference
-    could silently DROP the gate column — footer merge is O(metadata)
-    and guarantees the union schema), and apply the legacy-gate
-    migration (r11 ADVICE #3): partials written before the gate column
-    existed are ungated builds by construction, so a missing gate
-    column — or NULL gates under schema merge — reads as KMV_FULL.
-    min(gate) downstream then applies the theta-union rule across
-    generations exactly. Returns None when the sink is empty.
-
-    ``max_b`` is the COMPACTION fold bound, not a time-travel point:
-    partials above it are excluded so ``snap/v=N`` contains exactly
-    batches ≤ N and the vacuum below N+1 can never delete a partial
-    the fold did not read (a partial landing mid-compaction stays on
-    disk, above the new watermark, and folds next time)."""
-    from .compaction import _committed_partitions, _snapshot_version
-
-    v = _snapshot_version(spark, path)
-    parts = [
-        f"{path}/parts/batch_id={b}"
-        for b in _committed_partitions(spark, f"{path}/parts", "batch_id=")
-        if b > v and (max_b is None or b <= max_b)
-    ]
-    if v >= 0:
-        parts.append(f"{path}/snap/v={v}")
-    if not parts:
+    """Shared KMV-sink read: the flat rows of ``compaction.fold_inputs``
+    (``max_b`` is its fold bound), mergeSchema-read (with
+    mixed-generation partials, single-file schema inference could
+    silently DROP the gate column — footer merge is O(metadata) and
+    guarantees the union schema), with the legacy-gate migration (r11
+    ADVICE #3): partials written before the gate column existed are
+    ungated builds by construction, so a missing gate column — or NULL
+    gates under schema merge — reads as KMV_FULL. min(gate) downstream
+    then applies the theta-union rule across generations exactly.
+    Returns None when the sink is empty."""
+    paths = fold_inputs(spark, path, max_b)
+    if not paths:
         return None
-    raw = spark.read.option("mergeSchema", "true").parquet(*parts)
+    raw = spark.read.option("mergeSchema", "true").parquet(*paths)
     if "gate" not in raw.columns:
         return raw.withColumn("gate", F.lit(KMV_FULL).cast("long"))
     return raw.withColumn(
@@ -907,38 +857,13 @@ def _kmv_sink_read_raw(
     )
 
 
-def _kmv_sink_compact(
-    spark, path: str, fold_flat: DataFrame, max_b: int
-) -> int:
-    """Shared KMV-sink compaction: write ``fold_flat`` (the
-    localCheckpointed flat fold) as ``snap/v=max_b``, then vacuum
-    folded partials and superseded snapshots — snapshot commit FIRST,
-    deletes after (crash between the two leaves a readable sink).
-    Returns the new watermark. Callers must pre-check max_b > v and
-    pass the SAME ``max_b`` that bounded the fold's partial listing
-    (``_kmv_sink_read_raw(..., max_b)``): re-listing here would let a
-    partial that landed after the fold was materialized be vacuumed
-    without ever being folded — permanent loss of its hashes."""
-    from .compaction import _committed_partitions, _vacuum_partitions
-
-    fold_flat.write.mode("overwrite").parquet(f"{path}/snap/v={max_b}")
-    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
-    keep = sorted(
-        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
-    )[:1]
-    _vacuum_partitions(spark, f"{path}/snap", "v=", below=min(keep))
-    return max_b
-
-
 def read_kmv(
     spark, path: str, k: int = KMV_K, max_b: int | None = None
 ) -> DataFrame:
-    """Current folded sketch: newest committed snapshot min-k-folded
-    with committed partials above the watermark (same crash-safety
-    rules as the other sketch sinks). Returns the (key, hs, gate)
-    array form; the folded gate is the MIN over contributing partials
-    and hashes are re-filtered below it (theta-union rule). ``max_b``
-    is the compaction fold bound (see ``_kmv_sink_read_raw``)."""
+    """Current folded sketch: the per-key min-k fold of the sink's flat
+    rows. Returns the (key, hs, gate) array form; the folded gate is the
+    MIN over contributing partials and hashes are re-filtered below it
+    (theta-union rule). ``max_b`` is the fold bound."""
     raw = _kmv_sink_read_raw(spark, path, max_b)
     if raw is None:
         return spark.createDataFrame(
@@ -958,25 +883,15 @@ def read_kmv(
 
 
 def compact_kmv(spark, path: str, k: int = KMV_K) -> int:
-    """Fold committed partials into ``snap/v=maxBatch`` (flat rows) and
-    vacuum the folded dirs — snapshot commit first, deletes after."""
-    from .compaction import _committed_partitions, _snapshot_version
-
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    # max_b is fixed BEFORE the fold and bounds both the fold's partial
-    # listing and the vacuum, so a partial landing mid-compaction can
-    # never be vacuumed unfolded (it stays above the new watermark and
-    # folds next time — min-k idempotence makes any overlap harmless)
-    fold = (
-        read_kmv(spark, path, k, max_b=max_b)
-        .select("key", F.explode("hs").alias("h"), "gate")
-        .localCheckpoint(eager=True)
+    """``compaction.compact_sink`` with the min-k fold, snapshotted as
+    flat (key, h, gate) rows."""
+    return compact_sink(
+        spark,
+        path,
+        lambda b: read_kmv(spark, path, k, max_b=b).select(
+            "key", F.explode("hs").alias("h"), "gate"
+        ),
     )
-    return _kmv_sink_compact(spark, path, fold, max_b)
 
 
 # ---------------------------------------------------------------------------
@@ -994,6 +909,13 @@ def compact_kmv(spark, path: str, k: int = KMV_K) -> int:
 # ---------------------------------------------------------------------------
 
 
+def _flat_sample(sample: DataFrame) -> DataFrame:
+    """(key, sample, gate) → the sink's flat (key, h, v, gate) rows."""
+    return sample.select(
+        "key", F.explode("sample").alias("hv"), "gate"
+    ).select("key", F.col("hv.h").alias("h"), F.col("hv.v").alias("v"), "gate")
+
+
 def write_kmv_sample_partial(
     batch_df: DataFrame,
     path: str,
@@ -1006,29 +928,24 @@ def write_kmv_sample_partial(
     n_rows: int | None = None,
 ) -> None:
     """Reduce one micro-batch to its bottom-k VALUE sample partial
-    (stored FLAT as (key, h, v, gate) rows — ≤ k per key) and land it
-    idempotently under ``parts/batch_id=N``. Gate default ungated for
-    the same reason as :func:`write_kmv_partial` (no per-batch probe;
-    thread ``n_rows`` for 10⁷+-row batches)."""
-    kmv_sample(
-        batch_df, key_col, value_col, k, salt, keep_ppm, n_rows
-    ).select(
-        "key", F.explode("sample").alias("hv"), "gate"
-    ).select(
-        "key", F.col("hv.h").alias("h"), F.col("hv.v").alias("v"), "gate"
-    ).write.mode("overwrite").parquet(f"{path}/parts/batch_id={batch_id}")
+    (stored FLAT as (key, h, v, gate) rows — ≤ k per key) and land it.
+    Gate default ungated for the same reason as
+    :func:`write_kmv_partial` (no per-batch probe; thread ``n_rows``
+    for 10⁷+-row batches)."""
+    sample = kmv_sample(batch_df, key_col, value_col, k, salt, keep_ppm, n_rows)
+    write_partial(_flat_sample(sample), path, batch_id)
 
 
 def read_kmv_sample(
     spark, path: str, k: int = KMV_K, max_b: int | None = None
 ) -> DataFrame:
-    """Current folded value sample: newest committed snapshot min-k-
-    folded with committed partials above the watermark. Returns the
-    (key, sample array<struct<h,v>>, gate) form of :func:`kmv_sample`;
+    """Current folded value sample: the per-key min-k fold of the
+    sink's flat rows. Returns the (key, sample array<struct<h,v>>,
+    gate) form of :func:`kmv_sample`;
     folded gate = MIN over contributors, pairs re-filtered below it
     (theta-union rule). Legacy gate-less partials read as KMV_FULL,
     like :func:`read_kmv` (shared ``_kmv_sink_read_raw`` plumbing);
-    ``max_b`` is the compaction fold bound."""
+    ``max_b`` is the fold bound."""
     raw = _kmv_sink_read_raw(spark, path, max_b)
     if raw is None:
         return spark.createDataFrame(
@@ -1056,30 +973,13 @@ def read_kmv_sample(
 
 
 def compact_kmv_sample(spark, path: str, k: int = KMV_K) -> int:
-    """Fold committed sample partials into ``snap/v=maxBatch`` (flat
-    (key, h, v, gate) rows) and vacuum the folded dirs — snapshot
-    commit first, deletes after (shared ``_kmv_sink_compact`` rules)."""
-    from .compaction import _committed_partitions, _snapshot_version
-
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    # same pre-fold max_b rule as compact_kmv: the bound makes the
-    # vacuum provably a subset of what was folded
-    fold = (
-        read_kmv_sample(spark, path, k, max_b=max_b)
-        .select("key", F.explode("sample").alias("hv"), "gate")
-        .select(
-            "key",
-            F.col("hv.h").alias("h"),
-            F.col("hv.v").alias("v"),
-            "gate",
-        )
-        .localCheckpoint(eager=True)
+    """``compaction.compact_sink`` with the min-k fold, snapshotted as
+    flat (key, h, v, gate) rows."""
+    return compact_sink(
+        spark,
+        path,
+        lambda b: _flat_sample(read_kmv_sample(spark, path, k, max_b=b)),
     )
-    return _kmv_sink_compact(spark, path, fold, max_b)
 
 
 # ---------------------------------------------------------------------------
@@ -1101,60 +1001,29 @@ def write_cms_partial(
     text_col: str = "text",
 ) -> None:
     """Reduce one micro-batch to its (j, b, cnt) partial grid and land
-    it idempotently under ``parts/batch_id=N``."""
-    token_cms(batch_df, depth, width, text_col).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/parts/batch_id={batch_id}")
+    it."""
+    write_partial(token_cms(batch_df, depth, width, text_col), path, batch_id)
 
 
 def read_cms(spark, path: str, max_b: int | None = None) -> DataFrame:
-    """Current folded grid: newest committed snapshot + committed
-    partials above the watermark, summed per cell. ``max_b`` is the
-    compaction fold bound — for an ADDITIVE fold it is load-bearing
-    for correctness, not just vacuum safety: a partial folded into
-    ``snap/v=N`` under a label above its batch id would ALSO be read
-    as a still-unfolded partial afterwards and double-count."""
-    from .compaction import _committed_partitions, _snapshot_version
-
-    v = _snapshot_version(spark, path)
-    parts = [
-        f"{path}/parts/batch_id={b}"
-        for b in _committed_partitions(spark, f"{path}/parts", "batch_id=")
-        if b > v and (max_b is None or b <= max_b)
-    ]
-    if v >= 0:
-        parts.append(f"{path}/snap/v={v}")
-    if not parts:
+    """Current folded grid: the per-cell SUM over
+    ``compaction.fold_inputs``. ``max_b`` is its fold bound — for an
+    ADDITIVE fold it is load-bearing for correctness, not just vacuum
+    safety: a partial folded into a snapshot labeled above its batch id
+    would ALSO be read as still-unfolded afterwards and double-count."""
+    paths = fold_inputs(spark, path, max_b)
+    if not paths:
         return spark.createDataFrame([], "j int, b bigint, cnt bigint")
     return (
-        spark.read.parquet(*parts)
+        spark.read.parquet(*paths)
         .groupBy("j", "b")
         .agg(F.sum("cnt").alias("cnt"))
     )
 
 
 def compact_cms(spark, path: str) -> int:
-    """Fold committed partials into ``snap/v=maxBatch`` and vacuum the
-    folded dirs — snapshot commit first, deletes after."""
-    from .compaction import (
-        _committed_partitions,
-        _snapshot_version,
-        _vacuum_partitions,
-    )
-
-    v = _snapshot_version(spark, path)
-    committed = _committed_partitions(spark, f"{path}/parts", "batch_id=")
-    max_b = max(committed) if committed else -1
-    if max_b <= v:
-        return v
-    fold = read_cms(spark, path, max_b=max_b).localCheckpoint(eager=True)
-    fold.write.mode("overwrite").parquet(f"{path}/snap/v={max_b}")
-    _vacuum_partitions(spark, f"{path}/parts", "batch_id=", below=max_b + 1)
-    keep = sorted(
-        _committed_partitions(spark, f"{path}/snap", "v="), reverse=True
-    )[:1]
-    _vacuum_partitions(spark, f"{path}/snap", "v=", below=min(keep))
-    return max_b
+    """``compaction.compact_sink`` with the per-cell SUM fold."""
+    return compact_sink(spark, path, lambda b: read_cms(spark, path, b))
 
 
 def kmv_adjacent_overlap(

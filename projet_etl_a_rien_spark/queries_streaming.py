@@ -386,7 +386,7 @@ def q_streaming_inverted_index_ingest(
     import tempfile
 
     from .operators.compaction import (
-        _snapshot_version,
+        next_batch_id,
         read_postings_sink_with_stats,
         write_postings_partial,
     )
@@ -402,9 +402,7 @@ def q_streaming_inverted_index_ingest(
         even = docs_stream(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
         run_incremental_postings_sink(even, path)
         odd = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 1)
-        write_postings_partial(
-            odd, path, batch_id=_snapshot_version(spark, path) + 1
-        )
+        write_postings_partial(odd, path, batch_id=next_batch_id(spark, path))
         # serve through the stored-stats path: snapshot stats written at
         # compaction + additive merge with the odd-docs partial landed
         # above the fold watermark (the oracle pins it equal to the
@@ -742,7 +740,7 @@ def q_streaming_trend_fit_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .operators.compaction import _committed_partitions
+    from .operators.compaction import next_batch_id
     from .operators.sessions import read_trend_fit, write_trend_partial
     from .streaming.windows import apply_runtime_confs, replay_events_stream
 
@@ -769,11 +767,7 @@ def q_streaming_trend_fit_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         odd = load_table(spark, sf_dir, "events").where(
             F.col("event_id") % 2 == 1
         )
-        nxt = (
-            max(_committed_partitions(spark, f"{path}/parts", "batch_id="))
-            + 1
-        )
-        write_trend_partial(odd, path, nxt)
+        write_trend_partial(odd, path, next_batch_id(spark, path))
         return read_trend_fit(spark, path).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -1663,7 +1657,7 @@ def q_streaming_incremental_mv_totals(
     import tempfile
 
     from .operators.compaction import (
-        _snapshot_version,
+        next_batch_id,
         read_agg_sink,
         write_agg_partial,
     )
@@ -1680,7 +1674,7 @@ def q_streaming_incremental_mv_totals(
         # count was — a hardcoded 1 would land at/below the snapshot and
         # be (correctly) excluded if the replay ever split into 2+
         # micro-batches
-        write_agg_partial(odd, path, batch_id=_snapshot_version(spark, path) + 1)
+        write_agg_partial(odd, path, batch_id=next_batch_id(spark, path))
         return read_agg_sink(spark, path).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)

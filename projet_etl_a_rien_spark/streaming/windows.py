@@ -868,7 +868,7 @@ def run_incremental_agg_sink(
     here would be wasted work on every path that does), but must
     materialize it before any further ``compact_agg_sink``
     (reader-vs-vacuum contract, see
-    ``operators.compaction.read_agg_sink``)."""
+    ``operators.compaction.fold_inputs``)."""
     from ..operators.compaction import (
         compact_agg_sink,
         read_agg_sink,

@@ -47,6 +47,15 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def executed_plans(spark, sf_dir) -> dict[str, str]:
+    """Executed plan of every non-EAGER registry query, built once (in
+    sorted name order) for the registry-wide sweeps below."""
+    return {
+        name: _plan(spark, sf_dir, name) for name in sorted(set(REGISTRY) - EAGER)
+    }
+
+
 def test_q6_scan_prunes_and_pushes(spark, sf_dir):
     plan = _plan(spark, sf_dir, "tpch_q6_forecast_revenue")
     scan = next(l for l in plan.splitlines() if "FileScan parquet" in l)
@@ -85,7 +94,7 @@ def test_range_join_is_hash_not_nested_loop(spark, sf_dir):
     assert "HashJoin" in plan or "SortMergeJoin" in plan
 
 
-def test_no_row_at_a_time_python_anywhere(spark, sf_dir):
+def test_no_row_at_a_time_python_anywhere(executed_plans):
     """Python in the hot path only as Arrow-batched stages, never per-row.
 
     ``doc_chunk_windows_udtf`` is the ONE deliberate exception: it
@@ -95,12 +104,13 @@ def test_no_row_at_a_time_python_anywhere(spark, sf_dir):
     forms. Everything else stays zero-Python.
     """
     offenders = []
-    for name in sorted(set(REGISTRY) - EAGER - {"doc_chunk_windows_udtf"}):
-        plan = _plan(spark, sf_dir, name)
+    for name, plan in executed_plans.items():
+        if name == "doc_chunk_windows_udtf":
+            continue
         if "BatchEvalPython" in plan or "ArrowEvalPython" in plan:
             offenders.append(name)
     assert not offenders, f"row-at-a-time Python UDFs in: {offenders}"
-    udtf_plan = _plan(spark, sf_dir, "doc_chunk_windows_udtf")
+    udtf_plan = executed_plans["doc_chunk_windows_udtf"]
     assert "ArrowEvalPythonUDTF" in udtf_plan
     assert "BatchEvalPython " not in udtf_plan and "BatchEvalPythonUDTF" not in udtf_plan
 
@@ -186,12 +196,11 @@ SCALAR_BNLJ_OK = {
 }
 
 
-def test_no_cartesian_or_unexpected_nested_loops(spark, sf_dir):
+def test_no_cartesian_or_unexpected_nested_loops(executed_plans):
     """No query may plan a true CartesianProduct, and nested-loop joins
     may appear only where a 1-row scalar broadcast makes them O(n)."""
     offenders = []
-    for name in sorted(set(REGISTRY) - EAGER):
-        plan = _plan(spark, sf_dir, name)
+    for name, plan in executed_plans.items():
         if "CartesianProduct" in plan:
             offenders.append((name, "cartesian"))
         if "BroadcastNestedLoopJoin" in plan and name not in SCALAR_BNLJ_OK:

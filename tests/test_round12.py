@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from projet_etl_a_rien_spark.operators import compaction as _C
 from projet_etl_a_rien_spark.operators import sketches as _S
 
 
@@ -487,7 +488,7 @@ def test_kmv_sample_sink_randomized_vs_reference(spark, tmp_path):
 
 
 def test_kmv_compact_spares_partial_landed_mid_compaction(spark, tmp_path):
-    """Race-window simulation for the shared _kmv_sink_compact: a
+    """Race-window simulation for the shared sink commit step: a
     partial that lands AFTER the fold was materialized (but before the
     vacuum) must survive the vacuum and serve on the next read — with a
     re-listed max_b it would be vacuumed without ever being folded,
@@ -512,7 +513,7 @@ def test_kmv_compact_spares_partial_landed_mid_compaction(spark, tmp_path):
         .localCheckpoint(eager=True)
     )
     _S.write_kmv_partial(late, path, 2, "k", "v")
-    assert _S._kmv_sink_compact(spark, path, fold, 1) == 1
+    assert _C._commit_snapshot(spark, path, fold, 1) == 1
     # the late partial survived the vacuum, above the new watermark
     assert os.path.isdir(f"{path}/parts/batch_id=2")
     served = {
