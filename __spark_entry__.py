@@ -38,6 +38,9 @@ _DRIVER_PRIORITY: list[str] = [
     "parts_triangle_estimate_p10",
     "parts_kcore",
     "parts_copurchase_bfs_3hop",
+    # length/positional prefix filters in dedup.jaccard_prefix_pairs
+    "jaccard_prefix_pairs",
+    "minhash_lsh_quality",
 ]
 
 # (filename, mtime) fingerprint → parsed ledger: the driver calls

@@ -737,6 +737,8 @@ def postings_erase_ids(spark: SparkSession, path: str, ids) -> int:
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     ids_df = (
         ids.select(F.col("id"))
         if isinstance(ids, DataFrame)
@@ -746,6 +748,10 @@ def postings_erase_ids(spark: SparkSession, path: str, ids) -> int:
 
     stat_versions = set(_committed_partitions(spark, f"{path}/stats", "v="))
 
+    # both run on pool threads below; the decorator hands each call the
+    # caller's local properties (job group, description, scheduler
+    # pool), which a pool thread's JVM thread does not inherit
+    @inheritable_thread_target(spark)
     def _erase_dir(task) -> int:
         prefix, key, n = task
         sub = f"{prefix}/{key}{n}"
@@ -771,6 +777,7 @@ def postings_erase_ids(spark: SparkSession, path: str, ids) -> int:
             ).parquet(f"{path}/stats/v={n}")
         return dropped
 
+    @inheritable_thread_target(spark)
     def _erase_dlen(n) -> int:
         sub = f"{path}/dlen/v={n}"
         cur = spark.read.parquet(sub)

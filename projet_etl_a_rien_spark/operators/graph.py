@@ -904,12 +904,17 @@ def kcore(
         # hub regime: segment rows repeat (n, d) — collapse node-level
         # projections so degrees and the guard sum count each node once
         nd = nd.distinct()
-    n_e = (nd.agg(F.coalesce(F.sum("d"), F.lit(0)).alias("s")).collect()[0]["s"]) // 2
-    _peel_guard(n_e, exact_edge_budget, "kcore")
+    # one collect prices the guard AND answers round 0's "any node
+    # under k?" (a separate isEmpty would be a second job)
+    guard = nd.agg(
+        F.coalesce(F.sum("d"), F.lit(0)).alias("s"),
+        F.count_if(F.col("d") < k).alias("n_low"),
+    ).collect()[0]
+    _peel_guard(guard["s"] // 2, exact_edge_budget, "kcore")
     deg = nd.select(F.col("n").alias("node"), F.col("d").alias("deg"))
-    low = deg.where(F.col("deg") < k).select("node")
-    if low.isEmpty():
+    if guard["n_low"] == 0:
         return deg.select("node", F.col("deg").alias("core_degree"))
+    low = deg.where(F.col("deg") < k).select("node")
     # edges re-derived map-side from the adjacency checkpoint (one
     # direction only), then the classic peel rounds
     alive = (

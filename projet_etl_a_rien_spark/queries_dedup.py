@@ -1406,7 +1406,11 @@ WHERE i.n_common / (sa.sz + sb.sz - i.n_common) >= 0.5
 """,
     doc="Exact shingle-set Jaccard pairs via PREFIX FILTERING (AllPairs/"
     "PPJoin): only each doc's globally-rarest tokens enter the inverted "
-    "index, no blocking column needed; the filter is lossless, so the "
+    "index, no blocking column needed, and each prefix-join row must "
+    "pass the length and positional bounds (the Jaccard the pair could "
+    "reach from its sizes, and from the overlap left after the shared "
+    "token's positions), computed with the verify's own division so "
+    "rounding never drops a pair; every filter is lossless, so the "
     "oracle is the plain exact all-pairs form.",
 )
 def q_jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

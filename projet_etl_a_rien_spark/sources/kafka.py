@@ -1,13 +1,13 @@
-"""Kafka source/sink wrappers — reference S1/S2/K3 semantics.
+"""Kafka source wrapper — reference S1/S2 semantics.
 
 Mirrors the reference's exact reader configuration
 (``/root/reference/spark_airports_final.py:19-24`` batch,
 ``spark_kafka_direct.py:21-27`` stream) and its NiFi publish contract
-(key = airport id, ``tp.xml:875``) as ``to_kafka_records`` + a sink.
+(key = airport id, ``tp.xml:875``) as ``to_kafka_records``.
 
 Sandbox note: the spark-sql-kafka connector jar and a broker are not
-available here, so these raise a clear RuntimeError at call time if the
-data source is missing. In production add
+available here, so the source raises a clear RuntimeError at call time
+if the data source is missing. In production add
 ``spark.jars.packages=org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>``
 (replacing the reference's hand-managed jar dir,
 ``spark_airports_final.py:9-12``; SURVEY.md §4.2).
@@ -64,11 +64,6 @@ def kafka_source(
         _raise_if_classpath_error(e)
 
 
-def decode_values(df: DataFrame) -> DataFrame:
-    """``CAST(value AS STRING)`` projection (ref spark_airports_final.py:31)."""
-    return df.selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
-
-
 def to_kafka_records(df: DataFrame, key_col: str) -> DataFrame:
     """Serialize rows to (key, value-JSON) — the NiFi AttributesToJSON +
     key=${id} publish contract (tp.xml:875,1281)."""
@@ -77,18 +72,3 @@ def to_kafka_records(df: DataFrame, key_col: str) -> DataFrame:
         F.col(key_col).cast("string").alias("key"), payload.alias("value")
     )
 
-
-def kafka_sink(
-    df: DataFrame, bootstrap_servers: str, topic: str, key_col: str | None = None
-) -> None:
-    """Batch publish (K3). ``df`` must have key/value or pass ``key_col``."""
-    records = df if key_col is None else to_kafka_records(df, key_col)
-    try:
-        (
-            records.write.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("topic", topic)
-            .save()
-        )
-    except Exception as e:
-        _raise_if_classpath_error(e)

@@ -16,7 +16,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[4]", driver_memory="4g")
+    s = get_spark("tests", driver_memory="4g")
     yield s
     s.stop()
 

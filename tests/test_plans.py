@@ -238,3 +238,26 @@ def test_events_json_kpi_single_scan_map_side_partial_agg(spark, sf_dir):
     below_last_exchange = plan.rsplit("Exchange", 1)[1]
     assert "HashAggregate" in below_last_exchange, plan
     assert "Scan " in below_last_exchange, plan
+
+
+def test_copurchase_pairs_are_canonical_and_lambda_free(spark, sf_dir):
+    """The canonical pair derivation emits src < dst on every row, the
+    same edge set as the lineitem self-join, and evaluates no
+    higher-order lambda (those run interpreted, outside generated
+    code)."""
+    from pyspark.sql import functions as F
+
+    from projet_etl_a_rien_spark.queries_graph import (
+        _copurchase_edge_pairs_canonical,
+        _copurchase_edges,
+    )
+
+    pairs = _copurchase_edge_pairs_canonical(spark, sf_dir)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString().lower()
+    assert "lambdafunction" not in plan, plan
+    assert pairs.where(F.col("src") >= F.col("dst")).count() == 0
+    canon = _copurchase_edges(spark, sf_dir).select(
+        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+    )
+    got = {tuple(r) for r in pairs.distinct().collect()}
+    assert got and got == {tuple(r) for r in canon.distinct().collect()}

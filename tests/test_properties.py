@@ -16,6 +16,7 @@ Examples are kept small (each runs a real local Spark job).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -169,26 +170,82 @@ CORPUS = st.lists(
 )
 
 
-@settings(max_examples=10, deadline=None)
-@given(CORPUS, st.sampled_from([0.3, 0.5, 0.8]))
-def test_prefix_filter_is_lossless(spark, docs, threshold):
-    """jaccard_prefix_pairs must equal the unfiltered exact inverted-index
-    join for ANY corpus and threshold — the pigeonhole prefix bound is a
-    theorem, so a single counterexample means the implementation broke
-    the ordering or the prefix length."""
-    rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
+PREFIX_THRESHOLDS = [0.3, 0.5, 0.7, 0.8, 0.9, 1.0]
+
+
+def _prefix_and_exact_pairs(spark, rows, threshold, shingle_n=3):
+    """(jaccard_prefix_pairs, ngram_jaccard_pairs) id-pair sets of one
+    corpus: the filtered join and the unfiltered exact inverted-index
+    join."""
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["id_a"], r["id_b"])
-        for r in dedup.jaccard_prefix_pairs(df, threshold=threshold).collect()
+        for r in dedup.jaccard_prefix_pairs(
+            df, threshold=threshold, shingle_n=shingle_n
+        ).collect()
     }
     ref = {
         (r["id_a"], r["id_b"])
         for r in dedup.ngram_jaccard_pairs(
-            df.withColumn("source", F.lit("one")), threshold=threshold
+            df.withColumn("source", F.lit("one")),
+            threshold=threshold,
+            shingle_n=shingle_n,
         ).collect()
     }
+    return got, ref
+
+
+@settings(max_examples=10, deadline=None)
+@given(CORPUS, st.sampled_from(PREFIX_THRESHOLDS))
+def test_prefix_filter_is_lossless(spark, docs, threshold):
+    """jaccard_prefix_pairs must equal the unfiltered exact inverted-index
+    join for ANY corpus and threshold — the pigeonhole prefix bound and
+    the length/positional bounds are theorems, so a single
+    counterexample means the implementation broke the ordering, the
+    prefix length or a filter's rounding."""
+    rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
+    got, ref = _prefix_and_exact_pairs(spark, rows, threshold)
     assert got == ref
+
+
+def _boundary_cases(p: int, q: int) -> list[tuple[int, int, int]]:
+    """(|A|, |B|, |A∩B|) triples on the edge of threshold t = p/q:
+    Jaccard exactly t (so t/(1+t)·(|A|+|B|) = |A∩B| is an integer),
+    including |B| = t·|A| with B inside A, plus each one's overlap
+    minus one, which must fall just below t."""
+    cases = []
+    for m in (1, 2):
+        c, rest = p * m, (q - p) * m  # |A| + |B| - 2c = rest
+        for a in sorted({0, rest // 2, rest}):
+            cases.append((c + rest - a, c + a, c))
+    cases += [(L, R, c - 1) for L, R, c in cases if c > 1]
+    return [(L, R, c) for L, R, c in cases if L >= R]
+
+
+@pytest.mark.parametrize("p,q", [(3, 10), (1, 2), (7, 10), (4, 5), (9, 10), (1, 1)])
+def test_prefix_filter_keeps_exact_threshold_pairs(spark, p, q):
+    """Deterministic boundary corpus for the length and positional
+    filters: every pair sits on (or one shared token under) its
+    threshold, with the shared tokens the most frequent of both docs,
+    so the first common token is as late as possible and the
+    positional bound equals the true overlap. One-word shingles make
+    each word one token; every pair has its own vocabulary."""
+    threshold = p / q
+    cases = _boundary_cases(p, q)
+    if (p, q) == (4, 5):
+        # 28/35 == 0.8, but 0.8 / 1.8 * 63 == 28.000000000000004: the
+        # multiplied-out positional bound would drop this pair
+        cases.append((32, 31, 28))
+    rows, on_threshold = [], set()
+    for k, (L, R, c) in enumerate(cases):
+        common = [f"c{k}x{j}" for j in range(c)]
+        a = common + [f"a{k}x{j}" for j in range(L - c)]
+        b = common + [f"b{k}x{j}" for j in range(R - c)]
+        rows += [(2 * k, " ".join(a)), (2 * k + 1, " ".join(b))]
+        if c / (L + R - c) >= threshold:
+            on_threshold.add((2 * k, 2 * k + 1))
+    got, ref = _prefix_and_exact_pairs(spark, rows, threshold, shingle_n=1)
+    assert on_threshold and got == ref == on_threshold
 
 
 POINTS = st.lists(

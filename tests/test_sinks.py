@@ -247,3 +247,50 @@ def test_relanded_folded_batch_changes_nothing(
     assert compact(spark, path) == 3
     assert not os.path.isdir(f"{path}/parts/batch_id=0")
     assert _state(spark, family, path) == expected(family, (0, 1, 3))
+
+
+# ---------------------------------------------------------------------------
+# Erasure's driver thread pool keeps the caller's job labels
+# ---------------------------------------------------------------------------
+
+
+def _job_groups_from(spark, first_id: int) -> dict[int, str | None]:
+    """{job id: job group} of every job with id >= ``first_id``, read from
+    the status store after the listener bus has delivered every event."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    out = {}
+    for k in range(jobs.size()):
+        j = jobs.apply(k)
+        if j.jobId() < first_id:
+            break
+        g = j.jobGroup()
+        out[j.jobId()] = g.get() if g.isDefined() else None
+    return out
+
+
+def test_erase_pool_jobs_keep_callers_job_group(spark, sf_dir, tmp_path):
+    """postings_erase_ids rewrites each dir on a pool thread; every job
+    it submits must carry the job group the caller set, or per-query
+    attribution by job group loses them."""
+    from projet_etl_a_rien_spark.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents").limit(20).localCheckpoint()
+    path = str(tmp_path / "postings")
+    _C.write_postings_partial(docs.where("doc_id % 2 = 0"), path, 0)
+    _C.compact_postings_sink(spark, path)
+    _C.write_postings_partial(docs.where("doc_id % 2 = 1"), path, 1)
+    ids = [r.doc_id for r in docs.select("doc_id").limit(4).collect()]
+
+    sc = spark.sparkContext
+    first = max(_job_groups_from(spark, 0), default=-1) + 1
+    sc.setJobGroup("g", "erasure under a caller's job group")
+    try:
+        assert _C.postings_erase_ids(spark, path, ids) > 0
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    groups = _job_groups_from(spark, first)
+    assert groups and set(groups.values()) == {"g"}, groups
