@@ -9,12 +9,14 @@ read-back verify. Differences from the reference, by design (SURVEY.md
 - the cleaned lineage is **persisted once** before the multi-action
   fan-out — the reference recomputes the full Kafka scan→parse→clean for
   every one of its 6+ actions;
-- the stats are **computed under the cache**: the one-row aggregate is
-  checkpointed while the cleaned rows are still persisted, so the
-  caller's action on ``stats`` reads one row instead of re-parsing every
-  message after the unpersist. That aggregate is also the first action
-  on the persisted rows and its ``total_records`` is the clean count
-  (ref :62), so no separate ``count()`` scans them;
+- the batch pipeline's stats are **computed under the cache**: the
+  one-row aggregate is checkpointed while the cleaned rows are still
+  persisted, so the caller's action on ``stats`` reads one row instead of
+  re-parsing every message after the unpersist. That aggregate is also
+  the first action on the persisted rows and its ``total_records`` is
+  the clean count (ref :62), so no separate ``count()`` scans them. The
+  permissive pipeline keeps its stats lazy: its registered caller reads
+  only the read-back, and an eager aggregate there would be a wasted job;
 - the sink is pluggable (parquet here, `sources.jdbc` in production) and
   the verify step re-reads through the sink's own scan — the reference's
   only correctness mechanism (read-your-writes via Postgres, §5.2) —
@@ -94,10 +96,10 @@ def airports_permissive_pipeline(
 
     parsed.persist()
     try:
+        parsed_count = parsed.count()
         stats = airport_stats(
             parsed, distinct_key="icao", lat_col="lat", lon_col="lon"
-        ).localCheckpoint(eager=True)
-        parsed_count = stats.first()["total_records"]
+        )
         parsed.write.mode("overwrite").parquet(sink_path)  # unclean rows (ref :75-84)
         readback = spark.read.parquet(sink_path)
         verified_count = readback.count()

@@ -79,12 +79,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    cores this process may run on).
     On a real cluster pass ``master=None`` via spark-submit and let the
     submitter own master/memory; every other conf below is cluster-safe.
     """
     if master is None:
-        master = f"local[{int(os.environ.get('SPARK_GRAFT_CPUS', '32'))}]"
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        master = f"local[{int(cpus)}]"
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -68,20 +68,12 @@ def test_airports_batch_pipeline_empty_guard(spark, tmp_path):
     assert res.raw_count == 0 and res.verified_count == 0
 
 
-@pytest.mark.parametrize(
-    "pipeline,messages",
-    [
-        (airports_batch_pipeline, airports_messages),
-        (airports_permissive_pipeline, airports_messages_numeric),
-    ],
-)
-def test_pipeline_stats_are_computed_under_the_cache(
-    spark, sf_dir, tmp_path, pipeline, messages
-):
-    """The returned stats are materialized before the parsed rows are
+def test_batch_pipeline_stats_are_computed_under_the_cache(spark, sf_dir, tmp_path):
+    """The returned stats are materialized before the cleaned rows are
     unpersisted: an action on them reads the one-row result and never
     re-parses the messages."""
-    res = pipeline(spark, messages(spark, sf_dir), str(tmp_path / "sink"))
+    msgs = airports_messages(spark, sf_dir)
+    res = airports_batch_pipeline(spark, msgs, str(tmp_path / "sink"))
     plan = res.stats._jdf.queryExecution().optimizedPlan().toString().lower()
     assert "from_json" not in plan and "jsontostructs" not in plan, plan
     assert res.stats.collect()[0].total_records == res.clean_count
