@@ -31,7 +31,7 @@ SF0001_DIR = "/root/testdata/sf0.001"
 # computation changed after their last green CORRECTNESS row.
 _DRIVER_PRIORITY: list[str] = [
     "postings_erasure_index",
-    # the six callers of queries_graph._copurchase_degree_bound
+    # the six co-purchase entries (part-table degree certificate)
     "parts_triangle_counts",
     "parts_triangle_counts_auto",
     "parts_triangle_estimate",

@@ -25,12 +25,27 @@ DataFrame over the file, so no data or attribute IDs are shared across
 calls. A path that cannot be stat-ed locally (missing, or on a remote
 filesystem) is read without the memo, so a missing table still raises
 Spark's own ``PATH_NOT_FOUND``.
+
+Input sizing: this module is the one place that decides how big an input
+is, so every size-driven choice (sketch gate tiers, the triangle sampling
+tier, hub certificates, driver-vs-distributed engines, explicit
+broadcasts, input widening) reads the same numbers under the same policy:
+
+- :func:`row_bound` — an upper bound on a frame's rows from its parquet
+  footers (no job), else one bounded ``limit(cap + 1).count()`` probe when
+  the caller gives a cap, else None;
+- :func:`table_row_bound` — a fixture table's footer count, None when the
+  table is absent;
+- :func:`broadcast_threshold` — the session's broadcast limit in bytes;
+- :func:`widen_input` — repartition an input narrower than the cores.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -135,15 +150,114 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         df.createOrReplaceTempView(n)
 
 
-def widen_input(df: DataFrame) -> DataFrame:
-    """Round-robin the input to the session's core count IFF it is
-    narrower — a single-file fixture otherwise runs heavy per-row map
-    work (shingle hashing, JSON parse, grid bucketing) on one core
-    before the first shuffle (r5 parallelism audit). No-op when the
-    input is already at least cores-wide, so at production widths no
-    extra shuffle is ever added. Results are partitioning-independent;
-    only the task layout changes."""
+# A plan node that can yield more rows than its input files hold. Matched
+# at node-head position only (after the tree-drawing prefix), so a relation
+# or column merely named ``Joined`` or ``MyUnion`` stays footer-countable;
+# ``\w*`` admits suffixed heads such as LateralJoin and AsOfJoin.
+_EXPANDING_NODE = re.compile(r"(?m)^[\s:+\-!*(]*\w*(Join|Generate|Expand|Union)\b")
+
+
+def _footer_rows(df: DataFrame) -> int | None:
+    """Sum of ``num_rows`` over the parquet footers of the plan's input
+    files: no Spark job, no scan. None when the plan is not file-backed
+    (streaming batches, in-memory or checkpointed frames), an input is
+    not local parquet, or the plan can expand rows.
+
+    The footer count is the input-file cardinality, an upper bound when
+    the frame only filters or projects. Joins, explode/posexplode
+    (Generate), Expand and Union can yield more rows than their files
+    hold, so for them the count would under-size the frame, the
+    dangerous direction for a sizing policy. Union is in the list
+    because ``inputFiles()`` deduplicates paths: ``df.union(df)`` has
+    twice the rows of its one file. Footers are read in a thread pool
+    (metadata I/O releases the GIL)."""
+    try:
+        plan = df._jdf.queryExecution().analyzed().toString()
+        if _EXPANDING_NODE.search(plan):
+            return None
+        files = df.inputFiles()
+    except Exception:
+        return None
+    if not files:
+        return None
+    try:
+        import pyarrow.parquet as pq
+    except ImportError:
+        return None
+
+    paths = []
+    for uri in files:
+        path = uri[5:] if uri.startswith("file:") else uri
+        if "://" in path or not path.endswith(".parquet"):
+            return None
+        paths.append(path)
+
+    def _num_rows(p: str) -> int:
+        return pq.ParquetFile(p).metadata.num_rows
+
+    try:
+        if len(paths) == 1:
+            return _num_rows(paths[0])
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(32, len(paths))) as ex:
+            return sum(ex.map(_num_rows, paths))
+    except Exception:
+        return None
+
+
+def row_bound(df: DataFrame, probe_cap: int | None = None) -> int | None:
+    """An upper bound on ``df``'s row count, or None.
+
+    Footers first (:func:`_footer_rows`: zero jobs, reaches any scale).
+    When they cannot answer and ``probe_cap`` is given, ONE bounded probe
+    ``df.limit(probe_cap + 1).count()`` returns ``min(n, probe_cap + 1)``:
+    it reads at most one row past the cap, so a result above the cap
+    proves only ``n > probe_cap``. With no cap the answer is None. The
+    footer read never raises; the probe is the frame's own action."""
+    n = _footer_rows(df)
+    if n is None and probe_cap is not None:
+        n = df.limit(probe_cap + 1).count()
+    return n
+
+
+def table_row_bound(spark: SparkSession, sf_dir: str, name: str) -> int | None:
+    """Footer row count of fixture table ``name`` (no job); None when the
+    table is absent, so a caller falls back to measuring instead of
+    failing on a table it only uses for sizing."""
+    try:
+        return row_bound(load_table(spark, sf_dir, name))
+    except AnalysisException:
+        return None
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The session's autoBroadcastJoinThreshold in bytes, for joins whose
+    small side is materialized (checkpointed) and so carries no plan-time
+    size: the explicit broadcast hint then applies the byte rule the
+    planner would. Parsed by Spark's own ``JavaUtils.byteStringAsBytes``,
+    the parser the planner applies to this conf (Spark rejects an
+    unparseable value when it is set). -1 (disabled), or any failure to
+    read the value, gives 0: no explicit broadcast."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    try:
+        util = spark.sparkContext._jvm.org.apache.spark.network.util
+        return max(int(util.JavaUtils.byteStringAsBytes(raw)), 0)
+    except Exception:
+        return 0
+
+
+def widen_input(df: DataFrame, *cols: str) -> DataFrame:
+    """Round-robin (or, given ``cols``, hash-) repartition ``df`` to the
+    session's core count IFF it is narrower. A single-file fixture
+    otherwise runs heavy per-row map work (shingle hashing, tokenizing,
+    quantizing, JSON parse) on one core before the first shuffle, and
+    AQE's byte-based coalescing keeps byte-light downstream shuffles at
+    that width too. At production widths (input at least cores-wide)
+    ``df`` is returned untouched, so no shuffle is ever added there.
+    Results are partitioning-independent; only the task layout
+    changes."""
     cores = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= cores:
         return df
-    return df.repartition(cores)
+    return df.repartition(cores, *cols)

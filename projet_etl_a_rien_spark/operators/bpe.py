@@ -41,8 +41,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import row_bound, widen_input
 from .compaction import compact_sink, fold_inputs, write_partial
-from .text import tokens, widen_narrow_input
+from .text import tokens
 
 END = "</w>"
 
@@ -137,7 +138,7 @@ def word_symbol_table(
     subword is distinct from a word-internal one). The ONE corpus-scale
     shuffle of BPE training."""
     return (
-        widen_narrow_input(df)
+        widen_input(df)
         .select(F.explode(tokens(text_col)).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
@@ -233,15 +234,12 @@ def _learn_merges(
     and loops in Python (:func:`_learn_merges_driver` — 1 job total
     instead of 2 per rank; right whenever the vocab is bounded),
     ``"dist"`` keeps the distributed per-rank loop, ``"auto"`` picks
-    driver below ``DRIVER_LEARN_MAX_ROWS`` vocab rows (one cheap count
-    over the checkpointed table)."""
+    driver up to ``DRIVER_LEARN_MAX_ROWS`` vocab rows (one probe of the
+    checkpointed table, capped there: ``catalog.row_bound``)."""
     seqs = seqs.localCheckpoint(eager=True)
     if engine == "auto":
-        engine = (
-            "driver"
-            if seqs.count() <= DRIVER_LEARN_MAX_ROWS
-            else "dist"
-        )
+        n = row_bound(seqs, DRIVER_LEARN_MAX_ROWS)
+        engine = "driver" if n <= DRIVER_LEARN_MAX_ROWS else "dist"
     if engine == "driver":
         try:
             rows = [
@@ -331,7 +329,7 @@ def apply_bpe_merges(
     compression diagnostic a tokenizer-fit report needs (tokens/word
     under the learned vocab; 1.0 means every word became one token).
     """
-    wdf = widen_narrow_input(df)
+    wdf = widen_input(df)
     syms = (
         wdf.select(F.explode(tokens(text_col)).alias("word"))
         .where(F.col("word") != "")
@@ -492,7 +490,7 @@ def pretoken_symbol_table(
     pre-token class structure (v1 whitespace split or the GPT-2-faithful
     GPT2_PRETOKEN_RE)."""
     return (
-        widen_narrow_input(df)
+        widen_input(df)
         .select(
             F.explode(
                 F.regexp_extract_all(
@@ -651,7 +649,7 @@ def apply_bbpe_merges(
     ratio is ~4). These counts — not the word-level approximation — are
     what a production trainer's packing/budget/chunk layout would see.
     """
-    wdf = widen_narrow_input(df)
+    wdf = widen_input(df)
     pts = F.regexp_extract_all(
         F.col(text_col), F.lit(pretoken_re), F.lit(0)
     )
@@ -708,7 +706,7 @@ def bbpe_roundtrip(
     Same scale shape as encode: the merge folds run on the DISTINCT
     pre-token table (vocab-sized), the corpus pays one posexplode + one
     join + one groupBy(doc)."""
-    wdf = widen_narrow_input(df)
+    wdf = widen_input(df)
     pts = F.regexp_extract_all(
         F.col(text_col), F.lit(pretoken_re), F.lit(0)
     )
@@ -765,7 +763,7 @@ def write_pretoken_counts_partial(
     """Reduce one micro-batch to (pt, cnt) partials and land them
     (map-side combine to the sink)."""
     part = (
-        widen_narrow_input(batch_df)
+        widen_input(batch_df)
         .select(
             F.explode(
                 F.regexp_extract_all(

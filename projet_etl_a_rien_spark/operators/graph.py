@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import broadcast_threshold, row_bound
+
 
 def connected_components(
     edges: DataFrame,
@@ -361,8 +363,9 @@ def _full_adjacency(
     power-law hub at 100 TB could build a multi-GB single aggregation
     buffer/row — a failure mode the flat-edge plans could not hit.
     ``max_degree_bound`` is the caller's O(metadata) certificate that no
-    node can exceed it (registered co-purchase entries pass the part
-    table's parquet-footer row count: degree < |node domain|, no job);
+    node can exceed it (registered co-purchase entries pass
+    ``catalog.table_row_bound`` of the part table: degree < |node
+    domain|, no job);
     when the bound fits ``hub_budget`` the plain build runs untouched.
     Otherwise ONE narrow partial-aggregated pass measures the max
     multiplicity degree (an upper bound on the distinct degree — the
@@ -514,7 +517,7 @@ def _edge_adjacency_pairs(
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
     )
     thresh = (
-        _broadcast_threshold(und.sparkSession) if numeric_keys else 0
+        broadcast_threshold(und.sparkSession) if numeric_keys else 0
     )
     deg_side = nd.select(F.col("n").alias("y"), F.col("d").alias("dy"))
     if 0 <= n_nodes * 28 <= thresh:
@@ -554,50 +557,6 @@ def _edge_adjacency_pairs(
         F.col("y") == F.col("yk"),
         "left" if keep_all_edges else "inner",
     )
-
-
-def _broadcast_threshold(spark) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (-1 = disabled
-    -> 0 so no explicit broadcast fires). Used where a materialized
-    (checkpointed) table's true size is KNOWN but invisible to the
-    planner — the explicit hint applies the same byte rule the
-    optimizer itself would.
-
-    Parsing delegates to Spark's own byte-string parser (JavaUtils.
-    byteStringAsBytes — the exact code the planner applies to this
-    conf), so every suffix Spark accepts is accepted here; the Python
-    fallback only covers sessions where the JVM gateway is unreachable.
-    Unparseable values resolve to 0 — NO explicit broadcast — rather
-    than a silent 10 MB default that could re-enable broadcasts on a
-    session whose operator set the conf to something this code merely
-    failed to read (r14 ADVICE #3)."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip()
-    try:
-        jvm = spark.sparkContext._jvm
-        val = int(
-            jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-                raw
-            )
-        )
-        return max(val, 0)
-    except Exception:
-        pass
-    low = raw.lower()
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if low.endswith(suf + "b"):
-            low, mult = low[:-2], m
-            break
-        if low.endswith(suf):
-            low, mult = low[:-1], m
-            break
-    try:
-        val = int(low) * mult
-    except ValueError:
-        val = 0  # unparseable: disable explicit broadcasts
-    return max(val, 0)
 
 
 def triangle_count_estimate(
@@ -764,26 +723,17 @@ def triangle_count_auto(
     which estimator produced the number.
 
     ``n_edges`` resolution mirrors the KMV auto-tier: caller-supplied
-    count wins; else parquet-footer stats — which GUARD against
-    row-expanding plans (``_stats_row_count`` returns None when the
-    analyzed plan contains a Join/Generate/Expand node, because a
-    join-derived edge frame's footers measure the SOURCE table and
-    would under-gate by decades in the expensive direction); else the
-    bounded probe (``limit(10⁷+1).count()`` — proves only E > 10⁷,
-    first sampled tier). Registered derived-graph entries pass
-    ``n_edges`` (an O(scan) combinatorial bound) so neither fallback
-    runs. The policy input may be a RAW (pre-distinct) pair bound —
-    an upper bound on |E|, which only ever picks a more-sampled tier
-    (the conservative direction for work).
+    count wins; else ``catalog.row_bound(edges, 10**7)`` (footers,
+    else a probe capped at the first sampled tier). Registered
+    derived-graph entries pass ``n_edges`` (an O(scan) combinatorial
+    bound) so neither fallback runs. The policy input may be a RAW
+    (pre-distinct) pair bound — an upper bound on |E|, which only ever
+    picks a more-sampled tier (the conservative direction for work).
 
     Returns one row: (policy_keep_num, policy_keep_den,
     n_sampled_edges, n_sampled_triangles, est_triangles)."""
-    from .sketches import _stats_row_count
-
     if n_edges is None:
-        n_edges = _stats_row_count(edges)
-    if n_edges is None:
-        n_edges = edges.limit(10_000_001).count()
+        n_edges = row_bound(edges, 10**7)
     keep_num, keep_den = doulion_keep_policy(n_edges)
     if max_degree_bound is None:
         # a node's degree cannot exceed the edge count: the resolved
@@ -1189,7 +1139,7 @@ def bounded_bfs(
         ns.schema["n"].dataType,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
     )
-    bcast_frontier = numeric_keys and 0 <= n_nodes * 24 <= _broadcast_threshold(
+    bcast_frontier = numeric_keys and 0 <= n_nodes * 24 <= broadcast_threshold(
         edges.sparkSession
     )
     if not bcast_frontier:

@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens, widen_narrow_input
+from ..catalog import widen_input
+from .text import tokens
 
 
 def term_doc_tf(
@@ -38,7 +39,7 @@ def term_doc_tf(
     """(id, token, tf) term frequencies — explode + count, the one
     corpus-scale shuffle both operators below share."""
     return (
-        widen_narrow_input(df, id_col)
+        widen_input(df, id_col)
         .select(
             F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("token")
         )
@@ -191,7 +192,7 @@ def bigram_logprob_scores(
     """
     from .dedup import _bind_once
 
-    df = widen_narrow_input(df, id_col)
+    df = widen_input(df, id_col)
     # pairs travel as struct<t1,t2>, never a separator-joined string —
     # a token may legally contain ANY character, so no separator is safe
     bigram_arr = _bind_once(
@@ -269,7 +270,7 @@ def hashed_bigram_logprob_scores(
     from .dedup import _bind_once
     from .selection import _feature_bucket
 
-    df = widen_narrow_input(df, id_col)
+    df = widen_input(df, id_col)
     US = "\x1f"  # hash-input delimiter only: collisions just move buckets
     bigram_arr = _bind_once(
         tokens(text_col),
@@ -358,7 +359,7 @@ def doc_postings(
     incrementally maintainable: a new batch of documents contributes new
     posting rows and touches nothing existing (see
     ``streaming.windows.run_incremental_postings_sink``)."""
-    df = widen_narrow_input(df, id_col)
+    df = widen_input(df, id_col)
     occ = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(tokens(text_col)).alias("pos", "token"),
@@ -507,7 +508,7 @@ def pmi_collocations(
     """
     from .dedup import _bind_once
 
-    df = widen_narrow_input(df)
+    df = widen_input(df)
     # pairs travel as struct<t1,t2>, never a separator-joined string —
     # a token may legally contain ANY character, so no separator is safe
     bigram_arr = _bind_once(
@@ -595,7 +596,7 @@ def phrase_search(
     """
     if len(phrase) < 1:
         raise ValueError("phrase must have at least one token")
-    occ = widen_narrow_input(df, id_col).select(
+    occ = widen_input(df, id_col).select(
         F.col(id_col).alias("id"),
         F.posexplode(tokens(text_col)).alias("pos", "token"),
     ).where(F.col("token").isin(phrase))

@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens, widen_narrow_input
+from ..catalog import widen_input
+from .text import tokens
 
 
 def _feature_bucket(token: Column, n_buckets: int) -> Column:
@@ -68,7 +69,7 @@ def dsir_llr_table(
     for observed buckets (added rows are zero-count, so the totals are
     already the corpus totals).
     """
-    occ = widen_narrow_input(df).select(
+    occ = widen_input(df).select(
         target_pred.alias("is_target"),
         F.explode(tokens(text_col)).alias("token"),
     ).select("is_target", _feature_bucket(F.col("token"), n_buckets).alias("b"))
@@ -154,7 +155,7 @@ def dsir_logweights(
     Smoothing: p(b) = (cnt(b) + 1) / (total + n_buckets) on both sides,
     so empty buckets are defined and the LLR is finite everywhere.
     """
-    occ = widen_narrow_input(df, id_col).select(
+    occ = widen_input(df, id_col).select(
         F.col(id_col).alias("id"),
         target_pred.alias("is_target"),
         F.explode(tokens(text_col)).alias("token"),

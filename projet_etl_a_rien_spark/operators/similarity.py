@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import widen_input
 from . import resolve_splits
 
 
@@ -162,20 +163,6 @@ def _probe_cells(q_df: DataFrame, centroids: list[list[int]], probes: int) -> Da
     )
 
 
-def _widen(cached_src: DataFrame, base: DataFrame, *cols: str) -> DataFrame:
-    """Widen a to-be-cached fit table ONLY when the source is narrower
-    than the session's cores: at fixture scale the source is often ONE
-    parquet file, so every Lloyd/encode job over the cached quantized
-    table runs on one core (the r5 parallelism audit flagged the whole
-    PQ/IVF family SERIAL for exactly this). When the input is already
-    at least cores-wide — the production case — no repartition happens
-    at all: forcing one would add a full corpus shuffle for nothing."""
-    cores = base.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() >= cores:
-        return cached_src
-    return cached_src.repartition(cores, *cols)
-
-
 def _round_half_away(x: float) -> int:
     # Spark ROUND / DuckDB round() semantics (half away from zero);
     # Python's built-in round is banker's and would diverge on exact .5
@@ -214,7 +201,7 @@ def kmeans_fit(
     q_all = df.select(
         F.col(id_col).alias("id"), quantize(vec_col, scale).alias("q")
     )
-    cached = _widen(q_all, df, "id").persist()
+    cached = widen_input(q_all, "id").persist()
     try:
         centroids = _fit_centroids(cached, k, iters)
     finally:
@@ -280,7 +267,7 @@ def kmeans_index(
     q_all = df.select(
         F.col(id_col).alias("id"), quantize(vec_col, scale).alias("q")
     )
-    cached = _widen(q_all, df, "id").persist()
+    cached = widen_input(q_all, "id").persist()
     try:
         centroids = _fit_centroids(cached, k, iters)
         assign = (
@@ -1025,7 +1012,7 @@ def pq_fit_encode(
             )
         ).alias("x"),
     ).select("id", F.col("x.s").alias("s"), F.col("x.q").alias("q"))
-    long = _widen(long, df, "s", "id").persist()
+    long = widen_input(long, "s", "id").persist()
     try:
         w = Window.partitionBy("s").orderBy("id")
         seed_rows = (
@@ -1256,7 +1243,7 @@ def _ivfadc_fused_fit(
             )
         ).alias("x"),
     ).select("id", F.col("x.s").alias("s"), F.col("x.q").alias("q"))
-    long = _widen(long, df, "s", "id").persist()
+    long = widen_input(long, "s", "id").persist()
     try:
         w = Window.partitionBy("s").orderBy("id")
         kmax = max(n_cells, k_sub)

@@ -32,8 +32,8 @@ from fractions import Fraction
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import row_bound, widen_input
 from .compaction import compact_sink, fold_inputs, write_partial
-from .text import widen_narrow_input
 
 
 def _bucket(j, token, width: int):
@@ -68,7 +68,7 @@ def token_cms(
     O(tasks · d · w), independent of corpus size.
     """
     toks = (
-        widen_narrow_input(df)
+        widen_input(df)
         .select(F.explode(F.split(F.col(text_col), " ")).alias("t"))
         .where(F.col("t") != "")
     )
@@ -339,12 +339,6 @@ KMV_K = 64  # bottom-k size; relative error ~ 1/sqrt(k-2) ~ 13%
 KMV_BITS = 48  # hash width (12 md5 hex digits)
 KMV_FULL = 1 << KMV_BITS  # theta for a sketch that saw < k distinct
 
-# Bounded row probe for the auto-tier: reading this many rows decides
-# "small enough to build ungated" without a full count of a 100 TB
-# table (LocalLimit stops the scan at the threshold).
-KMV_PROBE_ROWS = 10_000_000
-
-
 def kmv_keep_policy(n_rows: int) -> "int | Fraction | None":
     """Recommended ``keep_ppm`` gate as a function of input row count —
     THE 100 TB knob for KMV builds, mirroring ``doulion_keep_policy``
@@ -407,105 +401,17 @@ def kmv_keep_policy(n_rows: int) -> "int | Fraction | None":
     return ppm
 
 
-def _stats_row_count(df: DataFrame) -> int | None:
-    """O(metadata) row count from parquet footers: sum ``num_rows``
-    over the plan's input files — no Spark job, no scan; a 100 TB
-    table answers from footer metadata alone. Returns None when the
-    plan is not file-backed (streaming batches, in-memory frames) or
-    any input is not parquet, so the caller can fall back.
-
-    The footer count is the INPUT-FILE cardinality — an UPPER bound
-    when the frame filters rows (filters only shrink n, and a larger n
-    picks a tighter gate, the conservative direction for state). For
-    plans that can EXPAND rows (joins, explode/posexplode) the footer
-    count under-counts — in the DANGEROUS direction for a sizing
-    policy (a join-derived edge frame could under-gate by decades) —
-    so this returns None whenever the analyzed plan contains a Join /
-    Generate / Expand / Union node and the caller falls back to the
-    bounded probe (or passes ``n_rows``, as the registered
-    derived-frame callers all do). Union is in the list because
-    ``inputFiles()`` DEDUPLICATES paths: a union whose branches read
-    the same file (df.union(df), or two filters of one table) has
-    true cardinality up to branches× the deduplicated footer sum —
-    under-counting in the same dangerous direction as a join.
-
-    Footers are read in a thread pool (metadata I/O releases the GIL;
-    a 10⁴-file table costs one parallel metadata sweep, not 10⁴
-    sequential opens)."""
-    try:
-        import re
-
-        plan = df._jdf.queryExecution().analyzed().toString()
-        # match expansion operators at plan-NODE-HEAD position only
-        # (after the tree-drawing prefix): the r12 substring check
-        # false-positived on identifiers like `SubqueryAlias Joined`
-        # or a column named Union#3, which appear mid-line — only a
-        # node head starts a line after [-+: !*( ] tree characters.
-        # ``\w*`` before the group admits *-SUFFIXED node heads
-        # (LateralJoin, AsOfJoin — 'Lateral' is letters, which the
-        # tree-prefix class can't consume; without it a lateralJoin
-        # plan fell through to the footer count, under-gating a
-        # row-EXPANDING plan — r13 ADVICE #1), while ``\b`` still
-        # rejects identifiers like `Joined` (the token must END with
-        # an expansion-node name, and mid-line names stay unreachable
-        # because letters can't be skipped by the prefix class)
-        if re.search(
-            r"(?m)^[\s:+\-!*(]*\w*(Join|Generate|Expand|Union)\b", plan
-        ):
-            return None
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
-        return None  # contract: degrade to the bounded probe, never raise
-
-    paths = []
-    for uri in files:
-        path = uri[5:] if uri.startswith("file:") else uri
-        if "://" in path or not path.endswith(".parquet"):
-            return None  # non-local or non-parquet input: probe instead
-        paths.append(path)
-
-    def _num_rows(p: str) -> int:
-        return pq.ParquetFile(p).metadata.num_rows
-
-    try:
-        if len(paths) == 1:
-            return _num_rows(paths[0])
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, len(paths))) as ex:
-            return sum(ex.map(_num_rows, paths))
-    except Exception:
-        return None
-
-
 def _resolve_keep_ppm(
     df: DataFrame, keep_ppm, n_rows: int | None
 ) -> int | None:
     """Resolve the build gate: an explicit int/None wins; ``"auto"``
     (the default) applies :func:`kmv_keep_policy` to ``n_rows`` when
-    the caller knows it, else to the parquet-footer row count of the
-    plan's input files (:func:`_stats_row_count` — O(metadata), no
-    scan, reaches EVERY tier: a 10¹²-row table resolves straight to
-    its deep-ppm tier without the caller passing ``n_rows``; r11
-    verdict task #3), else to a BOUNDED row probe
-    (``limit(KMV_PROBE_ROWS + 1).count()`` — reads at most one row
-    past the first tier boundary, never a full scan; the remaining
-    fallback for non-file-backed frames only). A probe that hits the
-    cap proves only n > 10⁷ (first gated tier); row-EXPANDING plans
-    (explode) under-count through footers, so those callers pass
-    ``n_rows``."""
+    the caller knows it, else to ``catalog.row_bound(df, 10**7)``
+    (footers, else a probe capped at the first gated tier)."""
     if keep_ppm != "auto":
         return keep_ppm
     if n_rows is None:
-        n_rows = _stats_row_count(df)
-    if n_rows is None:
-        n_rows = df.limit(KMV_PROBE_ROWS + 1).count()
+        n_rows = row_bound(df, 10**7)
     return kmv_keep_policy(n_rows)
 
 

@@ -32,22 +32,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to", "in")
 
 
-def widen_narrow_input(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition ONLY when the input is narrower than the session's
-    cores — the fixture-scale guard the r5/r6 parallelism audits exist
-    for: a one-file parquet scan feeds explode-heavy token pipelines one
-    task, and AQE's BYTE-based coalescing keeps every downstream shuffle
-    at width 1 (compute-heavy, byte-light). Keyed repartition so the
-    layout stays deterministic. At production width (input >= cores)
-    this is a no-op — forcing a shuffle there would cost a full corpus
-    pass for nothing. Cf. ``similarity._widen`` for the cached-fit
-    variant of the same rule."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
-        return df
-    return df.repartition(cores, *cols) if cols else df.repartition(cores)
-
-
 def tokens(col: Column | str) -> Column:
     """Whitespace tokens (single-space split)."""
     c = F.col(col) if isinstance(col, str) else col

@@ -2940,7 +2940,6 @@ FROM seg GROUP BY doc_id, chunk_idx
     "shuffle (operators/text.py:cdc_chunks).",
 )
 def q_doc_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
     from .operators.text import cdc_chunks
 
     return cdc_chunks(

@@ -1508,8 +1508,6 @@ GROUP BY t.id
     "the dedup inverted index it can share.",
 )
 def q_doc_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
-
     d = widen_input(load_table(spark, sf_dir, "documents"))
     base = d.select(
         F.col("doc_id").alias("id"),
@@ -1602,8 +1600,6 @@ FROM spans""",
     "hash-keyed aggregate, one id-keyed window; no suffix array.",
 )
 def q_doc_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
-
     return dedup.exact_substr_spans(
         widen_input(documents_with_dups(spark, sf_dir)), k=EXSUB_K
     )
@@ -1635,8 +1631,6 @@ GROUP BY t.id""",
     "equality join on (id, pos) — never a range join.",
 )
 def q_corpus_exact_substr_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
-
     return dedup.exact_substr_rewrite(
         widen_input(documents_with_dups(spark, sf_dir)), k=EXSUB_K
     )
@@ -1710,8 +1704,6 @@ GROUP BY id
     "when the benchmark side is small enough.",
 )
 def q_ngram_overlap_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
-
     corpus = widen_input(documents_with_dups(spark, sf_dir))
     return dedup.ngram_contamination(
         corpus.where(F.col("doc_id") < 1_000_000),
@@ -1885,9 +1877,7 @@ JOIN (
 def q_embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import similarity
 
-    from .operators.text import widen_narrow_input
-
-    emb = widen_narrow_input(load_table(spark, sf_dir, "embeddings"), "vec_id")
+    emb = widen_input(load_table(spark, sf_dir, "embeddings"), "vec_id")
     exact = similarity.cosine_topk(emb, query_id=7, k=10).select("vec_id")
     out = None
     for d in MATRYOSHKA_DIMS:

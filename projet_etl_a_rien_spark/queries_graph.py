@@ -3,19 +3,19 @@
 Weighted PageRank over event transitions, market-basket lift, and the
 co-purchase graph family — exact and DOULION-sampled triangle counts
 with the auto tier, k-core, k-truss, bounded BFS and bounded
-Bellman-Ford. The co-purchase edge derivation and its degree
-certificate (``_copurchase_edges``, ``_copurchase_edge_pairs_canonical``,
-``_copurchase_degree_bound``) are shared by the whole family.
+Bellman-Ford. The co-purchase edge derivation (``_copurchase_edges``,
+``_copurchase_edge_pairs_canonical``) is shared by the whole family,
+and so is its degree certificate: the part table's footer row count,
+``catalog.table_row_bound(spark, sf_dir, "part")`` (degree < |parts|).
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .catalog import load_table
+from .catalog import load_table, table_row_bound
 from .operators import graph
 from .queries import register
 
@@ -208,7 +208,7 @@ def q_parts_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _copurchase_edge_pairs_canonical(spark, sf_dir)
     return graph.triangle_counts(
-        edges, max_degree_bound=_copurchase_degree_bound(spark, sf_dir)
+        edges, max_degree_bound=table_row_bound(spark, sf_dir, "part")
     ).withColumnRenamed("node", "part_id")
 
 
@@ -265,7 +265,7 @@ def q_parts_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _copurchase_edge_pairs_canonical(spark, sf_dir)
     return graph.kcore(
         edges, k=KCORE_K, max_iter=KCORE_ITERS,
-        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+        max_degree_bound=table_row_bound(spark, sf_dir, "part"),
     ).withColumnRenamed(
         "node", "part_id"
     )
@@ -400,24 +400,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _copurchase_degree_bound(
-    spark: SparkSession, sf_dir: str
-) -> int | None:
-    """O(metadata) hub certificate for the co-purchase graph consumers
-    (graph._full_adjacency's r15 hub guard): a part's degree is
-    < |distinct parts|, bounded by the part table's parquet-footer row
-    count — no Spark job. None (footers unavailable, or the part table
-    absent or unreadable) makes the operator fall back to its measured
-    degree pass."""
-    from .operators.sketches import _stats_row_count
-
-    try:
-        part = load_table(spark, sf_dir, "part")
-    except AnalysisException:
-        return None
-    return _stats_row_count(part)
-
-
 def _copurchase_edge_pairs_canonical(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -496,7 +478,7 @@ def q_parts_triangle_estimate(
         keep_num=TRI_KEEP_NUM,
         keep_den=TRI_KEEP_DEN,
         salt=TRI_SALT,
-        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+        max_degree_bound=table_row_bound(spark, sf_dir, "part"),
     )
 
 
@@ -564,7 +546,7 @@ def q_parts_triangle_estimate_p10(
         keep_num=TRI10_KEEP_NUM,
         keep_den=TRI10_KEEP_DEN,
         salt=TRI10_SALT,
-        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+        max_degree_bound=table_row_bound(spark, sf_dir, "part"),
     )
 
 
@@ -634,7 +616,7 @@ def q_parts_copurchase_bfs_3hop(
         _copurchase_edge_pairs_canonical(spark, sf_dir),
         seeds,
         max_hops=BFS_HOPS,
-        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+        max_degree_bound=table_row_bound(spark, sf_dir, "part"),
     ).select(
         F.col("node").alias("part_id"), F.col("dist").cast("long").alias("dist")
     )
@@ -839,5 +821,5 @@ def q_parts_triangle_counts_auto(
     )
     return graph.triangle_count_auto(
         edges, n_edges=n_pairs, salt=TRI_SALT,
-        max_degree_bound=_copurchase_degree_bound(spark, sf_dir),
+        max_degree_bound=table_row_bound(spark, sf_dir, "part"),
     )

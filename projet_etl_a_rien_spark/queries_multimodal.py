@@ -113,8 +113,6 @@ def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.png import png_encode, register_builtin_png_codecs
 
-    from .catalog import widen_input
-
     register_builtin_png_codecs()
     width, stride = 32, 32 * 3
     # widen_input: the Arrow codec stages are per-row Python CPU work,
@@ -217,8 +215,6 @@ def q_multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import multimodal
     from .operators.wav import register_builtin_wav_codec, wav_encode
 
-    from .catalog import widen_input
-
     register_builtin_wav_codec()
     payloads = widen_input(
         multimodal.with_binary_payload(load_table(spark, sf_dir, "documents")).where(
@@ -301,8 +297,6 @@ def q_multimodal_png_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from .operators import multimodal
     from .operators.png import png_decode, png_encode, register_builtin_png_codecs
-
-    from .catalog import widen_input
 
     register_builtin_png_codecs()
     width, stride = 32, 96
@@ -413,12 +407,11 @@ FROM pw
 )
 def q_audio_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import multimodal
-    from .operators.text import widen_narrow_input
     from .operators.wav import spectral_features
 
     return spectral_features(
         multimodal.with_binary_payload(
-            widen_narrow_input(load_table(spark, sf_dir, "documents"), "doc_id")
+            widen_input(load_table(spark, sf_dir, "documents"), "doc_id")
         )
     )
 
@@ -500,7 +493,6 @@ FROM agg a JOIN dom d ON a.doc_id = d.doc_id
 def q_image_dct_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from .catalog import widen_input
     from .operators import multimodal
     from .operators.png import (
         DCT_N,
@@ -702,7 +694,6 @@ def q_multimodal_phash_near_dup_pairs(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from .catalog import widen_input
     from .fixtures import documents_with_dups
     from .operators import multimodal
     from .operators.png import png_decode, png_encode

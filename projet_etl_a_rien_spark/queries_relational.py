@@ -2223,8 +2223,6 @@ def q_airports_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.airports import clean_coords, parse_json_messages
     from .operators.joins import grid_proximity_join
 
-    from .catalog import widen_input
-
     clean = clean_coords(
         parse_json_messages(widen_input(airports_messages(spark, sf_dir)))
     )
@@ -2802,10 +2800,8 @@ FROM agg
 def q_customer_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from .operators.text import widen_narrow_input
-
     rev = (
-        widen_narrow_input(load_table(spark, sf_dir, "orders"), "o_custkey")
+        widen_input(load_table(spark, sf_dir, "orders"), "o_custkey")
         .groupBy(F.col("o_custkey").alias("c"))
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(

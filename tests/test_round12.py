@@ -11,12 +11,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from projet_etl_a_rien_spark.catalog import row_bound
 from projet_etl_a_rien_spark.operators import compaction as _C
 from projet_etl_a_rien_spark.operators import sketches as _S
 
 
 # ---------------------------------------------------------------------------
-# _stats_row_count — O(metadata) footer counting (verdict ask #3)
+# catalog.row_bound — O(metadata) footer counting (verdict ask #3)
 # ---------------------------------------------------------------------------
 
 
@@ -24,15 +25,15 @@ def test_stats_row_count_reads_parquet_footers(spark, tmp_path):
     p = str(tmp_path / "t.parquet")
     spark.range(1234).write.parquet(p)
     df = spark.read.parquet(p)
-    assert _S._stats_row_count(df) == 1234
+    assert row_bound(df) == 1234
     # transformations keep the file lineage: the count is the INPUT
     # cardinality (upper bound under filters — documented)
-    assert _S._stats_row_count(df.where("id < 10").select("id")) == 1234
+    assert row_bound(df.where("id < 10").select("id")) == 1234
 
 
 def test_stats_row_count_none_for_memory_frames(spark):
     df = spark.createDataFrame([("a",)], "v string")
-    assert _S._stats_row_count(df) is None
+    assert row_bound(df) is None
 
 
 def test_resolve_auto_uses_stats_without_probe(monkeypatch):
@@ -45,13 +46,13 @@ def test_resolve_auto_uses_stats_without_probe(monkeypatch):
         def __getattr__(self, name):  # limit()/count() forbidden
             raise AssertionError(f"resolver touched df.{name}")
 
-    monkeypatch.setattr(_S, "_stats_row_count", lambda df: 10**12)
+    monkeypatch.setattr(_S, "row_bound", lambda df, cap: 10**12)
     assert _S._resolve_keep_ppm(_Sentinel(), "auto", None) == 2
-    monkeypatch.setattr(_S, "_stats_row_count", lambda df: 5 * 10**9)
+    monkeypatch.setattr(_S, "row_bound", lambda df, cap: 5 * 10**9)
     assert _S._resolve_keep_ppm(_Sentinel(), "auto", None) == 2_000
     # caller-supplied n_rows still wins over stats
     monkeypatch.setattr(
-        _S, "_stats_row_count", lambda df: pytest.fail("stats consulted")
+        _S, "row_bound", lambda *a: pytest.fail("stats consulted")
     )
     assert _S._resolve_keep_ppm(_Sentinel(), "auto", 20_000_000) == 200_000
 
@@ -382,11 +383,11 @@ def test_stats_row_count_guards_row_expanding_plans(spark, tmp_path):
         "id AS k", "cast(id AS string) AS v"
     ).write.parquet(p)
     df = spark.read.parquet(p)
-    assert _S._stats_row_count(df) == 50
+    assert row_bound(df) == 50
     joined = df.alias("a").join(df.alias("b"), "k")
-    assert _S._stats_row_count(joined) is None
+    assert row_bound(joined) is None
     exploded = df.select(F.explode(F.array("v", "v")).alias("v"))
-    assert _S._stats_row_count(exploded) is None
+    assert row_bound(exploded) is None
 
 
 def test_triangle_auto_empty_input_policy_parity(spark, tmp_path):
@@ -426,7 +427,7 @@ def test_resolve_auto_footer_path_on_real_fixture(spark, sf_dir):
     from projet_etl_a_rien_spark.catalog import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    n = _S._stats_row_count(ev)
+    n = row_bound(ev)
     assert n is not None and n > 0
     assert _S._resolve_keep_ppm(ev, "auto", None) == _S.kmv_keep_policy(n)
 
@@ -564,10 +565,10 @@ def test_stats_row_count_guards_union_plans(spark, tmp_path):
     p = str(tmp_path / "u.parquet")
     spark.range(60).selectExpr("id AS k").write.parquet(p)
     df = spark.read.parquet(p)
-    assert _S._stats_row_count(df) == 60
+    assert row_bound(df) == 60
     both = df.where("k % 2 = 0").unionByName(df.where("k % 2 = 1"))
-    assert _S._stats_row_count(both) is None
-    assert _S._stats_row_count(df.union(df)) is None
+    assert row_bound(both) is None
+    assert row_bound(df.union(df)) is None
 
 
 def test_bench_prior_round_is_scale_matched():

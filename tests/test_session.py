@@ -1,17 +1,26 @@
 """Session set-up and table loading: the shuffle width, the conf errors that
-must surface, the generated-code cache and the parquet schema memo."""
+must surface, the generated-code cache, the parquet schema memo, and input
+sizing, which only ``catalog.py`` does."""
 
 from __future__ import annotations
 
+import ast
 import itertools
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException, IllegalArgumentException
+from pyspark.sql import functions as F
 
 from projet_etl_a_rien_spark import session
-from projet_etl_a_rien_spark.catalog import load_table
+from projet_etl_a_rien_spark.catalog import (
+    load_table,
+    row_bound,
+    table_row_bound,
+    widen_input,
+)
 
 
 _GROUPS = itertools.count()
@@ -95,3 +104,143 @@ def test_warm_rerun_compiles_no_code(spark, sf_dir):
     before = metrics.METRIC_COMPILATION_TIME().getCount()
     q1.fn(spark, sf_dir).collect()
     assert metrics.METRIC_COMPILATION_TIME().getCount() == before
+
+
+# ---------------------------------------------------------------------------
+# Input sizing: catalog.row_bound / table_row_bound / widen_input
+# ---------------------------------------------------------------------------
+
+
+def _table_of(spark, tmp_path, n: int):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": list(range(n)), "v": [str(i) for i in range(n)]}), path)
+    return spark.read.parquet(path)
+
+
+def test_row_bound_answers_from_footers_with_no_job(spark, tmp_path):
+    df = _table_of(spark, tmp_path, 50)
+    got = []
+    assert _jobs_of(spark, lambda: got.append(row_bound(df.where("k < 5")))) == 0
+    assert _jobs_of(spark, lambda: got.append(row_bound(df, probe_cap=10))) == 0
+    # the footer count is the input cardinality, never capped
+    assert got == [50, 50]
+
+
+_EXPANDING = {
+    "join": lambda df: df.alias("a").join(df.alias("b"), "k"),
+    "explode": lambda df: df.select(F.explode(F.array("v", "v")).alias("v")),
+    "union": lambda df: df.union(df),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_EXPANDING))
+def test_row_bound_probes_expanding_plans_once(spark, tmp_path, monkeypatch, kind):
+    frame = _EXPANDING[kind](_table_of(spark, tmp_path, 50))
+    n, cap = frame.count(), 60
+    counts = []
+    count = type(frame).count
+
+    def _counting(self):
+        counts.append(self)
+        return count(self)
+
+    monkeypatch.setattr(type(frame), "count", _counting)
+    assert row_bound(frame, cap) == min(n, cap + 1)
+    assert len(counts) == 1
+
+
+@pytest.mark.parametrize("kind", sorted(_EXPANDING))
+def test_row_bound_without_cap_is_none_and_runs_no_job(spark, tmp_path, kind):
+    frame = _EXPANDING[kind](_table_of(spark, tmp_path, 50))
+    got = []
+    assert _jobs_of(spark, lambda: got.append(row_bound(frame))) == 0
+    assert got == [None]
+
+
+def test_table_row_bound_missing_is_none_and_empty_is_zero(spark, tmp_path):
+    assert table_row_bound(spark, str(tmp_path), "absent") is None
+    pq.write_table(pa.table({"k": pa.array([], pa.int64())}), tmp_path / "empty.parquet")
+    assert table_row_bound(spark, str(tmp_path), "empty") == 0
+
+
+@pytest.mark.parametrize(
+    "project",
+    [
+        lambda df: df.select("k", (F.col("k") * 2).alias("id")),
+        lambda df: df.select(F.col("k").alias("id"), F.explode(F.array("v", "v")).alias("s")),
+    ],
+    ids=["projection", "explode"],
+)
+def test_widen_input_sizes_a_projection_like_its_source(spark, tmp_path, project):
+    """A narrow projection has its source's partitions, so measuring it
+    widens exactly as measuring the source did."""
+    df = _table_of(spark, tmp_path, 40)
+    proj = project(df)
+    cores = spark.sparkContext.defaultParallelism
+    by_source = proj if df.rdd.getNumPartitions() >= cores else proj.repartition(cores, "id")
+    assert widen_input(proj, "id").rdd.getNumPartitions() == by_source.rdd.getNumPartitions()
+
+
+PKG = Path(__file__).resolve().parent.parent / "projet_etl_a_rien_spark"
+SIZING_CALLS = {"inputFiles", "getNumPartitions"}
+BROADCAST_CONF = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def _sizing_sites(tree):
+    """(line, what) for every input-sizing construct in a module's AST.
+    A conf literal passed to a ``.config(...)`` call (the session
+    builder) sets the threshold rather than reading it."""
+    builder_args = {
+        id(a)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "config"
+        for a in n.args
+    }
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+            inner = n.func.value
+            if (
+                n.func.attr == "count"
+                and isinstance(inner, ast.Call)
+                and isinstance(inner.func, ast.Attribute)
+                and inner.func.attr == "limit"
+            ):
+                yield n.lineno, "limit(...).count()"
+            if n.func.attr in SIZING_CALLS:
+                yield n.lineno, n.func.attr
+        elif isinstance(n, ast.Import):
+            if any(a.name.startswith("pyarrow.parquet") for a in n.names):
+                yield n.lineno, "import pyarrow.parquet"
+        elif isinstance(n, ast.ImportFrom):
+            mod = n.module or ""
+            if mod.startswith("pyarrow.parquet") or (
+                mod == "pyarrow" and any(a.name == "parquet" for a in n.names)
+            ):
+                yield n.lineno, "import pyarrow.parquet"
+            if mod.endswith("catalog") and any(a.name.startswith("_") for a in n.names):
+                yield n.lineno, "private catalog import"
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and BROADCAST_CONF in n.value
+            and id(n) not in builder_args
+        ):
+            yield n.lineno, BROADCAST_CONF
+
+
+def test_only_catalog_sizes_inputs():
+    """Footer counts, bounded ``limit(k).count()`` probes, partition counts
+    and the broadcast threshold are read in catalog.py alone, so one policy
+    sizes every input."""
+    offenders = [
+        (str(p.relative_to(PKG)), line, what)
+        for p in sorted(PKG.rglob("*.py"))
+        if p.relative_to(PKG) != Path("catalog.py")
+        for line, what in _sizing_sites(ast.parse(p.read_text()))
+    ]
+    assert not offenders, offenders
+    # the guard sees what it is meant to catch
+    probe = "edges.limit(10).count()\nimport pyarrow.parquet as pq\ndf.rdd.getNumPartitions()\n"
+    assert len(list(_sizing_sites(ast.parse(probe)))) == 3
