@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from projet_etl_a_rien_spark.observability import profile
 from projet_etl_a_rien_spark.queries import REGISTRY
 from projet_etl_a_rien_spark.session import get_spark
 
@@ -268,9 +269,10 @@ def _load_r1_bar() -> dict[str, float]:
     rule) still triggers a solo re-time (r12 verdict ask #5). The r1
     bar was recorded at sf0.1; callers at any other scale skip it.
 
-    BASELINE_LOCAL_r14.json (tools/baseline_heavy.py) extends the bar
-    to the graph/ANN/triangle lines the r09 file predates (r13 verdict
-    ask #5): its ``bar_sec`` is the r12-era same-day worktree minimum,
+    BASELINE_LOCAL_r14.json extends the bar to the graph/ANN/triangle
+    lines the r09 file predates (r13 verdict ask #5): its ``bar_sec`` is
+    the r12-era same-day worktree minimum (its ``methodology`` records
+    how it was measured),
     merged UNDER the r09 rows — on overlap the r09 bar wins, because an
     older era is a longer creep-detection window."""
     here = os.path.dirname(os.path.abspath(__file__))
@@ -333,23 +335,19 @@ def main() -> None:
     # noise comes in sustained multi-second phases, so a query's two
     # executions are spaced ~a sweep apart to decorrelate from any one
     # phase.
+    # profile() clears the cache after each run, so caches never
+    # accumulate and the second run re-executes the full plan; each
+    # name keeps the profile of its fastest run.
     runs = 2
-    best: dict[str, float] = {}
+    profiles: dict[str, dict] = {}
     for _ in range(runs):
         for name in HEADLINE + PIPELINES:
-            q = REGISTRY.get(name)
-            if q is None:
+            if name not in REGISTRY:
                 continue
-            t0 = time.perf_counter()
-            df = q.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - t0
-            best[name] = min(best.get(name, elapsed), elapsed)
-            # Operators that persist intermediates (minhash/simhash/
-            # kmeans) document that the caller owns cache cleanup —
-            # release between runs so caches never accumulate and the
-            # second run re-executes the full plan.
-            spark.catalog.clearCache()
+            p = profile(spark, name, sf_dir)
+            if name not in profiles or p["wall_s"] < profiles[name]["wall_s"]:
+                profiles[name] = p
+    best = {n: p["wall_s"] for n, p in profiles.items()}
     timings = {n: round(t, 4) for n, t in best.items() if n in set(HEADLINE)}
     pipe_timings = {n: round(t, 4) for n, t in best.items() if n in set(PIPELINES)}
     total = round(sum(timings.values()), 4)
@@ -383,15 +381,7 @@ def main() -> None:
         spark = get_spark("bench-solo")
         spark.range(1_000).selectExpr("sum(id)").collect()  # rewarm
         for name in movers:
-            q = REGISTRY.get(name)
-            solo_best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                q.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                solo_best = min(solo_best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
+            solo_best = min(profile(spark, name, sf_dir)["wall_s"] for _ in range(3))
             solo[name] = {
                 "recorded": round(best[name], 4),
                 "solo": round(solo_best, 4),
@@ -485,6 +475,10 @@ def main() -> None:
             if n in r1_bar
         },
         "methodology": methodology,
+        # observability.profile of each name's fastest sweep run: the
+        # build/action job split, stages, task width, executor time,
+        # shuffle/spill bytes and the driver time between jobs
+        "profile": profiles,
     }
     try:
         with open(os.path.join(here, detail_name), "w") as f:

@@ -8,17 +8,23 @@ the equivalent front door for every registered query:
     python -m projet_etl_a_rien_spark run <query> [--sf-dir DIR] [--limit N]
     python -m projet_etl_a_rien_spark sql "SELECT ..." [--sf-dir DIR]
     python -m projet_etl_a_rien_spark explain <query> [--sf-dir DIR]
+    python -m projet_etl_a_rien_spark profile <query...> [--sf-dir DIR]
 
 ``run`` executes one registry entry and shows the result (R1 parity —
 the reference's jobs end in ``.show()``); ``sql`` registers the fixture
 tables as temp views and runs ad-hoc SQL against them; ``explain``
 prints the formatted physical plan, the thing to read before running
-anything at scale.
+anything at scale; ``profile`` runs each query three times in one fresh
+session and prints one JSON line per query with the fastest run's
+:func:`observability.profile` record, flagged ``serial`` when it takes
+over a second yet no stage ran wider than two tasks (byte-based AQE
+coalescing can leave a compute-heavy stage on one task).
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -41,6 +47,10 @@ def main(argv: list[str] | None = None) -> int:
     exp_p = sub.add_parser("explain", help="formatted physical plan of a query")
     exp_p.add_argument("query")
     exp_p.add_argument("--sf-dir", default="/root/testdata/sf0.01")
+
+    prof_p = sub.add_parser("profile", help="where each query spends its time")
+    prof_p.add_argument("query", nargs="+")
+    prof_p.add_argument("--sf-dir", default="/root/testdata/sf0.01")
 
     args = parser.parse_args(argv)
 
@@ -66,8 +76,10 @@ def main(argv: list[str] | None = None) -> int:
             sys.stderr.close()
         return 0
 
-    if args.cmd in ("run", "explain") and args.query not in REGISTRY:
-        print(f"unknown query {args.query!r}; see `list`", file=sys.stderr)
+    query = getattr(args, "query", [])
+    unknown = [n for n in (query if isinstance(query, list) else [query]) if n not in REGISTRY]
+    if unknown:
+        print(f"unknown query {unknown[0]!r}; see `list`", file=sys.stderr)
         return 2
 
     from pyspark.sql import SparkSession
@@ -90,6 +102,14 @@ def main(argv: list[str] | None = None) -> int:
             spark.sql(args.statement).show(args.limit, truncate=False)
         elif args.cmd == "explain":
             REGISTRY[args.query].fn(spark, args.sf_dir).explain("formatted")
+        elif args.cmd == "profile":
+            from .observability import profile
+
+            for name in args.query:
+                runs = [profile(spark, name, args.sf_dir) for _ in range(3)]
+                best = min(runs, key=lambda p: p["wall_s"])
+                serial = best["wall_s"] > 1 and 0 < best["max_task_width"] <= 2
+                print(json.dumps({"query": name, **best, "serial": serial}), flush=True)
         return 0
     finally:
         if not preexisting:

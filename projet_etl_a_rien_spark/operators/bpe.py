@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import row_bound, widen_input
+from ..catalog import widen_input
 from .compaction import compact_sink, fold_inputs, write_partial
 from .text import tokens
 
@@ -233,24 +233,20 @@ def _learn_merges(
     ``engine``: ``"driver"`` collects the (cnt, syms) vocabulary once
     and loops in Python (:func:`_learn_merges_driver` — 1 job total
     instead of 2 per rank; right whenever the vocab is bounded),
-    ``"dist"`` keeps the distributed per-rank loop, ``"auto"`` picks
-    driver up to ``DRIVER_LEARN_MAX_ROWS`` vocab rows (one probe of the
-    checkpointed table, capped there: ``catalog.row_bound``)."""
-    seqs = seqs.localCheckpoint(eager=True)
-    if engine == "auto":
-        n = row_bound(seqs, DRIVER_LEARN_MAX_ROWS)
-        engine = "driver" if n <= DRIVER_LEARN_MAX_ROWS else "dist"
-    if engine == "driver":
-        try:
-            rows = [
-                (int(r["cnt"]), list(r["syms"]))
-                for r in seqs.select("cnt", "syms").collect()
-            ]
-        finally:
-            seqs.unpersist()
-        return _learn_merges_driver(rows, num_merges, min_pair_count)
-    if engine != "dist":
+    ``"dist"`` keeps the distributed per-rank loop, ``"auto"`` fetches
+    up to ``DRIVER_LEARN_MAX_ROWS + 1`` vocab rows in one action and
+    learns on the driver when they all fit, else distributed."""
+    if engine not in ("auto", "driver", "dist"):
         raise ValueError(f"unknown learn engine: {engine!r}")
+    if engine != "dist":
+        vocab = seqs.select("cnt", "syms")
+        if engine == "auto":
+            vocab = vocab.limit(DRIVER_LEARN_MAX_ROWS + 1)
+        rows = vocab.collect()
+        if len(rows) <= DRIVER_LEARN_MAX_ROWS or engine == "driver":
+            rows = [(int(r["cnt"]), list(r["syms"])) for r in rows]
+            return _learn_merges_driver(rows, num_merges, min_pair_count)
+    seqs = seqs.localCheckpoint(eager=True)
     merges: list[tuple[int, str, str, int]] = []
     try:
         for rank in range(1, num_merges + 1):

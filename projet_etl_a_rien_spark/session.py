@@ -75,7 +75,6 @@ def get_spark(
     app_name: str = "projet-etl-a-rien-spark",
     master: str | None = None,
     driver_memory: str = "8g",
-    ui: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a tuned SparkSession.
 
@@ -100,7 +99,8 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "true" if ui else "false")
+        # observability.profile reads the status store, which needs no UI
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
     )

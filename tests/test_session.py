@@ -1,11 +1,13 @@
 """Session set-up and table loading: the shuffle width, the conf errors that
-must surface, the generated-code cache, the parquet schema memo, and input
-sizing, which only ``catalog.py`` does."""
+must surface, the generated-code cache, the parquet schema memo, input
+sizing, which only ``catalog.py`` does, and the per-query profile, which
+only ``observability.py`` reads Spark's counters for."""
 
 from __future__ import annotations
 
 import ast
 import itertools
+import re
 from pathlib import Path
 
 import pyarrow as pa
@@ -244,3 +246,112 @@ def test_only_catalog_sizes_inputs():
     # the guard sees what it is meant to catch
     probe = "edges.limit(10).count()\nimport pyarrow.parquet as pq\ndf.rdd.getNumPartitions()\n"
     assert len(list(_sizing_sites(ast.parse(probe)))) == 3
+
+
+# ---------------------------------------------------------------------------
+# Per-query profile: observability.profile
+# ---------------------------------------------------------------------------
+
+
+def _job_groups_from(spark, first_id: int) -> dict[int, str | None]:
+    """{job id: job group} of every job with id >= ``first_id``, read from
+    the status store after the listener bus has delivered every event."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    out = {}
+    for k in range(jobs.size()):
+        j = jobs.apply(k)
+        if j.jobId() < first_id:
+            break
+        g = j.jobGroup()
+        out[j.jobId()] = g.get() if g.isDefined() else None
+    return out
+
+
+def test_profile_splits_jobs_and_wall_time(spark, sf_dir):
+    from projet_etl_a_rien_spark.observability import profile
+
+    p = profile(spark, "parts_kcore", sf_dir)
+    assert p["build_jobs"] >= 1 and p["action_jobs"] >= 1, p
+    assert p["jobs"] == p["build_jobs"] + p["action_jobs"], p
+    assert 0 <= p["driver_gap_s"] <= p["wall_s"], p
+    assert 0 <= p["build_s"] <= p["wall_s"], p
+    assert p["stages"] >= 1 and p["tasks"] >= p["stages"] and p["max_task_width"] >= 1, p
+    assert p["stream_batches"] == 0, p
+
+
+def test_profile_labels_its_jobs_and_restores_the_callers_group(spark, sf_dir):
+    from projet_etl_a_rien_spark.observability import profile
+
+    sc = spark.sparkContext
+    first = max(_job_groups_from(spark, 0), default=-1) + 1
+    sc.setJobGroup("caller", "the caller's own work")
+    try:
+        p = profile(spark, "tpch_q6_forecast_revenue", sf_dir)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "the caller's own work"
+    finally:
+        sc._jsc.clearJobGroup()
+    groups = _job_groups_from(spark, first)
+    assert groups and set(groups.values()) == {"tpch_q6_forecast_revenue"}, groups
+    assert p["jobs"] == len(groups), (p, groups)
+
+
+def test_profile_counts_stream_micro_batches_and_their_jobs(spark, sf_dir):
+    """A stream's micro-batches run under the stream's own job group;
+    the profile still counts them, and its recorder sees the batches."""
+    from projet_etl_a_rien_spark.observability import profile
+
+    first = max(_job_groups_from(spark, 0), default=-1) + 1
+    p = profile(spark, "streaming_hourly_windows", sf_dir)
+    groups = _job_groups_from(spark, first)
+    assert p["stream_batches"] >= 1, p
+    assert set(groups.values()) - {"streaming_hourly_windows"}, groups
+    assert p["jobs"] == len(groups), (p, groups)
+
+
+@pytest.mark.parametrize(
+    "name", ["doc_fim_transform", "events_zorder_values", "doc_quality_score"]
+)
+def test_projection_entries_write_no_shuffle_bytes(spark, sf_dir, name):
+    """Pure per-row projections: a shuffle byte means an exchange crept in."""
+    from projet_etl_a_rien_spark.observability import profile
+
+    p = profile(spark, name, sf_dir)
+    assert p["stages"] >= 1 and p["shuffle_write_mb"] == 0, p
+
+
+COUNTER_READERS = re.compile(r"statusStore|statusTracker|uiWebUrl|/api/v1/")
+
+
+def test_only_observability_reads_spark_counters():
+    """Job and stage counters are read in observability.py alone, so every
+    tool measures a query the same way (``perfbench/`` keeps its own copy)."""
+    root = PKG.parent
+    files = [*PKG.rglob("*.py"), *(root / "tools").glob("*.py"), root / "bench.py"]
+    offenders = [
+        (str(p.relative_to(root)), n + 1, m.group())
+        for p in sorted(files)
+        if p != PKG / "observability.py"
+        for n, line in enumerate(p.read_text().splitlines())
+        for m in COUNTER_READERS.finditer(line)
+    ]
+    assert not offenders, offenders
+    assert len(COUNTER_READERS.findall("sc.statusTracker(); f'{ui}/api/v1/x'")) == 2
+
+
+def test_learn_merges_auto_runs_only_the_vocabulary_fetch(spark, sf_dir):
+    """On the auto path the one bounded fetch of the vocabulary both
+    decides the engine and feeds the driver loop: no other action runs."""
+    from projet_etl_a_rien_spark.operators import bpe
+
+    docs = load_table(spark, sf_dir, "documents").limit(200).localCheckpoint()
+    fetch = _jobs_of(
+        spark,
+        lambda: bpe.word_symbol_table(docs)
+        .select("cnt", "syms")
+        .limit(bpe.DRIVER_LEARN_MAX_ROWS + 1)
+        .collect(),
+    )
+    assert _jobs_of(spark, lambda: bpe.learn_bpe_merges(docs, num_merges=8)) == fetch

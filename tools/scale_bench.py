@@ -47,6 +47,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from projet_etl_a_rien_spark.observability import profile
 from projet_etl_a_rien_spark.queries import REGISTRY
 from projet_etl_a_rien_spark.session import get_spark
 
@@ -297,12 +298,7 @@ def _time_pipelines(spark, sf_dir: str, runs: int = 2) -> dict[str, float]:
     for _ in range(runs):
         # whole-pipeline timings through the registered fns
         for name in ("minhash_incremental_ingest", "streaming_index_bm25_topk"):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            record(name, time.perf_counter() - t0)
-            spark.catalog.clearCache()
+            record(name, profile(spark, name, sf_dir)["wall_s"])
 
         # inverted-index ingest, decomposed: land / compact / serve
         path = tempfile.mkdtemp(prefix="sbidx_")
@@ -354,13 +350,8 @@ def time_queries(spark, sf_dir: str, runs: int = 2) -> dict[str, dict]:
     out_rows: dict[str, int] = {}
     for i in range(runs):
         for name in SPOT:
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            elapsed = time.perf_counter() - t0
+            elapsed = profile(spark, name, sf_dir)["wall_s"]
             best[name] = min(best.get(name, elapsed), elapsed)
-            spark.catalog.clearCache()
             if i == 0:
                 out_rows[name] = REGISTRY[name].fn(spark, sf_dir).count()
                 spark.catalog.clearCache()
